@@ -84,6 +84,22 @@ _SLOW_DRILLS = (
 )
 
 
+def run_slow_from_env(value: str) -> bool:
+    """``SPARK_GRAFT_RUN_SLOW`` parsed strictly: ``1``/``true``/``yes``/
+    ``on`` run the drills, unset/empty/``0``/``false``/``no``/``off``
+    skip them (case-insensitive), anything else is a usage error rather
+    than a silent guess."""
+    v = value.strip().lower()
+    if v in ("1", "true", "yes", "on"):
+        return True
+    if v in ("", "0", "false", "no", "off"):
+        return False
+    raise pytest.UsageError(
+        f"SPARK_GRAFT_RUN_SLOW={value!r}: expected 1/true/yes/on or "
+        "0/false/no/off"
+    )
+
+
 def pytest_collection_modifyitems(config, items):
     """Default-skip the ``slow`` drills (r12 verdict ask #2: the serial
     suite runs >4 h on slow containers and the external test gate times
@@ -93,7 +109,9 @@ def pytest_collection_modifyitems(config, items):
     for item in items:
         if any(p in item.nodeid for p in _SLOW_DRILLS):
             item.add_marker(pytest.mark.slow)
-    if config.getoption("--runslow") or os.environ.get("SPARK_GRAFT_RUN_SLOW"):
+    if config.getoption("--runslow") or run_slow_from_env(
+        os.environ.get("SPARK_GRAFT_RUN_SLOW", "")
+    ):
         return
     skip = pytest.mark.skip(
         reason="slow evidence drill — run with --runslow "

@@ -66,15 +66,32 @@ Equivalence across all three modes is pinned in
 curation_full, the minhash dedup pipeline, and training_release's
 curation stage) — the knob is an execution strategy, never a
 semantics change.
+
+Independent job chains: :func:`run_concurrently` submits thunks that
+share no store from one thread each and joins them all, so one chain's
+jobs fill the cores another chain leaves idle while its own thread
+builds and plans its next job. Each thread carries the caller's local properties
+(job group, scheduler pool, streaming query/batch ids) via
+``pyspark.util.inheritable_thread_target``. Results come back in
+submission order; a failure re-raises only after EVERY thunk has
+finished (the first failure in submission order, with a note for each
+later one), so a caller never returns, or moves on to a dependent
+step, while a sibling chain is still writing. The width is the number of thunks: callers pass one
+thunk per independent chain, and the scheduler interleaves their tasks.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 __all__ = [
     "CHECKPOINT_MODE_KEY",
     "checkpoint_mode",
+    "run_concurrently",
     "set_checkpoint_mode",
     "stage_boundary",
 ]
@@ -136,3 +153,32 @@ def stage_boundary(df: DataFrame, eager: bool = False, pin: bool = False) -> Dat
     if mode == "none" and not pin:
         return df
     return df.localCheckpoint(eager=eager)
+
+
+def run_concurrently(*thunks: Callable[[], object]) -> list:
+    """Run each thunk on its own thread and return their results in
+    submission order (module docstring). Every thunk runs to completion
+    before this returns or raises; if any raised, the first failure in
+    submission order is re-raised, carrying a note for each later one —
+    no failure is swallowed."""
+    if not thunks:
+        return []
+    session = SparkSession.getActiveSession()
+    # one wrap per thunk: each wrap clones the caller's properties, and
+    # a clone shared between threads would let one chain's execution id
+    # or job description leak into its siblings
+    targets = [
+        inheritable_thread_target(session)(t)
+        if session is not None
+        else inheritable_thread_target(t)
+        for t in thunks
+    ]
+    # leaving the block joins every thread, failed or not
+    with ThreadPoolExecutor(max_workers=len(targets)) as pool:
+        futures = [pool.submit(t) for t in targets]
+    failed = [f.exception() for f in futures if f.exception() is not None]
+    if failed:
+        for later in failed[1:]:
+            failed[0].add_note(f"a concurrent chain also failed: {later!r}")
+        raise failed[0]
+    return [f.result() for f in futures]

@@ -27,7 +27,7 @@ import functools
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from connect_server_spark.execution import stage_boundary
+from connect_server_spark.execution import run_concurrently, stage_boundary
 
 from connect_server_spark.registry import register
 from connect_server_spark.tables import load_table, spread_scan
@@ -162,13 +162,7 @@ def curation_full(
         # them from two driver threads lets the later job's tasks
         # back-fill the earlier one's stragglers instead of serializing
         # two full action chains.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            lm_fut = pool.submit(_lm_part)
-            bloom_fut = pool.submit(_bloom_part)
-            scores, med = lm_fut.result()
-            bloom = bloom_fut.result()
+        (scores, med), bloom = run_concurrently(_lm_part, _bloom_part)
     else:
         scores, med = _lm_part()
         bloom = _bloom_part()

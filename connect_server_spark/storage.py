@@ -17,6 +17,8 @@ giant straggler.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -79,7 +81,12 @@ def _bucket_table_name(path: str) -> str:
 # validated against the catalog this session — see
 # :func:`ensure_bucketed_table`. Keyed weakly by the JVM session object
 # id so a stopped/recreated session never inherits stale validations.
+# Concurrent chains of one session share a set, so every read and
+# write holds _validated_specs_lock: a drop's filter-by-table pass
+# iterating while another thread adds raises "Set changed size during
+# iteration". The lock never spans a Spark call.
 _validated_specs: dict = {}
+_validated_specs_lock = threading.Lock()
 
 # ((session-key, table) → directory signature) at the last
 # :func:`read_bucketed` refresh — the skip-refresh-when-unchanged memo.
@@ -97,8 +104,12 @@ def _drop_bucketed_table(spark: SparkSession, path: str) -> None:
     registration it vouches for."""
     name = _bucket_table_name(path)
     spark.sql(f"DROP TABLE IF EXISTS {name}")
-    memo = _validated_specs.get(_session_key(spark))
-    if memo:
+    _forget_specs(spark, name)
+
+
+def _forget_specs(spark: SparkSession, name: str) -> None:
+    with _validated_specs_lock:
+        memo = _validated_specs.get(_session_key(spark), set())
         memo.difference_update({k for k in memo if k[0] == name})
 
 
@@ -140,9 +151,11 @@ def ensure_bucketed_table(
     :func:`_drop_bucketed_table` (the only in-package drop route)."""
     name = _bucket_table_name(path)
     memo_key = (name, key, buckets, sort_key or key)
-    memo = _validated_specs.setdefault(_session_key(spark), set())
+    with _validated_specs_lock:
+        memo = _validated_specs.setdefault(_session_key(spark), set())
+        validated = memo_key in memo
     if spark.catalog.tableExists(name):
-        if memo_key in memo:
+        if validated:
             return name
         spec = {
             r.col_name: r.data_type
@@ -153,10 +166,11 @@ def ensure_bucketed_table(
             and spec.get("Bucket Columns") == f"[`{key}`]"
             and spec.get("Sort Columns") == f"[`{sort_key or key}`]"
         ):
-            memo.add(memo_key)
+            with _validated_specs_lock:
+                memo.add(memo_key)
             return name
         spark.sql(f"DROP TABLE IF EXISTS {name}")  # stale spec: rebuild
-        memo.difference_update({k for k in memo if k[0] == name})
+        _forget_specs(spark, name)
     if schema is None:
         schema = spark.read.parquet(path).schema
     cols = ", ".join(
@@ -167,7 +181,8 @@ def ensure_bucketed_table(
         f"CLUSTERED BY (`{key}`) SORTED BY (`{sort_key or key}`) "
         f"INTO {buckets} BUCKETS LOCATION '{path}'"
     )
-    memo.add(memo_key)  # just created with exactly this spec
+    with _validated_specs_lock:
+        memo.add(memo_key)  # just created with exactly this spec
     return name
 
 

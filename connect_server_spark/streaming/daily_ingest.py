@@ -7,26 +7,42 @@ batch materialization and one write discipline.
 Per micro-batch, in order:
 
 1. **gate** — optional ingest-time curation (deterministic, so replays
-   gate identically); dropped rows touch nothing downstream.
-2. **rollup partial append** — ingest-volume metrics over the GATED
-   batch, ledger-gated by batch id (exactly-once; computed pre-dedup so
-   a replay whose dedup outcome shifts — see below — still records the
-   identical partial).
-3. **dedup probes, three modalities** — minhash bands against the text
-   index, IVF cells against the embedding index, winnow fingerprints
-   against the fingerprint store; self-pairs filtered (a replayed batch
-   collides with its own prior index entries); all three pairs logs
-   appended (at-least-once, keyed by (new_id, corpus_id)).
-4. **index growth** — the fresh survivors (S8 anti-join against the
-   survivors table) append to the minhash index+shingle store, the IVF
-   cell store, the BM25 term/doclens/meta stores, and the winnow
-   posts/fps store. ALL index appends run BEFORE the survivors append.
-5. **survivors append** — the exactly-once table; committing it is what
-   marks the batch done.
+   gate identically); dropped rows touch nothing downstream. The gated
+   batch materializes ONCE (pinned eager boundary) before anything else
+   runs; every group below reads that one materialization.
+2. **group (a), concurrent: rollup + dedup probes** — four chains on
+   the materialized batch: the rollup partial append (ingest-volume
+   metrics over the GATED batch, ledger-gated by batch id, exactly-once;
+   computed pre-dedup so a replay whose dedup outcome shifts — see
+   below — still records the identical partial), and the three probes —
+   minhash bands against the text index, IVF cells against the
+   embedding index, winnow fingerprints against the fingerprint store —
+   each self-pair filtered (a replayed batch collides with its own prior
+   index entries) and ending in its own pinned eager boundary.
+3. **group (b), concurrent: pairs logs** — the three pairs-log appends
+   (at-least-once, keyed by (new_id, corpus_id)), one chain each.
+4. **fresh set** — the S8 anti-join of the non-duplicate rows against
+   the survivors table (``fresh_rows``), after EVERY probe and pairs log.
+5. **group (c), concurrent: index growth** — one chain per store, each
+   appending the materialized fresh set: the minhash index+shingle
+   store, the IVF cell store, the BM25 term/doclens/meta stores, the
+   winnow posts/fps store, the z-ordered event log, and (opt-in) the
+   sketch-ledger partial and the serve pair (ONE chain: PQ, then
+   refine). The group fully joins — every chain finished, failed or
+   not — before anything after it runs.
+6. **survivors append** — last, after group (c) joined; the
+   exactly-once table, and committing it is what marks the batch done.
+7. **maintenance** (opt-in cadence) — post-commit and sequential.
+
+Chains inside a group share no store, so the stores' crash states are
+the same as a sequential run's, store by store: a chain that crashes
+leaves its own store as a sequential crash at that step would, and its
+sibling chains commit (a failure re-raises only after the whole group
+joined — :func:`~connect_server_spark.execution.run_concurrently`).
 
 Crash/replay analysis, store by store (pinned in
 ``tests/test_streaming.py``'s kill-mid-batch convergence test): a crash
-anywhere before step 5 leaves the survivors table without the batch, so
+anywhere before step 6 leaves the survivors table without the batch, so
 the replay's ``fresh_rows`` re-selects the rows and every append
 retries. Each store absorbs the retry on its own terms — rollup:
 batch-id ledger skips; pairs logs: duplicate keyed rows; minhash/IVF:
@@ -34,7 +50,7 @@ duplicate index rows neutralized at read (candidate ``distinct`` +
 self-pair filter / serving ``distinct``); BM25: identical term/doclens
 rows dropped by serving, meta partial overwrites its own
 ``batch=<id>`` directory; winnow: identical posting/fps rows dropped
-layout-free at probe time. A crash AFTER step 5 replays into "nothing
+layout-free at probe time. A crash AFTER step 6 replays into "nothing
 fresh" and writes nothing. The one divergence window: if a replayed
 batch contains intra-batch near-duplicates, the first (crashed)
 attempt's index growth makes the replay catch them — the survivor set
@@ -52,7 +68,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from connect_server_spark.execution import stage_boundary
+from connect_server_spark.execution import run_concurrently, stage_boundary
 
 from connect_server_spark.operators.dedup import (
     embedding_neardup_against_index,
@@ -106,27 +122,31 @@ def build_base_stores(
     the one place the minhash/IVF/BM25/winnow base build lives (the
     composed drills and the crawl drill share it; the module docstring's
     "store bootstrap" contract). ``corpus`` needs (doc_id, text,
-    embedding) columns."""
-    write_minhash_index(
-        corpus.select("doc_id", "text"),
-        "doc_id",
-        "text",
-        paths["minhash_index"],
-        paths["shingles"],
-    )
-    write_ivf_index(
-        corpus.select("doc_id", "embedding"),
-        paths["ivf_index"],
-        nlist=nlist,
-        corpus_id="doc_id",
-        corpus_vec="embedding",
-    )
-    write_bm25_index(
-        corpus.select("doc_id", "text"), "doc_id", "text", paths["bm25_index"]
-    )
-    write_winnow_index(
-        corpus.select("doc_id", "text"), "doc_id", "text",
-        paths["winnow_index"],
+    embedding) columns. The four overwrites share no store and run
+    concurrently (:func:`~connect_server_spark.execution.run_concurrently`)."""
+    run_concurrently(
+        lambda: write_minhash_index(
+            corpus.select("doc_id", "text"),
+            "doc_id",
+            "text",
+            paths["minhash_index"],
+            paths["shingles"],
+        ),
+        lambda: write_ivf_index(
+            corpus.select("doc_id", "embedding"),
+            paths["ivf_index"],
+            nlist=nlist,
+            corpus_id="doc_id",
+            corpus_vec="embedding",
+        ),
+        lambda: write_bm25_index(
+            corpus.select("doc_id", "text"), "doc_id", "text",
+            paths["bm25_index"],
+        ),
+        lambda: write_winnow_index(
+            corpus.select("doc_id", "text"), "doc_id", "text",
+            paths["winnow_index"],
+        ),
     )
 
 
@@ -200,7 +220,9 @@ def composed_ingest_sink(
     "minhash_index", "ivf_index", "bm25_index", "winnow_index",
     "sketch_ledger", "events_z", "serve_pq", "serve_refine") to
     exercise the crash-replay contract — production callers leave it
-    None.
+    None. A step that is one chain of a concurrent group raises inside
+    that chain, so its sibling chains commit before the sink re-raises;
+    "pairs" fires after its whole group.
 
     ``serve_pair=True`` makes the ingest OPERATE the IVFPQ+refine
     serving deployment (r11 verdict ask #2): fresh survivors append
@@ -275,60 +297,67 @@ def composed_ingest_sink(
         # anti-joins, and every append; severs streaming lineage
         batch = batch.transform(stage_boundary, eager=True, pin=True)
 
-        rollup(batch.select(ts_col, value_col), batch_id)
-        _maybe_fail("rollup")
+        # group (a): each chain reads the materialized batch and ends in
+        # its own pinned eager boundary; only the rollup writes a store
+        def _rollup() -> None:
+            rollup(batch.select(ts_col, value_col), batch_id)
+            _maybe_fail("rollup")
 
-        pairs_t = (
-            minhash_neardup_against_index(
-                batch.select(id_col, text_col),
-                spark,
-                paths["minhash_index"],
-                paths["shingles"],
-                id_col,
-                text_col,
-                threshold=threshold,
-                num_hashes=num_hashes,
-                bands=bands,
-                shingle_n=shingle_n,
-            )
-            .filter(F.col("new_id") != F.col("corpus_id"))
-            .transform(stage_boundary, eager=True, pin=True)
+        def _probe(pairs: DataFrame) -> DataFrame:
+            return pairs.filter(
+                F.col("new_id") != F.col("corpus_id")
+            ).transform(stage_boundary, eager=True, pin=True)
+
+        _, pairs_t, pairs_v, pairs_w = run_concurrently(
+            _rollup,
+            lambda: _probe(
+                minhash_neardup_against_index(
+                    batch.select(id_col, text_col),
+                    spark,
+                    paths["minhash_index"],
+                    paths["shingles"],
+                    id_col,
+                    text_col,
+                    threshold=threshold,
+                    num_hashes=num_hashes,
+                    bands=bands,
+                    shingle_n=shingle_n,
+                )
+            ),
+            lambda: _probe(
+                embedding_neardup_against_index(
+                    batch.select(id_col, vec_col),
+                    spark,
+                    paths["ivf_index"],
+                    id_col=id_col,
+                    vec_col=vec_col,
+                    threshold=vec_threshold,
+                    nprobe=nprobe,
+                )
+            ),
+            lambda: _probe(
+                winnow_neardup_against_index(
+                    batch.select(id_col, text_col),
+                    spark,
+                    paths["winnow_index"],
+                    id_col,
+                    text_col,
+                    threshold=winnow_threshold,
+                )
+            ),
         )
-        pairs_v = (
-            embedding_neardup_against_index(
-                batch.select(id_col, vec_col),
-                spark,
-                paths["ivf_index"],
-                id_col=id_col,
-                vec_col=vec_col,
-                threshold=vec_threshold,
-                nprobe=nprobe,
-            )
-            .filter(F.col("new_id") != F.col("corpus_id"))
-            .transform(stage_boundary, eager=True, pin=True)
-        )
-        pairs_w = (
-            winnow_neardup_against_index(
-                batch.select(id_col, text_col),
-                spark,
-                paths["winnow_index"],
-                id_col,
-                text_col,
-                threshold=winnow_threshold,
-            )
-            .filter(F.col("new_id") != F.col("corpus_id"))
-            .transform(stage_boundary, eager=True, pin=True)
-        )
-        # appends resolve the pointer (fsutil.append_resolved, no-op
-        # while the logs are flat): once the maintenance cadence
+        # group (b): appends resolve the pointer (fsutil.append_resolved,
+        # no-op while the logs are flat): once the maintenance cadence
         # compacts a log generationally, a flat append beside the
         # generations would be invisible to resolving readers and GC'd
         # as legacy at the next publish
         from connect_server_spark.fsutil import append_resolved
 
-        append_resolved(pairs_t, paths["pairs_text"])
-        append_resolved(pairs_v, paths["pairs_vec"])
-        append_resolved(pairs_w, paths["pairs_winnow"])
+        run_concurrently(
+            lambda: append_resolved(pairs_t, paths["pairs_text"]),
+            lambda: append_resolved(pairs_v, paths["pairs_vec"]),
+            lambda: append_resolved(pairs_w, paths["pairs_winnow"]),
+        )
         _maybe_fail("pairs")
 
         dup_ids = (
@@ -340,45 +369,73 @@ def composed_ingest_sink(
         survivors = batch.join(dup_ids, id_col, "left_anti")
         fresh = fresh_rows(spark, survivors, paths["survivors"], [id_col])
         if fresh.count():
-            write_minhash_index(
-                fresh.select(id_col, text_col),
-                id_col,
-                text_col,
-                paths["minhash_index"],
-                paths["shingles"],
-                num_hashes=num_hashes,
-                bands=bands,
-                shingle_n=shingle_n,
-                mode="append",
-            )
-            _maybe_fail("minhash_index")
-            write_ivf_index(
-                fresh.select(id_col, vec_col),
-                paths["ivf_index"],
-                corpus_id=id_col,
-                corpus_vec=vec_col,
-                mode="append",
-            )
-            _maybe_fail("ivf_index")
-            write_bm25_index(
-                fresh.select(id_col, text_col),
-                id_col,
-                text_col,
-                paths["bm25_index"],
-                mode="append",
-                batch_id=meta_namespace + int(batch_id),
-            )
-            _maybe_fail("bm25_index")
-            # winnow store: a replayed append re-writes IDENTICAL
-            # (id, fp)/(id, fps) rows, dropped layout-free at probe time
-            write_winnow_index(
-                fresh.select(id_col, text_col),
-                id_col,
-                text_col,
-                paths["winnow_index"],
-                mode="append",
-            )
-            _maybe_fail("winnow_index")
+            # group (c): every chain reads the materialized fresh set and
+            # appends to its own store(s); a failpoint fires inside its
+            # chain, so the siblings commit before the sink re-raises
+            def _step(step: str, write: Callable[[], None]):
+                def chain() -> None:
+                    write()
+                    _maybe_fail(step)
+
+                return chain
+
+            chains = [
+                _step("minhash_index", lambda: write_minhash_index(
+                    fresh.select(id_col, text_col),
+                    id_col,
+                    text_col,
+                    paths["minhash_index"],
+                    paths["shingles"],
+                    num_hashes=num_hashes,
+                    bands=bands,
+                    shingle_n=shingle_n,
+                    mode="append",
+                )),
+                _step("ivf_index", lambda: write_ivf_index(
+                    fresh.select(id_col, vec_col),
+                    paths["ivf_index"],
+                    corpus_id=id_col,
+                    corpus_vec=vec_col,
+                    mode="append",
+                )),
+                _step("bm25_index", lambda: write_bm25_index(
+                    fresh.select(id_col, text_col),
+                    id_col,
+                    text_col,
+                    paths["bm25_index"],
+                    mode="append",
+                    batch_id=meta_namespace + int(batch_id),
+                )),
+                # winnow store: a replayed append re-writes IDENTICAL
+                # (id, fp)/(id, fps) rows, dropped layout-free at probe
+                # time
+                _step("winnow_index", lambda: write_winnow_index(
+                    fresh.select(id_col, text_col),
+                    id_col,
+                    text_col,
+                    paths["winnow_index"],
+                    mode="append",
+                )),
+                # z-ordered event log of ATTEMPTED survivors: appended
+                # BEFORE the survivors commit so a crash can never lose
+                # a batch's rows — at the cost of superset semantics on
+                # replay. Usually the replay re-appends IDENTICAL rows
+                # (deduped by id at read, the pairs-log contract), but a
+                # batch whose members near-dup EACH OTHER can leave rows
+                # here that never reach the survivors log: attempt 1's
+                # index appends make the replay's probes see the batch's
+                # own rows, shrinking the replayed fresh set. Readers
+                # that need exactly-the-survivors semantics must
+                # semi-join the survivors store; the z log's contract is
+                # at-least-once over attempted survivors, like the pairs
+                # logs (which share the same replay window). Appends
+                # decay the layout by design; maintain_zorder below
+                # restores it.
+                _step("events_z", lambda: append_zordered_store(
+                    fresh.select(id_col, ts_col, value_col),
+                    paths["events_z"],
+                )),
+            ]
             if sketch_telemetry:
                 from connect_server_spark.operators.sketches import (
                     write_sketch_partial,
@@ -389,53 +446,36 @@ def composed_ingest_sink(
                 # committed) and overwrites an identical partial; once
                 # survivors commit, the partial is already on disk — no
                 # ordering leaves the telemetry short a committed batch
-                write_sketch_partial(
-                    fresh, paths["sketch_ledger"], int(batch_id), id_col
-                )
-                _maybe_fail("sketch_ledger")
-            # z-ordered event log of ATTEMPTED survivors: appended
-            # BEFORE the survivors commit so a crash can never lose a
-            # batch's rows — at the cost of superset semantics on
-            # replay. Usually the replay re-appends IDENTICAL rows
-            # (deduped by id at read, the pairs-log contract), but a
-            # batch whose members near-dup EACH OTHER can leave rows
-            # here that never reach the survivors log: attempt 1's
-            # index appends make the replay's probes see the batch's
-            # own rows, shrinking the replayed fresh set. Readers that
-            # need exactly-the-survivors semantics must semi-join the
-            # survivors store; the z log's contract is at-least-once
-            # over attempted survivors, like the pairs logs (which
-            # share the same replay window). Appends decay the layout
-            # by design; maintain_zorder below restores it.
-            append_zordered_store(
-                fresh.select(id_col, ts_col, value_col),
-                paths["events_z"],
-            )
-            _maybe_fail("events_z")
+                chains.append(_step(
+                    "sketch_ledger",
+                    lambda: write_sketch_partial(
+                        fresh, paths["sketch_ledger"], int(batch_id), id_col
+                    ),
+                ))
             if serve_pair:
-                # both appends BEFORE the survivors commit, like every
-                # other index: a crash replays with the same fresh set
-                # and re-appends identical rows (at-least-once; the
-                # serving guard's distinct-id digest dedups), and a
-                # crash BETWEEN the two appends leaves the stores'
-                # id sets unequal — pq_refine_topk refuses loudly until
-                # the replay completes the second append
-                write_ivf_index(
-                    fresh.select(id_col, vec_col),
-                    paths["pq_index"],
-                    corpus_id=id_col,
-                    corpus_vec=vec_col,
-                    mode="append",
-                )
-                _maybe_fail("serve_pq")
-                write_ivf_index(
-                    fresh.select(id_col, vec_col),
-                    paths["refine_index"],
-                    corpus_id=id_col,
-                    corpus_vec=vec_col,
-                    mode="append",
-                )
-                _maybe_fail("serve_refine")
+                # ONE chain, PQ then refine, both BEFORE the survivors
+                # commit like every other index: a crash replays with
+                # the same fresh set and re-appends identical rows
+                # (at-least-once; the serving guard's distinct-id digest
+                # dedups), and a crash BETWEEN the two appends leaves
+                # the stores' id sets unequal — pq_refine_topk refuses
+                # loudly until the replay completes the second append
+                def _serve_pair() -> None:
+                    for step, key in (
+                        ("serve_pq", "pq_index"),
+                        ("serve_refine", "refine_index"),
+                    ):
+                        write_ivf_index(
+                            fresh.select(id_col, vec_col),
+                            paths[key],
+                            corpus_id=id_col,
+                            corpus_vec=vec_col,
+                            mode="append",
+                        )
+                        _maybe_fail(step)
+
+                chains.append(_serve_pair)
+            run_concurrently(*chains)
             append_resolved(fresh, paths["survivors"])
 
         if maintain_every and int(batch_id) % maintain_every == (

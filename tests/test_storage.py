@@ -594,3 +594,55 @@ def test_bucketed_writes_emit_one_file_per_bucket(spark, tmp_path):
     # self-join by key) and every row survived
     out = read_bucketed(spark, path, "k", buckets=8)
     assert out.count() == 2100
+
+
+def test_concurrent_bucketed_stores_in_one_session(spark, tmp_path):
+    """Threads of one session share the bucketed-spec memo: N chains
+    overwrite, append and read back distinct bucketed stores at once,
+    and every store reads back exactly its own rows. The memo is padded
+    so each drop's filter-by-table pass iterates long enough for other
+    threads' validations to land mid-iteration — the interleaving that
+    raised "Set changed size during iteration" without the memo lock."""
+    import sys
+
+    from connect_server_spark import storage
+    from connect_server_spark.execution import run_concurrently
+
+    n = 8  # more threads than the session's cores
+    key = storage._session_key(spark)
+    with storage._validated_specs_lock:
+        memo = storage._validated_specs.setdefault(key, set())
+        pad = {(f"pad_{i}", "k", 4, "k") for i in range(400_000)}
+        memo |= pad
+
+    def chain(i: int):
+        def run():
+            path = str(tmp_path / f"store_{i}")
+            base = spark.range(0, 40).select(
+                F.col("id").alias("k"), F.lit(i).alias("owner")
+            )
+            more = spark.range(40, 60).select(
+                F.col("id").alias("k"), F.lit(i).alias("owner")
+            )
+            for _ in range(3):
+                storage.write_bucketed_path(base, path, "k", buckets=4)
+                storage.write_bucketed_path(more, path, "k", buckets=4,
+                                            mode="append")
+            return sorted(
+                tuple(r)
+                for r in storage.read_bucketed(spark, path, "k", buckets=4)
+                .select("k", "owner").collect()
+            )
+
+        return run
+
+    old_interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        got = run_concurrently(*(chain(i) for i in range(n)))
+    finally:
+        sys.setswitchinterval(old_interval)
+        with storage._validated_specs_lock:
+            memo -= pad
+    for i, rows in enumerate(got):
+        assert rows == [(k, i) for k in range(60)]
