@@ -177,6 +177,12 @@ def _calibration(spark, reps: int) -> float:
 # out of exactly the queries it slowed instead of skewing the whole run.
 CALIBRATION_STRIDE = 10
 
+# When the side file cannot be written, the stdout line carries the
+# query error messages instead: each cut to _ERR_CHARS, all together to
+# _ERR_BUDGET chars (later ones keep their name with an empty message).
+_ERR_CHARS = 120
+_ERR_BUDGET = 600
+
 
 def _sf_from_dir(sf_dir: str) -> float:
     base = os.path.basename(sf_dir.rstrip("/"))
@@ -362,13 +368,17 @@ def main() -> None:
         if _sf_from_dir(sf_dir) == 0.1
         else "bench_result_smoke.json"
     )
+    side_file_error = None
     try:
         tmp = os.path.join(REPO_ROOT, f".{name}.tmp")
         with open(tmp, "w") as f:
             f.write(payload + "\n")
         os.replace(tmp, os.path.join(REPO_ROOT, name))
-    except OSError:
-        pass  # a read-only checkout must not kill the stdout contract
+    except OSError as e:
+        # a read-only checkout must not kill the stdout contract, but the
+        # failure and the error messages the side file would have held
+        # go on the stdout line (cut to size below) instead of vanishing
+        side_file_error = str(e)
     # The stdout line is the driver's parse target and its tail capture is
     # ~2,000 chars (r12 verdict "what's wrong" #2: the full payload's
     # 14.7 KB line erased the r11→r12 comparison). Print a COMPACT line:
@@ -385,7 +395,18 @@ def main() -> None:
     )
     compact = {k: out[k] for k in compact_keys if k in out}
     if "query_errors" in out:
-        compact["query_errors"] = sorted(out["query_errors"])
+        compact["query_errors"] = sorted(out["query_errors"])  # names only
+    if side_file_error is not None:
+        # the messages the side file would have held, each cut to
+        # _ERR_CHARS and all together to _ERR_BUDGET, so a run with many
+        # failed queries cannot push the headline out of the tail capture
+        compact["side_file_error"] = side_file_error[:_ERR_CHARS]
+        if "query_errors" in out:
+            budget, messages = _ERR_BUDGET, {}
+            for n, msg in sorted(out["query_errors"].items()):
+                budget -= len(n) + min(len(msg), _ERR_CHARS)
+                messages[n] = msg[:_ERR_CHARS] if budget >= 0 else ""
+            compact["query_errors"] = messages
     print(json.dumps(compact, separators=(",", ":")))
 
 

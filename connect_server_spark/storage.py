@@ -186,6 +186,27 @@ def ensure_bucketed_table(
     return name
 
 
+def _by_bucket(df: DataFrame, key: str, buckets: int) -> DataFrame:
+    """Shuffle ``df`` so each shuffle partition holds one bucket's rows
+    before a bucketed write. Both branches hash with
+    ``pmod(murmur3(key), buckets)``, the bucketed writer's own bucket
+    id, so partition *i* is bucket *i*.
+
+    With AQE on (read at call time), a REBALANCE hint lets AQE coalesce
+    contiguous partitions to its advisory size: a tiny append runs as
+    one task writing one file per bucket it touches, and a large write
+    keeps its parallelism. AQE may split a partition above the advisory
+    size, giving that bucket more than one file in the write, which
+    bucketed reads accept as they accept appended files. Spark ignores
+    the hint with AQE off, where an N-partition input would write up to
+    N files per bucket, so that session keeps a fixed ``buckets``-way
+    repartition."""
+    conf = df.sparkSession.conf.get("spark.sql.adaptive.enabled", "true")
+    if conf.strip().lower() == "true":
+        return df.hint("rebalance", buckets, key)
+    return df.repartition(buckets, F.col(key))
+
+
 def write_bucketed_path(
     df: DataFrame,
     path: str,
@@ -213,19 +234,22 @@ def write_bucketed_path(
     LIVE generation so post-compaction appends are never orphaned in a
     superseded directory.
 
-    Writes align task parallelism with the bucket layout first
-    (``repartition(buckets, key)`` — the same murmur3-mod hash as the
-    bucketed writer, as in :func:`compact_bucketed`): a bucketed save
-    otherwise emits up to ``input_partitions × buckets`` files — the
-    sf0.1 minhash band index came out as ~3,000 files from a
-    94-partition input, and at 1000 executors the same shape is tens of
-    thousands of files PER STORE, paid back on every listing and scan.
-    One file per bucket per write is the layout's intended shape."""
+    Writes shuffle by the bucket hash first (:func:`_by_bucket`): a
+    bucketed save otherwise emits up to ``input_partitions × buckets``
+    files — the sf0.1 minhash band index came out as ~3,000 files from
+    a 94-partition input, and at 1000 executors the same shape is tens
+    of thousands of files PER STORE, paid back on every listing and
+    scan. With the shuffle, a write adds at most one file per bucket,
+    except buckets above AQE's advisory partition size, which AQE may
+    split across tasks. With AQE on, AQE also sizes the task count to
+    the data, so a ~160-row append runs as one task, not ``buckets``;
+    with AQE off, the write falls back to a fixed ``buckets``-way
+    repartition."""
     from connect_server_spark.fsutil import resolve_store
 
     spark = df.sparkSession
     sort_key = sort_key or key
-    df = df.repartition(buckets, F.col(key))
+    df = _by_bucket(df, key, buckets)
     if mode == "overwrite":
         from connect_server_spark.fsutil import GENERATION_PREFIX, fs_list
 
@@ -383,7 +407,11 @@ def compact_bucketed(
     (:func:`~connect_server_spark.fsutil.publish_generation`).
     ``repartition(buckets, key)`` uses the same murmur3-mod-buckets hash
     as the bucketed writer, so each task holds exactly one bucket's rows
-    → one file per bucket.
+    → at most one file per bucket, with AQE on or off. Unlike appends
+    (:func:`_by_bucket`), the rewrite keeps the fixed repartition: AQE
+    neither coalesces nor splits it, so no bucket is split into several
+    files however large it grows — a split would leave the store above
+    its maintenance file threshold right after compacting it.
 
     The pointer flip is ONE small-file replace — object-store-safe,
     unlike a directory-rename swap (a per-object copy on S3A that a
@@ -405,7 +433,12 @@ def compact_bucketed(
     live = resolve_store(spark, path)
     name = ensure_bucketed_table(spark, live, key, buckets, sort_key)
     spark.catalog.refreshTable(name)
-    df = spark.table(name)
+    # the table's files as plain parquet, not the bucketed table: over a
+    # scan that reports the same bucketing, the planner drops the
+    # repartition below and then the bucketed scan too, and the rewrite
+    # kept the live files' mix of buckets per task (48 appended files
+    # compacted to 29, not 8)
+    df = spark.read.schema(spark.table(name).schema).parquet(live)
 
     gen = begin_generation(spark, path)
     tmp_table = f"{_bucket_table_name(gen)}_ctmp"

@@ -559,41 +559,174 @@ def test_fs_signature_change_detection_both_legs(spark, tmp_path):
 
 
 def test_bucketed_writes_emit_one_file_per_bucket(spark, tmp_path):
-    """write_bucketed_path aligns task parallelism with the bucket
-    layout (r11): a bucketed save from an N-partition input otherwise
-    emits up to N x buckets files — the sf0.1 minhash band index came
-    out as ~3,000 files from a 94-partition input, and every listing,
-    footer read, and scan open paid for it. Overwrite AND append must
-    each add at most `buckets` data files."""
+    """write_bucketed_path shuffles by the bucket hash before the save
+    (r11): a bucketed save from an N-partition input otherwise emits up
+    to N x buckets files — the sf0.1 minhash band index came out as
+    ~3,000 files from a 94-partition input, and every listing, footer
+    read, and scan open paid for it. Overwrite AND append must each add
+    at most `buckets` data files, with AQE on and with AQE off.
+
+    With AQE on, the shuffle is a REBALANCE that AQE sizes to the data:
+    a few-row append runs as ONE task (every new file shares one
+    ``part-00000-<uuid>`` prefix, no bucket repeats), and even when AQE
+    splits partitions above a tiny advisory size, each ``_000bb`` file
+    holds only bucket ``bb``'s rows. Compaction is exempt from the
+    split: it still leaves at most one file per bucket."""
     import os
 
-    from connect_server_spark.storage import read_bucketed, write_bucketed_path
+    from connect_server_spark.fsutil import resolve_store
+    from connect_server_spark.storage import (
+        compact_bucketed,
+        read_bucketed,
+        write_bucketed_path,
+    )
 
-    df = spark.range(0, 2000).selectExpr(
-        "id AS k", "id * 2 AS v"
-    ).repartition(16)  # many input partitions, deliberately
-    path = str(tmp_path / "store")
-    write_bucketed_path(df, path, "k", buckets=8)
+    def rows(lo, hi):
+        return spark.range(lo, hi).selectExpr(
+            "id AS k", "id * 2 AS v"
+        ).repartition(16)  # many input partitions, deliberately
 
-    def data_files():
-        return [
+    def data_files(path):
+        return {
             n for n in os.listdir(path)
             if n.endswith(".parquet") and not n.startswith(".")
-        ]
+        }
 
-    first = data_files()
-    assert 0 < len(first) <= 8, len(first)
+    def bucket_of(name):  # part-00000-<uuid>_000bb.c000.snappy.parquet
+        return int(name.rsplit("_", 1)[1].split(".")[0])
 
-    batch = spark.range(2000, 2100).selectExpr(
-        "id AS k", "id * 2 AS v"
-    ).repartition(16)
-    write_bucketed_path(batch, path, "k", buckets=8, mode="append")
-    assert len(data_files()) <= len(first) + 8
+    def write_pair(path):
+        """Overwrite 2,000 rows, then append 20; return both writes'
+        new files."""
+        write_bucketed_path(rows(0, 2000), path, "k", buckets=8)
+        first = data_files(path)
+        write_bucketed_path(
+            rows(2000, 2020), path, "k", buckets=8, mode="append"
+        )
+        return first, data_files(path) - first
+
+    path = str(tmp_path / "store")
+    first, added = write_pair(path)
+    assert 0 < len(first) <= 8, sorted(first)
+    assert 0 < len(added) <= 8, sorted(added)
+    # (a) the small append is one task: one part prefix, one file per
+    # bucket it touches
+    prefixes = {n.rsplit("_", 1)[0] for n in added}
+    assert len(prefixes) == 1 and prefixes.pop().startswith("part-00000-"), (
+        sorted(added)
+    )
+    buckets_hit = [bucket_of(n) for n in added]
+    assert len(buckets_hit) == len(set(buckets_hit)), sorted(added)
+    # >1 bucket, so one prefix means one task wrote several buckets
+    assert len(buckets_hit) > 1, sorted(added)
 
     # layout intact: the read reports the bucketing (no Exchange on a
     # self-join by key) and every row survived
     out = read_bucketed(spark, path, "k", buckets=8)
-    assert out.count() == 2100
+    assert out.count() == 2020
+
+    # (b) AQE off: Spark ignores the REBALANCE hint, so the fixed
+    # repartition must keep each write at <= `buckets` files
+    key = "spark.sql.adaptive.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        off = str(tmp_path / "store_aqe_off")
+        first, added = write_pair(off)
+        assert 0 < len(first) <= 8, sorted(first)
+        assert 0 < len(added) <= 8, sorted(added)
+        assert read_bucketed(spark, off, "k", buckets=8).count() == 2020
+    finally:
+        spark.conf.set(key, old)
+
+    # (c) a tiny advisory size makes AQE split partitions: a bucket may
+    # then get several files, but every file holds only its bucket
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1k")
+    try:
+        split = str(tmp_path / "store_split")
+        write_bucketed_path(rows(0, 20000), split, "k", buckets=8)
+        files = data_files(split)
+        # compaction keeps its fixed repartition, which AQE never
+        # splits: the store is back to at most one file per bucket
+        compacted = str(tmp_path / "store_compacted")
+        write_bucketed_path(rows(0, 20000), compacted, "k", buckets=8)
+        compact_bucketed(spark, compacted, "k", buckets=8)
+        live = resolve_store(spark, compacted)
+        assert 0 < len(data_files(live)) <= 8, sorted(data_files(live))
+    finally:
+        spark.conf.set(key, old)
+    assert read_bucketed(spark, compacted, "k", buckets=8).count() == 20000
+    assert len(files) > 8, sorted(files)  # AQE did split
+    placed = (
+        spark.read.parquet(split)
+        .select(
+            F.regexp_extract(F.input_file_name(), r"_(\d+)\.c\d+", 1)
+            .cast("int").alias("file_bucket"),
+            F.expr("pmod(hash(k), 8)").alias("row_bucket"),
+        )
+        .groupBy("file_bucket", "row_bucket")
+        .count()
+        .collect()
+    )
+    assert {r.file_bucket for r in placed} == {bucket_of(n) for n in files}
+    assert all(r.file_bucket == r.row_bucket for r in placed), placed
+    assert read_bucketed(spark, split, "k", buckets=8).count() == 20000
+
+
+def test_bucketed_append_inside_foreachbatch_is_one_task(spark, tmp_path):
+    """The daily ingest appends from a ``foreachBatch`` sink, whose
+    DataFrames belong to the stream's own cloned session, not the
+    caller's. That session must still run the append as AQE's one
+    coalesced task (one ``part-00000-<uuid>`` prefix), or every
+    micro-batch would pay the fixed ``buckets``-way write."""
+    import json
+    import os
+
+    from connect_server_spark.execution import stage_boundary
+    from connect_server_spark.storage import write_bucketed_path
+
+    path = str(tmp_path / "store")
+    write_bucketed_path(
+        spark.range(0, 2000).selectExpr("id AS k", "id * 2 AS v"),
+        path, "k", buckets=8,
+    )
+    before = set(os.listdir(path))
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "b1.json").write_text("\n".join(
+        json.dumps({"k": 5000 + i, "v": i}) for i in range(160)
+    ))
+    seen = {}
+
+    def sink(batch_df, batch_id):
+        fresh = batch_df.repartition(16).transform(
+            stage_boundary, eager=True, pin=True
+        )
+        seen["aqe"] = fresh.sparkSession.conf.get("spark.sql.adaptive.enabled")
+        write_bucketed_path(fresh, path, "k", buckets=8, mode="append")
+
+    q = (
+        spark.readStream.schema("k long, v long").json(str(src))
+        .writeStream.foreachBatch(sink)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None, q.exception()
+    added = {
+        n for n in set(os.listdir(path)) - before
+        if n.endswith(".parquet") and not n.startswith(".")
+    }
+    assert seen["aqe"] == "true"
+    assert 1 < len(added) <= 8, sorted(added)
+    prefixes = {n.rsplit("_", 1)[0] for n in added}
+    assert len(prefixes) == 1 and prefixes.pop().startswith("part-00000-"), (
+        sorted(added)
+    )
+    assert spark.read.parquet(path).count() == 2160
 
 
 def test_concurrent_bucketed_stores_in_one_session(spark, tmp_path):
