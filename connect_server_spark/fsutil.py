@@ -16,6 +16,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from connect_server_spark.memo import cached
+
 __all__ = [
     "fs_exists",
     "fs_rename",
@@ -337,23 +339,14 @@ def _local_fs_path(spark: SparkSession, path: str) -> "str | None":
         return parts.path or "/"
     if "://" in path:
         return None
-    key = id(spark._jsparkSession)
-    if key not in _DEFAULT_FS_IS_LOCAL:
-        default_fs = spark._jsc.hadoopConfiguration().get(
-            "fs.defaultFS", "file:///"
-        )
-        _DEFAULT_FS_IS_LOCAL[key] = default_fs.startswith("file:")
-        if len(_DEFAULT_FS_IS_LOCAL) > 64:  # sessions per process
-            last = _DEFAULT_FS_IS_LOCAL.pop(key)
-            _DEFAULT_FS_IS_LOCAL.clear()
-            _DEFAULT_FS_IS_LOCAL[key] = last
-    return path if _DEFAULT_FS_IS_LOCAL[key] else None
-
-
-# fs.defaultFS is fixed per JVM session; one gateway call to read it,
-# memoized by session identity. local[*] test/bench sessions read
-# file:///, so the scandir fast path engages exactly there.
-_DEFAULT_FS_IS_LOCAL: dict = {}
+    # fs.defaultFS is fixed per SparkContext: one gateway call reads it.
+    # local[*] sessions read file:///, so the scandir leg engages there.
+    local = cached(
+        spark, ("default_fs_is_local", spark.sparkContext), [],
+        lambda: spark._jsc.hadoopConfiguration()
+        .get("fs.defaultFS", "file:///").startswith("file:"),
+    )
+    return path if local else None
 
 
 def write_bytes_atomic(spark: SparkSession, path: str, data: bytes) -> None:

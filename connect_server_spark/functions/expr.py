@@ -2,99 +2,10 @@
 
 from __future__ import annotations
 
-import functools
-import threading
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-__all__ = ["let_col", "memo_expr"]
-
-
-_MEMO_EXPR_CAP = 256
-
-
-def memo_expr(fn):
-    """Memoize a pure Column-builder on its arguments' expression text.
-
-    The heavy text expressions (language_id, quality_score: ~0.1 s of
-    py4j round-trips EACH to build their stopword/score trees) are pure
-    functions of their input expressions, and Column objects are
-    immutable — the same tree can appear in any number of plans.
-
-    Columns are keyed on the NORMALIZED column-node string
-    (``_jc.node().normalized()`` — origins stripped, so two identical
-    unresolved trees print identically), not the ``Column`` repr: a
-    dataset-bound column like ``df["text"]`` prints ``Column<'text'>``
-    exactly like ``F.col("text")`` but carries a resolved attribute of
-    ONE DataFrame (node string ``text#<exprId>`` vs
-    ``UnresolvedAttribute`` — the exprId disambiguates), and serving
-    df1's tree to df2 would raise MISSING_ATTRIBUTES or silently bind
-    the wrong side of a join.
-    Lambda variables (``let_col`` bodies) get a fresh JVM name per
-    construction, so those call sites miss by design — the cache is
-    LRU-bounded at ``_MEMO_EXPR_CAP`` so they cannot grow a long-lived
-    driver, and the win stays with the unresolved-``F.col`` hot sites.
-
-    Scalar kwargs join the key. Cached py4j refs live as long as the
-    process's gateway — one JVM per process in every launcher here."""
-
-    def _key(v):
-        if isinstance(v, Column):
-            # normalized() carries resolved exprIds (df1["text"] vs
-            # df2["text"]) but prints typed literals identically
-            # (Literal(1,...) for both 1 and "1"); sql() quotes string
-            # literals but drops exprIds. Key on BOTH so neither
-            # blindness can serve a wrong tree.
-            node = v._jc.node()
-            return f"C:{node.normalized().toString()}\x00{node.sql()}"
-        # scalars: 1, True and 1.0 are equal as dict keys — pair the
-        # type so a bool-flagged call never hits an int-flagged entry
-        return (type(v), v)
-
-    cache: dict = {}
-    # plan construction is driver-side but NOT single-threaded:
-    # foreachBatch bodies run on per-stream threads, and an unlocked
-    # pop-then-reinsert would let two hits race into a KeyError
-    lock = threading.Lock()
-
-    @functools.wraps(fn)
-    def wrapped(*args, **kwargs):
-        try:
-            key = (
-                tuple(_key(a) for a in args),
-                tuple(sorted((k, _key(v)) for k, v in kwargs.items())),
-            )
-            hash(key)  # an unhashable arg surfaces HERE, not in .get
-        except Exception:  # unhashable / Connect-only Column: uncached
-            return fn(*args, **kwargs)
-        with lock:
-            hit = cache.get(key)
-            if hit is not None:
-                # LRU, not FIFO: let_col lambda bodies insert
-                # never-again-matched keys by design, and FIFO would
-                # let that churn evict the hot stopword-tree entries
-                # this cache exists for — a hit re-inserts at the back
-                cache[key] = cache.pop(key)
-                return hit
-        hit = fn(*args, **kwargs)  # build outside the lock (py4j-slow)
-        with lock:
-            cache[key] = hit
-            if len(cache) > _MEMO_EXPR_CAP:  # evict least-recently-USED
-                cache.pop(next(iter(cache)))
-        return hit
-
-    def _cache_clear():
-        # parity with lru_cache for tests — but under the SAME lock as
-        # the hit path: a bare cache.clear() interleaving between the
-        # locked get() hit and the pop()-reinsert would raise KeyError
-        # in a concurrent plan-construction thread (foreachBatch bodies
-        # build plans on per-stream threads)
-        with lock:
-            cache.clear()
-
-    wrapped.cache_clear = _cache_clear
-    return wrapped
+__all__ = ["let_col"]
 
 
 def let_col(value: Column, body) -> Column:

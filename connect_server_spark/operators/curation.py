@@ -21,12 +21,11 @@ Scale design:
 
 from __future__ import annotations
 
-import functools as _functools
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from connect_server_spark.execution import stage_boundary
+from connect_server_spark.memo import memo_expr
 
 from connect_server_spark.operators.dedup import word_shingles
 
@@ -239,13 +238,7 @@ def decontaminate_bloom(
     return docs.join(hits, id_col, "left_anti")
 
 
-# typed=True (r12 advice): min_quality=True must not alias min_quality=1
-# (nor 1 alias 1.0) — the memo_expr discipline of pairing type(v) into
-# keys, expressed via lru_cache's own typed mode. Like memo_expr, the
-# cached Columns are py4j-backed and assume the process keeps ONE JVM
-# gateway for its lifetime; a path that stops/recreates the SparkSession
-# in-process must cache_clear() these.
-@_functools.lru_cache(maxsize=64, typed=True)
+@memo_expr
 def _scan_gate_pred(
     text_col: str,
     min_quality: int | None,
@@ -348,7 +341,7 @@ def make_curation_gate(
     caching."""
     from connect_server_spark.operators.text import lm_quality_scores
 
-    # normalize for the lru_cache key (callers pass lists/tuples alike)
+    # normalize for the memo key (callers pass lists/tuples alike)
     tok_bounds_t = tuple(tok_bounds) if tok_bounds is not None else None
 
     def gate(df: DataFrame) -> DataFrame:

@@ -18,14 +18,13 @@ These are the LLM-training-pipeline operators the reference lacks but a
 
 from __future__ import annotations
 
-import functools
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from connect_server_spark.execution import stage_boundary
 
-from connect_server_spark.functions.expr import let_col, memo_expr
+from connect_server_spark.functions.expr import let_col
+from connect_server_spark.memo import memo_expr
 
 __all__ = [
     "normalize_text",
@@ -49,7 +48,6 @@ __all__ = [
     "embedding_neardup_exact",
     "embedding_neardup_lsh",
     "embedding_neardup_against_index",
-    "embedding_neardup_against_index_sliced",
     "duplicated_ngram_spans",
     "cut_duplicate_spans",
     "write_window_index",
@@ -154,11 +152,10 @@ def minhash_signature(shingles: Column, num_hashes: int = 32) -> Column:
     )
 
 
-@functools.lru_cache(maxsize=32)
+@memo_expr
 def _minhash_agg_exprs(num_hashes: int) -> tuple:
     """The ``num_hashes`` seeded-min aggregate Columns of
-    :func:`minhash_band_buckets`, memoized per hash count (r12, the
-    simhash ``memo_expr`` precedent — guide §7.3): each build is
+    :func:`minhash_band_buckets`, memoized per hash count: each build is
     ~130 py4j round trips (0.3–0.5 s of driver wall, measured), the
     trees are pure functions of ``num_hashes`` over the FIXED
     intermediate names ``_sh``/``_m{i}``, and Column objects are
@@ -169,7 +166,7 @@ def _minhash_agg_exprs(num_hashes: int) -> tuple:
     )
 
 
-@functools.lru_cache(maxsize=32)
+@memo_expr
 def _minhash_band_keys(bands: int, rows_per_band: int):
     """The band-key array Column over the ``_m{i}`` signature columns,
     memoized per (bands, rows_per_band) — same rationale as
@@ -1050,6 +1047,9 @@ def embedding_neardup_lsh(
     # matrix-multiply ran twice per document) and two embedding scans
     # for candidate generation alone. The lazy boundary materializes
     # the narrow (id, table, sig) rows once; both join sides read them.
+    # The boundary is perf-only: under checkpoint mode ``none`` it is a
+    # no-op and the SRP ArrowEvalPython runs twice again, by design;
+    # the pairs are the same in every mode.
     buckets = stage_boundary(
         emb.select(
             F.col(id_col),
@@ -1084,48 +1084,6 @@ def embedding_neardup_lsh(
         )
         .filter(F.col("cosine") >= threshold)
     )
-
-
-def embedding_neardup_against_index_sliced(
-    new: DataFrame,
-    spark,
-    index_path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.9,
-    nprobe: int = 4,
-    slices: int = 8,
-) -> DataFrame:
-    """:func:`embedding_neardup_against_index` for batches too large for
-    one broadcast: the batch is split into ``slices`` deterministic hash
-    slices, each gated independently, results unioned. Per-slice results
-    are independent (each new vector's matches depend only on the
-    corpus index), so slicing changes nothing but peak broadcast memory —
-    equivalence is pinned in ``tests/test_dedup.py``. Total cost stays
-    O(batch); the store is scanned once per slice (cell-directory-pruned
-    to each slice's probed cells), which is the deliberate trade: batch
-    slices at driver-RAM scale vs corpus never moving. Size ``slices`` so
-    ``batch/slices × nprobe`` rows fit the broadcast budget."""
-    if slices < 1:
-        raise ValueError("slices must be >= 1")
-    parts = [
-        embedding_neardup_against_index(
-            new.filter(
-                F.pmod(F.xxhash64(F.col(id_col)), F.lit(slices)) == s
-            ),
-            spark,
-            index_path,
-            id_col,
-            vec_col,
-            threshold,
-            nprobe,
-        )
-        for s in range(slices)
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
 
 
 def embedding_neardup_against_index(

@@ -693,24 +693,15 @@ _GIF_MAGICS = (b"GIF87a", b"GIF89a")
 _LZW_MAX_CODE = 1 << 12  # the spec's 12-bit ceiling
 
 
-_LZW_ENC_ROOTS: dict[int, dict[bytes, int]] = {}
-_LZW_DEC_ROOTS: dict[int, list[bytes]] = {}
-
-
-def _lzw_enc_root(mcs: int) -> dict[bytes, int]:
-    root = _LZW_ENC_ROOTS.get(mcs)
-    if root is None:
-        root = {bytes([i]): i for i in range(1 << mcs)}
-        _LZW_ENC_ROOTS[mcs] = root
-    return root
-
-
-def _lzw_dec_root(mcs: int) -> list[bytes]:
-    root = _LZW_DEC_ROOTS.get(mcs)
-    if root is None:
-        root = [bytes([i]) for i in range(1 << mcs)] + [b"", b""]
-        _LZW_DEC_ROOTS[mcs] = root
-    return root
+# The LZW root tables for each minimum code size the spec allows (2..8),
+# built once at import.
+_LZW_ENC_ROOTS = {
+    mcs: {bytes([i]): i for i in range(1 << mcs)} for mcs in range(2, 9)
+}
+_LZW_DEC_ROOTS = {
+    mcs: [bytes([i]) for i in range(1 << mcs)] + [b"", b""]
+    for mcs in range(2, 9)
+}
 
 
 def _lzw_encode(indices: bytes, mcs: int) -> bytes:
@@ -731,12 +722,12 @@ def _lzw_encode(indices: bytes, mcs: int) -> bytes:
             bitbuf >>= 8
             nbits -= 8
 
-    root = _lzw_enc_root(mcs)
+    root = _LZW_ENC_ROOTS[mcs]
 
     def fresh() -> tuple[dict[bytes, int], int, int]:
-        # dict.copy of the cached root beats rebuilding 2^mcs bytes
+        # dict.copy of the prebuilt root beats rebuilding 2^mcs bytes
         # keys per frame (the per-frame decode cost was ~20% root-table
-        # construction before caching)
+        # construction before the roots were prebuilt)
         return root.copy(), end + 1, mcs + 1
 
     table, next_code, width = fresh()
@@ -783,7 +774,7 @@ def _lzw_decode(data: bytes, mcs: int, n_expected: int) -> bytes:
         raise ValueError(f"GIF LZW minimum code size {mcs} out of range")
     clear, end = 1 << mcs, (1 << mcs) + 1
 
-    root = _lzw_dec_root(mcs)
+    root = _LZW_DEC_ROOTS[mcs]
 
     def fresh() -> list[bytes]:
         return root.copy()

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from connect_server_spark.execution import stage_boundary
+from connect_server_spark.memo import cached
 
 from connect_server_spark.operators.text import tokens
 
@@ -348,16 +349,11 @@ def write_bm25_index(
     )
 
 
-# (signature-pair, snapshot) per (session, meta path, termstats path) —
-# see _bm25_ledger. Bounded like similarity's _MODEL_CACHE.
-_LEDGER_MEMO: dict = {}
-
-
 def _bm25_ledger(spark, index_path: str) -> dict:
     """One snapshot of the index's driver-side ledgers — the
     batch-coverage guard verdict, (n_docs, dl_sum, dl_cnt), and the
-    termstats read schema — memoized per (session, resolved ledger
-    paths) behind BOTH directories' ``fs_signature``s.
+    termstats read schema — memoized per resolved ledger paths behind
+    BOTH directories' ``fs_signature``s.
 
     The serving path re-probed these ledgers on every call: two
     footer-inference reads, two distinct-batch collects, and two
@@ -375,40 +371,41 @@ def _bm25_ledger(spark, index_path: str) -> dict:
     index written before the termstats ledger existed and then appended
     to. A guard FAILURE is never memoized — every call against the
     broken store re-reads and re-raises."""
-    from connect_server_spark.fsutil import fs_signature, resolve_store
+    from connect_server_spark.fsutil import resolve_store
 
     meta_path = resolve_store(spark, f"{index_path}/meta")
     ts_path = resolve_store(spark, f"{index_path}/termstats")
-    sig = (fs_signature(spark, meta_path), fs_signature(spark, ts_path))
-    key = (id(spark._jsparkSession), meta_path, ts_path)
-    hit = _LEDGER_MEMO.get(key)
-    if hit is not None and None not in sig and hit[0] == sig:
-        return hit[1]
-    meta_df = spark.read.parquet(meta_path)
-    ts_df = spark.read.parquet(ts_path)
-    meta_batches = {int(r.batch) for r in meta_df.select("batch").distinct().collect()}
-    ts_batches = {int(r.batch) for r in ts_df.select("batch").distinct().collect()}
-    if meta_batches != ts_batches:
-        raise ValueError(
-            f"{index_path}: termstats ledger covers batches "
-            f"{sorted(ts_batches)} but meta covers {sorted(meta_batches)} — "
-            "the index predates the termstats ledger (or a partial write); "
-            "rebuild it with write_bm25_index(mode='overwrite')"
-        )
-    agg = meta_df.agg(
-        F.sum("n_docs"), F.sum("dl_sum"), F.sum("dl_cnt")
-    ).first()
-    value = {
-        "n_docs": int(agg[0]),
-        "dl_sum": int(agg[1] or 0),
-        "dl_cnt": int(agg[2] or 0),
-        "ts_path": ts_path,
-        "ts_schema": ts_df.schema,
-    }
-    if len(_LEDGER_MEMO) > 128:
-        _LEDGER_MEMO.clear()
-    _LEDGER_MEMO[key] = (sig, value)
-    return value
+
+    def load() -> dict:
+        meta_df = spark.read.parquet(meta_path)
+        ts_df = spark.read.parquet(ts_path)
+        meta_batches = {
+            int(r.batch) for r in meta_df.select("batch").distinct().collect()
+        }
+        ts_batches = {
+            int(r.batch) for r in ts_df.select("batch").distinct().collect()
+        }
+        if meta_batches != ts_batches:
+            raise ValueError(
+                f"{index_path}: termstats ledger covers batches "
+                f"{sorted(ts_batches)} but meta covers {sorted(meta_batches)} — "
+                "the index predates the termstats ledger (or a partial write); "
+                "rebuild it with write_bm25_index(mode='overwrite')"
+            )
+        agg = meta_df.agg(
+            F.sum("n_docs"), F.sum("dl_sum"), F.sum("dl_cnt")
+        ).first()
+        return {
+            "n_docs": int(agg[0]),
+            "dl_sum": int(agg[1] or 0),
+            "dl_cnt": int(agg[2] or 0),
+            "ts_path": ts_path,
+            "ts_schema": ts_df.schema,
+        }
+
+    return cached(
+        spark, ("bm25_ledger", meta_path, ts_path), [meta_path, ts_path], load
+    )
 
 
 def query_term_stats(

@@ -26,6 +26,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from connect_server_spark.memo import cached
+
 __all__ = [
     "dot_product",
     "l2_norm",
@@ -445,39 +447,14 @@ def _write_pq_codebooks(spark, path: str, books) -> None:
     ).coalesce(1).write.mode("overwrite").parquet(path)
 
 
-# Serving-model memo: the coarse centroids and PQ codebooks are tiny
-# driver-side models that every serving call used to re-collect (a full
-# Spark job per query — ~0.2 s/rep in the r9 bench decomposition, the
-# single largest driver-side line). A real 100 TB serving tier holds
-# the quantizer in memory and reloads only when the store changes; this
-# memo is that, with change detection by directory signature — one
-# listStatus round-trip (name, length, mtime per file) instead of a
-# Spark job. Rebuilds/rebalances move the resolved generation path or
+# Serving models (coarse centroids, PQ codebooks) are tiny driver-side
+# values that every serving call used to re-collect (a full Spark job
+# per query — ~0.2 s/rep in the r9 bench decomposition, the single
+# largest driver-side line). A real serving tier holds the quantizer in
+# memory and reloads only when the store changes; ``memo.cached`` is
+# that. Rebuilds/rebalances move the resolved generation path or
 # rewrite the model files (new signature); appends never touch the
 # model dirs (centroids are never retrained on append, by contract).
-_MODEL_CACHE: dict = {}
-
-
-def _dir_signature(spark, path: str):
-    from connect_server_spark.fsutil import fs_signature
-
-    return fs_signature(spark, path)
-
-
-def _cached_model(spark, model_dir: str, load, cache_key: str | None = None):
-    """``cache_key`` distinguishes multiple memoized values derived from
-    the SAME directory (e.g. the cell store's schema and its distinct-id
-    count) — the change signature is always computed on ``model_dir``."""
-    key = (id(spark._jsparkSession), cache_key or model_dir)
-    sig = _dir_signature(spark, model_dir)
-    hit = _MODEL_CACHE.get(key)
-    if hit is not None and sig is not None and hit[0] == sig:
-        return hit[1]
-    value = load()
-    if len(_MODEL_CACHE) > 128:  # bounded: a few stores per session
-        _MODEL_CACHE.clear()
-    _MODEL_CACHE[key] = (sig, value)
-    return value
 
 
 def read_pq_codebooks(spark, index_path: str):
@@ -486,8 +463,8 @@ def read_pq_codebooks(spark, index_path: str):
     is the broadcast model that ships in the encode/decode UDF
     closures). ``index_path`` must already be resolved by callers that
     also read ``cells/`` — same single-snapshot rule as
-    :func:`read_ivf_centroids`. Memoized per (session, directory
-    signature) — see ``_MODEL_CACHE``."""
+    :func:`read_ivf_centroids`. Memoized behind the directory's
+    signature."""
 
     def _load():
         rows = (
@@ -503,7 +480,8 @@ def read_pq_codebooks(spark, index_path: str):
             [r.weights for r in rows], dtype=np.float32
         ).reshape(m, k, -1)
 
-    return _cached_model(spark, f"{index_path}/pq", _load)
+    pq = f"{index_path}/pq"
+    return cached(spark, ("pq_codebooks", pq), [pq], _load)
 
 
 def write_ivf_index(
@@ -649,8 +627,7 @@ def read_ivf_centroids(spark, index_path: str):
     ``index_path`` may be a generation-pointer root; callers that also
     read ``cells/`` must resolve ONCE and pass the resolved dir, so a
     concurrent rebalance can never pair new centroids with old cells.
-    Memoized per (session, directory signature) — see
-    ``_MODEL_CACHE``."""
+    Memoized behind the directory's signature."""
     from connect_server_spark.fsutil import resolve_store
 
     live = resolve_store(spark, index_path)
@@ -663,7 +640,8 @@ def read_ivf_centroids(spark, index_path: str):
         )
         return np.array([r.weights for r in rows], dtype=np.float64)
 
-    return _cached_model(spark, f"{live}/centroids", _load)
+    centroids = f"{live}/centroids"
+    return cached(spark, ("ivf_centroids", centroids), [centroids], _load)
 
 
 def read_ivf_cells(
@@ -695,9 +673,8 @@ def read_ivf_cells(
     # (a format change rides a rebuild → different resolved path or a
     # rewritten directory → different signature)
     cells_path = f"{index_path}/cells"
-    schema = _cached_model(
-        spark,
-        cells_path,
+    schema = cached(
+        spark, ("parquet_schema", cells_path), [cells_path],
         lambda: spark.read.parquet(cells_path).schema,
     )
     cells = spark.read.schema(schema).parquet(cells_path)
@@ -907,11 +884,13 @@ def pq_refine_topk(
     # CHANGE, memoized behind the directory signature like the models,
     # so an unchanged pair costs zero jobs at serving time.
     def _id_digest(live: str) -> tuple:
-        return _cached_model(
+        cells = f"{live}/cells"
+        return cached(
             spark,
-            f"{live}/cells",
+            ("cells_id_digest", cells, corpus_id),
+            [cells],
             lambda: tuple(
-                spark.read.parquet(f"{live}/cells")
+                spark.read.parquet(cells)
                 .select(corpus_id)
                 .distinct()
                 .agg(
@@ -920,7 +899,6 @@ def pq_refine_topk(
                 )
                 .collect()[0]
             ),
-            cache_key=f"{live}/cells#id_digest",
         )
 
     d_pq, d_ref = _id_digest(live_pq), _id_digest(live_ref)

@@ -11,7 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from connect_server_spark.functions.expr import let_col, memo_expr
+from connect_server_spark.functions.expr import let_col
+from connect_server_spark.memo import memo_expr
 from connect_server_spark.operators.dedup import normalize_text
 
 __all__ = [

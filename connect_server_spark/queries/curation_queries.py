@@ -22,13 +22,12 @@ fixture pin per stage.
 
 from __future__ import annotations
 
-import functools
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from connect_server_spark.execution import run_concurrently, stage_boundary
 
+from connect_server_spark.memo import memo_expr
 from connect_server_spark.registry import register
 from connect_server_spark.tables import load_table, spread_scan
 
@@ -221,15 +220,13 @@ def _gate_with_fixture_gopher(gate, cleaned: DataFrame) -> DataFrame:
     return gate(cleaned.filter(_fixture_gopher_pred()))
 
 
-@functools.lru_cache(maxsize=1)
+@memo_expr
 def _fixture_gopher_pred():
     """The adapted-gopher filter Column, built once per process (r12,
     guide §7.3): the gopher tree under the let-bound token split misses
     ``memo_expr`` (fresh lambda-variable name per construction), so the
     outer Column is cached instead — a pure function of the fixed
-    ``_GOPHER_KW`` over the unresolved ``text`` column. Like memo_expr,
-    assumes ONE JVM gateway per process; cache_clear() on any path that
-    recreates the SparkSession in-process."""
+    ``_GOPHER_KW`` over the unresolved ``text`` column."""
     from connect_server_spark.functions.expr import let_col
     from connect_server_spark.operators.quality import (
         gopher_flags,

@@ -3,6 +3,8 @@ multimodal binary plumbing."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -18,6 +20,7 @@ from connect_server_spark.operators.multimodal import (
     attach_binary,
     sample_frames,
 )
+from connect_server_spark.memo import cached
 from connect_server_spark.registry import register
 from connect_server_spark.tables import load_table, spread_scan
 
@@ -560,22 +563,18 @@ def _ingest_shard_count(n_docs: int) -> int:
     return max(8, n_docs // 7500)
 
 
-_DOC_COUNTS: dict[str, int] = {}
-
-
 def _ingest_doc_count(spark: SparkSession, sf_dir: str) -> int:
-    """documents row count, cached per dataset content key: the shard
-    rule needs it at every PLAN CONSTRUCTION of the in-plan leg, and an
-    eager count job per construction would bill the operator's timing
-    for fixture bookkeeping (review finding). Parquet count-star is
-    metadata-only, but even that is a Spark job; one per dataset per
+    """documents row count, memoized behind the table's signature: the
+    shard rule needs it at every PLAN CONSTRUCTION of the in-plan leg,
+    and an eager count job per construction would bill the operator's
+    timing for fixture bookkeeping (review finding). Parquet count-star
+    is metadata-only, but even that is a Spark job; one per dataset per
     process is the right amount."""
-    from connect_server_spark.tables import dataset_cache_key
-
-    key = dataset_cache_key(sf_dir, "documents")
-    if key not in _DOC_COUNTS:
-        _DOC_COUNTS[key] = load_table(spark, "documents", sf_dir).count()
-    return _DOC_COUNTS[key]
+    path = os.path.join(sf_dir, "documents.parquet")
+    return cached(
+        spark, ("row_count", path), [path],
+        lambda: load_table(spark, "documents", sf_dir).count(),
+    )
 
 
 def _warc_ingest_telemetry(extracted: DataFrame, docs: DataFrame) -> DataFrame:

@@ -3,8 +3,6 @@ fully oracle-gated (every operator is pure arithmetic/string logic)."""
 
 from __future__ import annotations
 
-import functools
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -24,6 +22,7 @@ from connect_server_spark.operators.text import (
     token_count,
     top_ngram_share,
 )
+from connect_server_spark.memo import memo_expr
 from connect_server_spark.registry import register
 from connect_server_spark.tables import load_table, spread_scan
 
@@ -162,16 +161,14 @@ _QMIN = 4_500_000
 _TOK_LO, _TOK_HI = 10, 1000
 
 
-@functools.lru_cache(maxsize=1)
+@memo_expr
 def _corpus_curation_gate_pred():
     """corpus_curation's scan-stage gate Column, built once per process
     (r12, guide §7.3): the quality/language trees under the let-bound
     token split miss ``memo_expr`` (fresh lambda-variable name per
     construction); caching the outer Column builds the identical tree
     exactly once. Pure construction over the unresolved ``text`` column
-    and the fixed thresholds above — no data, no store state. Like
-    memo_expr, assumes ONE JVM gateway per process; cache_clear() on any
-    path that recreates the SparkSession in-process."""
+    and the fixed thresholds above — no data, no store state."""
     from connect_server_spark.functions.expr import let_col
     from connect_server_spark.operators.text import tokens
 

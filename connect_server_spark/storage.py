@@ -17,10 +17,10 @@ giant straggler.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from connect_server_spark import memo
 
 __all__ = [
     "write_bucketed",
@@ -77,24 +77,10 @@ def _bucket_table_name(path: str) -> str:
     ).hexdigest()[:16]
 
 
-# (session-key → {(table, key, buckets, sort_key)}) of specs already
-# validated against the catalog this session — see
-# :func:`ensure_bucketed_table`. Keyed weakly by the JVM session object
-# id so a stopped/recreated session never inherits stale validations.
-# Concurrent chains of one session share a set, so every read and
-# write holds _validated_specs_lock: a drop's filter-by-table pass
-# iterating while another thread adds raises "Set changed size during
-# iteration". The lock never spans a Spark call.
-_validated_specs: dict = {}
-_validated_specs_lock = threading.Lock()
-
-# ((session-key, table) → directory signature) at the last
-# :func:`read_bucketed` refresh — the skip-refresh-when-unchanged memo.
-_read_signatures: dict = {}
-
-
-def _session_key(spark: SparkSession) -> int:
-    return id(spark._jsparkSession)
+def _spec_key(spark: SparkSession, name: str) -> tuple:
+    """Memo key of the bucket spec this session last validated for
+    catalog table ``name`` — see :func:`ensure_bucketed_table`."""
+    return ("bucket_spec", memo.session_key(spark), name)
 
 
 def _drop_bucketed_table(spark: SparkSession, path: str) -> None:
@@ -104,13 +90,7 @@ def _drop_bucketed_table(spark: SparkSession, path: str) -> None:
     registration it vouches for."""
     name = _bucket_table_name(path)
     spark.sql(f"DROP TABLE IF EXISTS {name}")
-    _forget_specs(spark, name)
-
-
-def _forget_specs(spark: SparkSession, name: str) -> None:
-    with _validated_specs_lock:
-        memo = _validated_specs.get(_session_key(spark), set())
-        memo.difference_update({k for k in memo if k[0] == name})
+    memo.shared.pop(_spec_key(spark, name))
 
 
 def ensure_bucketed_table(
@@ -140,22 +120,20 @@ def ensure_bucketed_table(
     assignments, silently wrong joins.
 
     The validation (a ``DESCRIBE TABLE EXTENDED`` command) runs ONCE
-    per (session, table, spec): serving paths call this on every probe
-    (``read_bucketed``), and the r9 bench decomposition measured the
-    per-read DESCRIBE as the dominant added driver-side cost of the
-    generation-pointer conversion. The memo key includes the spec, so
-    a same-session respec (``write_bucketed_path`` overwrite under a
-    new key) still re-validates; cross-session drops recreate the
-    table through the ``tableExists`` miss as before. The memo is
-    invalidated when the table is dropped through
+    per (JVM session, table, spec): serving paths call this on every
+    probe (``read_bucketed``), and the r9 bench decomposition measured
+    the per-read DESCRIBE as the dominant added driver-side cost of the
+    generation-pointer conversion. The memo holds the spec last
+    validated per (session, table), so a same-session respec
+    (``write_bucketed_path`` overwrite under a new key) re-validates;
+    cross-session drops recreate the table through the ``tableExists``
+    miss. The memo is invalidated when the table is dropped through
     :func:`_drop_bucketed_table` (the only in-package drop route)."""
     name = _bucket_table_name(path)
-    memo_key = (name, key, buckets, sort_key or key)
-    with _validated_specs_lock:
-        memo = _validated_specs.setdefault(_session_key(spark), set())
-        validated = memo_key in memo
+    wanted = (key, buckets, sort_key or key)
+    spec_key = _spec_key(spark, name)
     if spark.catalog.tableExists(name):
-        if validated:
+        if memo.shared.get(spec_key) == wanted:
             return name
         spec = {
             r.col_name: r.data_type
@@ -166,11 +144,9 @@ def ensure_bucketed_table(
             and spec.get("Bucket Columns") == f"[`{key}`]"
             and spec.get("Sort Columns") == f"[`{sort_key or key}`]"
         ):
-            with _validated_specs_lock:
-                memo.add(memo_key)
+            memo.shared.put(spec_key, wanted)
             return name
         spark.sql(f"DROP TABLE IF EXISTS {name}")  # stale spec: rebuild
-        _forget_specs(spark, name)
     if schema is None:
         schema = spark.read.parquet(path).schema
     cols = ", ".join(
@@ -181,8 +157,7 @@ def ensure_bucketed_table(
         f"CLUSTERED BY (`{key}`) SORTED BY (`{sort_key or key}`) "
         f"INTO {buckets} BUCKETS LOCATION '{path}'"
     )
-    with _validated_specs_lock:
-        memo.add(memo_key)  # just created with exactly this spec
+    memo.shared.put(spec_key, wanted)  # just created with exactly this spec
     return name
 
 
@@ -321,27 +296,16 @@ def read_bucketed(
     resolved first, and the catalog table is registered against the
     LIVE generation directory — each generation gets its own table
     name, so a swap can never leave a reader on a stale location."""
-    from connect_server_spark.fsutil import fs_signature, resolve_store
+    from connect_server_spark.fsutil import resolve_store
 
     live = resolve_store(spark, path)
     name = ensure_bucketed_table(spark, live, key, buckets, sort_key)
-    sig = fs_signature(spark, live)
-    sig_key = (_session_key(spark), name)
-    if _read_signatures.get(sig_key) != sig or sig is None:
-        spark.catalog.refreshTable(name)
-        if len(_read_signatures) > 512:  # bounded: stores per process
-            _read_signatures.clear()
-        _read_signatures[sig_key] = sig
+    # refresh only when the store changed since this session last did
+    memo.cached(
+        spark, ("refreshed", memo.session_key(spark), name), [live],
+        lambda: spark.catalog.refreshTable(name),
+    )
     return spark.table(name)
-
-
-# ((session-key, live-path) → (signature, is_broadcastable)): the
-# store-size probe memo. getContentSummary walks the directory (~40 ms
-# on a local store, a full LIST on an object store) and serving paths
-# ask per query; parquet files are immutable once committed, so the
-# one-listStatus signature is a sound change detector — same discipline
-# as read_bucketed's refresh skip and the similarity model cache.
-_size_verdicts: dict = {}
 
 
 def broadcastable(spark: SparkSession, path: str) -> bool:
@@ -367,29 +331,25 @@ def broadcastable(spark: SparkSession, path: str) -> bool:
         threshold = 10 * 1024 * 1024
     if threshold <= 0:
         return False
-    from connect_server_spark.fsutil import fs_signature, resolve_store
+    from connect_server_spark.fsutil import resolve_store
 
     # size the LIVE generation only — a root-level summary would count
     # the grace-period previous generation and read ~2× the real size
     path = resolve_store(spark, path)
-    sig = fs_signature(spark, path)
-    if sig is None:
-        return False
-    # the threshold is part of the verdict, so a session that changes
+
+    def fits() -> bool:
+        jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        return fs.exists(jpath) and (
+            fs.getContentSummary(jpath).getLength() <= threshold
+        )
+
+    # the threshold is part of the key, so a session that changes
     # autoBroadcastJoinThreshold re-probes instead of serving a stale
     # yes/no
-    key = (_session_key(spark), path, threshold)
-    hit = _size_verdicts.get(key)
-    if hit is not None and hit[0] == sig:
-        return hit[1]
-    hadoop_path = spark._jvm.org.apache.hadoop.fs.Path
-    jpath = hadoop_path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    verdict = fs.getContentSummary(jpath).getLength() <= threshold
-    if len(_size_verdicts) > 512:  # bounded: stores per process
-        _size_verdicts.clear()
-    _size_verdicts[key] = (sig, verdict)
-    return verdict
+    return memo.cached(
+        spark, ("fits_broadcast", path, threshold), [path], fits
+    )
 
 
 def compact_bucketed(

@@ -14,6 +14,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from connect_server_spark.memo import cached
+
 __all__ = [
     "TABLES",
     "default_sf_dir",
@@ -43,15 +45,6 @@ def default_sf_dir() -> str:
     return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-# Inferred StructType per table path, guarded by the path's fs_signature
-# (any rewrite/append invalidates). Schema inference runs a one-task Spark
-# job to read a footer on EVERY bare spark.read.parquet — a fixed driver
-# cost per plan construction that the memo removes; the schema itself is
-# pure metadata (a function of the committed files), so this caches no
-# data and no results.
-_SCHEMA_MEMO: dict = {}
-
-
 def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
     sf_dir = sf_dir or default_sf_dir()
     if name not in TABLES:
@@ -67,17 +60,18 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
         # which this ordering guarantees on every path.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    from connect_server_spark.fsutil import fs_signature
+    # Schema inference runs a one-task Spark job to read a footer on
+    # every bare spark.read.parquet; the schema is a function of the
+    # committed files, so it is memoized behind their signature. A miss
+    # returns the frame its inference read instead of reading again.
+    inferred = []
 
-    sig = fs_signature(spark, path)
-    if sig is not None:
-        hit = _SCHEMA_MEMO.get(path)
-        if hit is not None and hit[0] == sig:
-            return spark.read.schema(hit[1]).parquet(path)
-    df = spark.read.parquet(path)
-    if sig is not None:
-        _SCHEMA_MEMO[path] = (sig, df.schema)
-    return df
+    def infer():
+        inferred.append(spark.read.parquet(path))
+        return inferred[0].schema
+
+    schema = cached(spark, ("parquet_schema", path), [path], infer)
+    return inferred[0] if inferred else spark.read.schema(schema).parquet(path)
 
 
 def spread_scan(df: DataFrame, parallelism: int | None = None) -> DataFrame:

@@ -873,54 +873,6 @@ def test_embedding_incremental_against_index(spark, tmp_path):
     assert "SortMergeJoin" not in final and "ShuffledHashJoin" not in final, final
 
 
-def test_embedding_incremental_sliced_equals_unsliced(spark, tmp_path):
-    """The large-batch escape hatch: hash-slicing the batch and gating
-    slice-by-slice returns EXACTLY the unsliced result (per-vector
-    matches depend only on the corpus index), covers every batch id
-    across slices, and keeps the per-slice broadcast bounded."""
-    import numpy as np
-
-    from connect_server_spark.operators.dedup import (
-        embedding_neardup_against_index,
-        embedding_neardup_against_index_sliced,
-    )
-    from connect_server_spark.operators.similarity import write_ivf_index
-
-    rng = np.random.RandomState(23)
-    centers = rng.randn(4, 12)
-    corpus = spark.createDataFrame(
-        [(i, (centers[i % 4] + 0.05 * rng.randn(12)).tolist()) for i in range(60)],
-        ["vec_id", "embedding"],
-    )
-    ix = str(tmp_path / "ivf")
-    write_ivf_index(corpus, ix, nlist=4)
-    # batch: twins of corpus vectors 3, 17, 31 + novel vectors
-    twins = {9000 + j: i for j, i in enumerate((3, 17, 31))}
-    crows = {r.vec_id: r.embedding for r in corpus.collect()}
-    batch = spark.createDataFrame(
-        [
-            (nid, (np.array(crows[cid]) + 0.005 * rng.randn(12)).tolist())
-            for nid, cid in twins.items()
-        ]
-        + [(9100 + j, (10 * rng.randn(12)).tolist()) for j in range(5)],
-        ["vec_id", "embedding"],
-    )
-    plain = {
-        (r.new_id, r.corpus_id, r.cosine)
-        for r in embedding_neardup_against_index(
-            batch, spark, ix, threshold=0.9, nprobe=4
-        ).collect()
-    }
-    sliced = {
-        (r.new_id, r.corpus_id, r.cosine)
-        for r in embedding_neardup_against_index_sliced(
-            batch, spark, ix, threshold=0.9, nprobe=4, slices=3
-        ).collect()
-    }
-    assert sliced == plain
-    assert {n for n, _, _ in plain} >= set(twins)  # every twin caught
-
-
 def _spans_reference(rows, k, min_occ=2, cross_doc=False):
     """Brute-force python reference for duplicated_ngram_spans."""
     import re

@@ -1,11 +1,11 @@
-"""memo_expr (functions/expr.py): the expression-tree cache that fixed
+"""memo_expr (memo.py): the expression-tree cache that fixed
 corpus_curation's plan-construction cost (r8). The contract: same
 inputs (by expression text) -> the SAME Column object; different
 inputs -> distinct trees; unhashable scalars fall through uncached."""
 
 from pyspark.sql import functions as F
 
-from connect_server_spark.functions.expr import memo_expr
+from connect_server_spark.memo import memo_expr
 
 
 def test_memo_expr_hits_on_expression_text(spark):
@@ -50,11 +50,11 @@ def test_memo_expr_key_is_literal_type_aware(spark):
     """F.lit(1) and F.lit("1") normalize to the same node string, and
     1/True/1.0 are equal as dict keys — a type-blind key would serve
     the int tree to the string call (wrong literal type, no error)."""
-    from connect_server_spark.functions import expr as expr_mod
+    from connect_server_spark import memo
 
     calls = []
 
-    @expr_mod.memo_expr
+    @memo.memo_expr
     def build(col, flag=0):
         calls.append(1)
         return F.concat(col.cast("string"), F.lit("!"))
@@ -73,30 +73,30 @@ def test_memo_expr_eviction_is_lru_not_fifo(spark):
     """let_col lambda bodies insert never-again-matched keys by design;
     FIFO would let that churn evict the hot stopword-tree entries. A
     hit must refresh the entry's eviction order."""
-    from connect_server_spark.functions import expr as expr_mod
+    from connect_server_spark import memo
 
-    @expr_mod.memo_expr
+    @memo.memo_expr
     def build(col, n=0):
         return col + n
 
     hot = build(F.col("x"), n=-1)
-    for i in range(expr_mod._MEMO_EXPR_CAP - 1):
+    for i in range(memo.MEMO_CAP - 1):
         build(F.col("x"), n=i)  # fill to cap
     assert build(F.col("x"), n=-1) is hot  # touch: now most-recent
-    for i in range(expr_mod._MEMO_EXPR_CAP // 2):
+    for i in range(memo.MEMO_CAP // 2):
         build(F.col("x"), n=10_000 + i)  # churn past the cap
     assert build(F.col("x"), n=-1) is hot  # survived — LRU, not FIFO
 
 
 def test_memo_expr_cache_is_bounded(spark):
-    from connect_server_spark.functions import expr as expr_mod
+    from connect_server_spark import memo
 
-    @expr_mod.memo_expr
+    @memo.memo_expr
     def build(col, n=0):
         return col + n
 
     first = build(F.col("x"), n=-1)
-    for i in range(expr_mod._MEMO_EXPR_CAP + 5):
+    for i in range(memo.MEMO_CAP + 5):
         build(F.col("x"), n=i)
     # FIFO evicted the oldest entry; a rebuild returns a fresh tree
     assert build(F.col("x"), n=-1) is not first

@@ -730,23 +730,21 @@ def test_bucketed_append_inside_foreachbatch_is_one_task(spark, tmp_path):
 
 
 def test_concurrent_bucketed_stores_in_one_session(spark, tmp_path):
-    """Threads of one session share the bucketed-spec memo: N chains
-    overwrite, append and read back distinct bucketed stores at once,
-    and every store reads back exactly its own rows. The memo is padded
-    so each drop's filter-by-table pass iterates long enough for other
-    threads' validations to land mid-iteration — the interleaving that
-    raised "Set changed size during iteration" without the memo lock."""
+    """Threads of one session share the memo of bucket specs and
+    refreshes: N chains overwrite, append and read back distinct
+    bucketed stores at once, and every store reads back exactly its own
+    rows. The shared memo is padded to its cap, so every entry a chain
+    records evicts another while other threads read and write it — the
+    interleaving an unlocked LRU would corrupt."""
     import sys
 
-    from connect_server_spark import storage
+    from connect_server_spark import memo, storage
     from connect_server_spark.execution import run_concurrently
 
     n = 8  # more threads than the session's cores
-    key = storage._session_key(spark)
-    with storage._validated_specs_lock:
-        memo = storage._validated_specs.setdefault(key, set())
-        pad = {(f"pad_{i}", "k", 4, "k") for i in range(400_000)}
-        memo |= pad
+    pad = [("pad", i) for i in range(memo.MEMO_CAP)]
+    for k in pad:
+        memo.shared.put(k, True)
 
     def chain(i: int):
         def run():
@@ -775,7 +773,7 @@ def test_concurrent_bucketed_stores_in_one_session(spark, tmp_path):
         got = run_concurrently(*(chain(i) for i in range(n)))
     finally:
         sys.setswitchinterval(old_interval)
-        with storage._validated_specs_lock:
-            memo -= pad
+        for k in pad:
+            memo.shared.pop(k)
     for i, rows in enumerate(got):
         assert rows == [(k, i) for k in range(60)]
