@@ -1,5 +1,8 @@
-"""Deduplication operators for large-scale text corpora: exact, MinHash-LSH,
-SimHash, and n-gram Jaccard verification.
+"""Deduplication operators for large-scale corpora: exact digest,
+MinHash-LSH, exact n-gram Jaccard, SimHash, embedding cosine (all-pairs,
+SRP-LSH and IVF-indexed), duplicated substring spans, and winnowing
+fingerprints — each with an incremental probe against a persisted store
+where the family has one.
 
 These are the LLM-training-pipeline operators the reference lacks but a
 100 TB corpus engine needs. Design rules:
@@ -270,23 +273,66 @@ def jaccard_verify(
     pairs with ``jaccard >= threshold``. Two hash-joins against the
     (id, shingles) projection — candidates only, never the full corpus²."""
     sets_ = docs.select(F.col(id_col), F.col(shingles_col))
-    a = sets_.select(
-        F.col(id_col).alias("id_a"), F.col(shingles_col).alias("_sh_a")
+    a = sets_.select(F.col(id_col).alias("id_a"), F.col(shingles_col).alias("_sa"))
+    b = sets_.select(F.col(id_col).alias("id_b"), F.col(shingles_col).alias("_sb"))
+    return _set_jaccard(pairs.select("id_a", "id_b"), a, b, threshold).select(
+        "id_a", "id_b", "jaccard"
     )
-    b = sets_.select(
-        F.col(id_col).alias("id_b"), F.col(shingles_col).alias("_sh_b")
-    )
-    inter = F.size(F.array_intersect("_sh_a", "_sh_b"))
-    union = F.size("_sh_a") + F.size("_sh_b") - inter
+
+
+def _set_jaccard(
+    cands: DataFrame,
+    a: DataFrame,
+    b: DataFrame,
+    threshold: float,
+    store: str | None = None,
+) -> DataFrame:
+    """The exact set-Jaccard verify every set-based family ends in.
+    ``cands`` holds two id columns ``(l, r)``; ``a`` is ``(l, _sa)`` and
+    ``b`` is ``(r, _sb)``, the set of each id. Returns ``(l, r, shared,
+    n_a, n_b, jaccard)`` — set sizes and intersection size as longs —
+    for the pairs with ``jaccard >= threshold``.
+
+    The candidates take their left sets first, then the right ones.
+    When ``b`` reads the bucketed store at path ``store``, that join
+    goes through :func:`~connect_server_spark.storage.probe_side` with
+    the store on the left, so the O(corpus) set arrays never move; only
+    candidate-sized rows shuffle."""
+    from connect_server_spark.storage import probe_side
+
+    l, r = cands.columns
+    left = cands.join(a, l)
+    if store is None:
+        pairs = left.join(b, r)
+    else:
+        pairs = b.join(probe_side(b.sparkSession, store, left), r)
+    shared = F.size(F.array_intersect("_sa", "_sb")).cast("long")
+    n_a = F.size("_sa").cast("long")
+    n_b = F.size("_sb").cast("long")
+    return pairs.select(
+        l,
+        r,
+        shared.alias("shared"),
+        n_a.alias("n_a"),
+        n_b.alias("n_b"),
+        (shared / (n_a + n_b - shared)).alias("jaccard"),
+    ).filter(F.col("jaccard") >= threshold)
+
+
+def _posting_candidates(
+    store: DataFrame, path: str, batch: DataFrame, key: str
+) -> DataFrame:
+    """Distinct ``(new_id, corpus_id)`` candidates of an indexed probe:
+    the batch's ``(new_id, key)`` rows joined to the ``(corpus_id, key)``
+    postings of the key-bucketed store at ``path`` (the minhash band
+    index, the winnow posting store), through
+    :func:`~connect_server_spark.storage.probe_side`."""
+    from connect_server_spark.storage import probe_side
+
     return (
-        pairs.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (inter.cast("double") / union).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
+        store.join(probe_side(store.sparkSession, path, batch), key)
+        .select("new_id", "corpus_id")
+        .distinct()
     )
 
 
@@ -373,22 +419,13 @@ def minhash_neardup_against_shingled(
         "new_id", "corpus_id"
     ).distinct()
     a = new_sh.select(
-        F.col(id_col).alias("new_id"), F.col(shingles_col).alias("_sh_a")
+        F.col(id_col).alias("new_id"), F.col(shingles_col).alias("_sa")
     )
     b = corpus_sh.select(
-        F.col(id_col).alias("corpus_id"), F.col(shingles_col).alias("_sh_b")
+        F.col(id_col).alias("corpus_id"), F.col(shingles_col).alias("_sb")
     )
-    inter = F.size(F.array_intersect("_sh_a", "_sh_b"))
-    union = F.size("_sh_a") + F.size("_sh_b") - inter
-    return (
-        cands.join(a, "new_id")
-        .join(b, "corpus_id")
-        .select(
-            "new_id",
-            "corpus_id",
-            (inter.cast("double") / union).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
+    return _set_jaccard(cands, a, b, threshold).select(
+        "new_id", "corpus_id", "jaccard"
     )
 
 
@@ -488,18 +525,10 @@ def minhash_neardup_against_index(
     key, so only batch-sized rows shuffle — asserted on the physical
     plan in ``tests/test_dedup.py``). Ingest cost is O(batch) + the
     index join, vs :func:`minhash_neardup_against`'s O(corpus) rescan.
-
-    The store-join strategy is size-adaptive (one driver-side size probe
-    per store): a store still under the broadcast threshold joins
-    broadcast — the fastest shape while a corpus is small, zero Exchange
-    anywhere — and past the threshold the batch side is hinted
-    ``shuffle_hash`` with the batch as the build side: sort-merge would
-    insert an O(corpus) Sort above each store scan (appended stores have
-    several files per bucket, so the scan cannot claim sortedness); a
-    shuffled-hash join streams the store through a batch-sized hash
-    table instead. At 100 TB the stores are always past the threshold,
-    so the at-scale plan is exactly the hinted one — pinned with
-    broadcast disabled in ``tests/test_dedup.py``.
+    Both store joins follow the size-adaptive store-join rule
+    (:func:`~connect_server_spark.storage.probe_side`); its at-scale,
+    hinted plan is pinned with broadcast disabled in
+    ``tests/test_dedup.py``.
 
     The candidate join keys on ``band_hash`` alone — the hash already
     commits to the band (``xxhash64(lit(band), slice)``), and a
@@ -507,12 +536,7 @@ def minhash_neardup_against_index(
     Jaccard verify scores anyway, so the output contract is unchanged:
     ``(new_id, corpus_id, jaccard)`` with ``jaccard >= threshold``,
     exactly :func:`minhash_neardup_against`'s."""
-    from connect_server_spark.storage import broadcastable, read_bucketed
-
-    def probe_side(df: DataFrame, store_path: str) -> DataFrame:
-        # small store → no hint (Catalyst broadcasts the store itself);
-        # big store → force SHJ so the store neither sorts nor shuffles
-        return df if broadcastable(spark, store_path) else df.hint("shuffle_hash")
+    from connect_server_spark.storage import read_bucketed
 
     nd = new.select(
         F.col(id_col), word_shingles(F.col(text_col), shingle_n).alias("_sh")
@@ -523,17 +547,11 @@ def minhash_neardup_against_index(
     cb = read_bucketed(spark, index_path, "band_hash", store_buckets).select(
         F.col(id_col).alias("corpus_id"), "band_hash"
     )
-    cands = (
-        cb.join(probe_side(nb, index_path), "band_hash")
-        .select("new_id", "corpus_id")
-        .distinct()
-    )
-    a = nd.select(F.col(id_col).alias("new_id"), F.col("_sh").alias("_sh_a"))
+    cands = _posting_candidates(cb, index_path, nb, "band_hash")
+    a = nd.select(F.col(id_col).alias("new_id"), F.col("_sh").alias("_sa"))
     b = (
         read_bucketed(spark, shingle_path, id_col, store_buckets)
-        .select(
-            F.col(id_col).alias("corpus_id"), F.col("shingles").alias("_sh_b")
-        )
+        .select(F.col(id_col).alias("corpus_id"), F.col("shingles").alias("_sb"))
         # a replayed mode="append" ingest re-writes IDENTICAL shingle
         # rows (at-least-once); without this the verify join would emit
         # one pair per duplicate store row. Exchange-free by layout —
@@ -541,16 +559,8 @@ def minhash_neardup_against_index(
         # doclens and the IVF cell store).
         .dropDuplicates(["corpus_id"])
     )
-    inter = F.size(F.array_intersect("_sh_a", "_sh_b"))
-    union = F.size("_sh_a") + F.size("_sh_b") - inter
-    return (
-        b.join(probe_side(cands.join(a, "new_id"), shingle_path), "corpus_id")
-        .select(
-            "new_id",
-            "corpus_id",
-            (inter.cast("double") / union).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
+    return _set_jaccard(cands, a, b, threshold, store=shingle_path).select(
+        "new_id", "corpus_id", "jaccard"
     )
 
 
@@ -1128,29 +1138,19 @@ def embedding_neardup_against_index(
     Returns ``(new_id, corpus_id, cosine)`` with ``cosine >= threshold``.
     """
     from connect_server_spark.operators.similarity import (
+        _ivf_cell_probe,
         cosine_similarity,
-        ivf_assign_udf,
-        read_ivf_centroids,
-        read_ivf_cells,
     )
 
-    cents = read_ivf_centroids(spark, index_path)
-    corpus_cells = read_ivf_cells(spark, index_path, id_col, vec_col).select(
-        F.col(id_col).alias("corpus_id"),
-        F.col(vec_col).alias("_vb"),
-        F.col("cell").alias("_cell"),
-    )
-    batch_cells = new.select(
-        F.col(id_col).alias("new_id"),
-        F.col(vec_col).alias("_va"),
-        F.explode(ivf_assign_udf(cents, nprobe)(F.col(vec_col))).alias("_cell"),
-    )
+    batch = new.select(F.col(id_col).alias("new_id"), F.col(vec_col).alias("_va"))
     return (
-        corpus_cells.join(F.broadcast(batch_cells), "_cell")
+        _ivf_cell_probe(
+            batch, spark, index_path, nprobe, "new_id", "_va", id_col, vec_col
+        )
         .select(
             "new_id",
-            "corpus_id",
-            cosine_similarity(F.col("_va"), F.col("_vb")).alias("cosine"),
+            F.col(id_col).alias("corpus_id"),
+            cosine_similarity(F.col("_va"), F.col(vec_col)).alias("cosine"),
         )
         .distinct()
         .filter(F.col("cosine") >= threshold)
@@ -1211,7 +1211,15 @@ def duplicated_ngram_spans(
         if cross_doc_only
         else (F.col("_n") >= min_occurrences)
     ).select("key")
-    flagged = exploded.join(dup, "key", "leftsemi")
+    return _merge_spans(exploded.join(dup, "key", "leftsemi"), k)
+
+
+def _merge_spans(flagged: DataFrame, k: int) -> DataFrame:
+    """Maximal (id, span_start, span_end, n_windows) spans from flagged
+    k-window starts (id, pos) — the gaps-and-islands merge: a new span
+    starts where the gap to the previous flagged position exceeds k (a
+    lag window + running sum + group-by, all partitioned by id, so they
+    share one Exchange)."""
     w = Window.partitionBy("id").orderBy("pos")
     grouped = flagged.withColumn(
         "_new_span",
@@ -1355,13 +1363,11 @@ def duplicated_spans_against_index(
     minhash-index discipline), and corpus text is never scanned.
 
     Returns the same (id, span_start, span_end, n_windows) contract."""
-    from connect_server_spark.storage import broadcastable, read_bucketed
+    from connect_server_spark.storage import probe_side, read_bucketed
 
     wins = _window_keys(new, id_col, text_col, k).transform(stage_boundary)
     store = read_bucketed(spark, index_path, "key", store_buckets)
-    probe = wins.select("id", "pos", "key")
-    if not broadcastable(spark, index_path):
-        probe = probe.hint("shuffle_hash")
+    probe = probe_side(spark, index_path, wins.select("id", "pos", "key"))
     vs_corpus = store.join(probe, "key").select("id", "pos")
     intra = (
         wins.groupBy("key")
@@ -1370,23 +1376,7 @@ def duplicated_spans_against_index(
         .select("key")
     )
     vs_batch = wins.join(intra, "key", "leftsemi").select("id", "pos")
-    flagged = vs_corpus.unionByName(vs_batch).distinct()
-    w = Window.partitionBy("id").orderBy("pos")
-    grouped = flagged.withColumn(
-        "_new_span",
-        F.when(
-            F.col("pos") - F.lag("pos", 1).over(w) > k, F.lit(1)
-        ).otherwise(F.lit(0)),
-    ).withColumn("_grp", F.sum("_new_span").over(w))
-    return (
-        grouped.groupBy("id", "_grp")
-        .agg(
-            F.min("pos").alias("span_start"),
-            (F.max("pos") + k).alias("span_end"),
-            F.count(F.lit(1)).alias("n_windows"),
-        )
-        .select("id", "span_start", "span_end", "n_windows")
-    )
+    return _merge_spans(vs_corpus.unionByName(vs_batch).distinct(), k)
 
 
 # ---- Winnowing document fingerprints (Schleimer et al., SIGMOD 2003) ----
@@ -1520,35 +1510,19 @@ def winnow_neardup_pairs(
     )
     a = posts.select(F.col("id").alias("id_a"), "fp")
     b = posts.select(F.col("id").alias("id_b"), "fp")
-    shared = (
+    cands = (
         a.join(b, "fp")
         .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("shared_rare"))
+        .select("id_a", "id_b")
+        .distinct()
     )
-    # exact score over the FULL sets: intersect the two fps arrays (the
-    # pair count above only covers rare fingerprints, so it is a
-    # candidate signal, not the score)
-    pairs = (
-        shared.join(
-            fps.select(F.col("id").alias("id_a"), F.col("fps").alias("_fa")),
-            "id_a",
-        )
-        .join(
-            fps.select(F.col("id").alias("id_b"), F.col("fps").alias("_fb")),
-            "id_b",
-        )
-        .withColumn(
-            "shared", F.size(F.array_intersect("_fa", "_fb")).cast("long")
-        )
-        .withColumn("n_a", F.size("_fa").cast("long"))
-        .withColumn("n_b", F.size("_fb").cast("long"))
-    )
-    jac = F.col("shared") / (F.col("n_a") + F.col("n_b") - F.col("shared"))
-    return (
-        pairs.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "shared", "n_a", "n_b", "jaccard")
+    # exact score over the FULL sets (the candidates only share rare
+    # fingerprints, a candidate signal, not the score)
+    return _set_jaccard(
+        cands,
+        fps.select(F.col("id").alias("id_a"), F.col("fps").alias("_sa")),
+        fps.select(F.col("id").alias("id_b"), F.col("fps").alias("_sb")),
+        threshold,
     )
 
 
@@ -1620,15 +1594,11 @@ def winnow_neardup_against_index(
     documents costs one counted scan of its bucket, not a million
     candidate rows.
 
-    Join strategy is size-adaptive like the minhash probe: a small
-    store broadcasts, a large one keeps its bucketed layout with the
-    batch side hinted ``shuffle_hash`` so the store never sorts or
-    shuffles. Returns ``(new_id, corpus_id, shared, jaccard)`` with
-    ``jaccard >= threshold``."""
-    from connect_server_spark.storage import broadcastable, read_bucketed
-
-    def probe_side(df: DataFrame, store_path: str) -> DataFrame:
-        return df if broadcastable(spark, store_path) else df.hint("shuffle_hash")
+    Every store join follows the size-adaptive store-join rule
+    (:func:`~connect_server_spark.storage.probe_side`), like the
+    minhash probe. Returns ``(new_id, corpus_id, shared, jaccard)``
+    with ``jaccard >= threshold``."""
+    from connect_server_spark.storage import probe_side, read_bucketed
 
     posts_path = f"{index_path}/posts"
     fps_path = f"{index_path}/fps"
@@ -1643,7 +1613,7 @@ def winnow_neardup_against_index(
     # count df or duplicate candidates
     store_posts = store_posts.dropDuplicates(["id", "fp"])
     probed = store_posts.join(
-        probe_side(n_posts.select("fp").distinct(), posts_path),
+        probe_side(spark, posts_path, n_posts.select("fp").distinct()),
         "fp",
         "leftsemi",
     )
@@ -1653,24 +1623,18 @@ def winnow_neardup_against_index(
         .filter(F.col("_df") <= max_df)
         .select("fp")
     )
-    cands = (
-        store_posts.withColumnRenamed("id", "corpus_id")
-        .join(probe_side(n_posts.join(ok_fps, "fp", "leftsemi"), posts_path), "fp")
-        .select("new_id", "corpus_id")
-        .distinct()
+    cands = _posting_candidates(
+        store_posts.withColumnRenamed("id", "corpus_id"),
+        posts_path,
+        n_posts.join(ok_fps, "fp", "leftsemi"),
+        "fp",
     )
-    a = nf.select(F.col("id").alias("new_id"), F.col("fps").alias("_fa"))
+    a = nf.select(F.col("id").alias("new_id"), F.col("fps").alias("_sa"))
     b = (
         read_bucketed(spark, fps_path, "id", store_buckets)
-        .select(F.col("id").alias("corpus_id"), F.col("fps").alias("_fb"))
+        .select(F.col("id").alias("corpus_id"), F.col("fps").alias("_sb"))
         .dropDuplicates(["corpus_id"])
     )
-    inter = F.size(F.array_intersect("_fa", "_fb")).cast("long")
-    union = F.size("_fa") + F.size("_fb") - inter
-    return (
-        b.join(probe_side(cands.join(a, "new_id"), fps_path), "corpus_id")
-        .withColumn("shared", inter)
-        .withColumn("jaccard", inter / union)
-        .filter(F.col("jaccard") >= threshold)
-        .select("new_id", "corpus_id", "shared", "jaccard")
+    return _set_jaccard(cands, a, b, threshold, store=fps_path).select(
+        "new_id", "corpus_id", "shared", "jaccard"
     )

@@ -557,8 +557,8 @@ def maintain_bm25_index(
     and does nothing:
 
     * ``terms/``/``doclens/`` past ``max_files_per_bucket`` average
-      files per bucket → :func:`storage.compact_bucketed` (layout kept,
-      generation-pointer swap, object-store-safe).
+      files per bucket → compacted by :func:`storage.maintain_bucketed`
+      (layout kept, generation-pointer swap, object-store-safe).
     * ledgers past ``max_ledger_batches`` batch dirs → all but the
       newest ``keep_recent`` partials are SUMMED into one partial that
       keeps the highest merged batch id, published as a new ledger
@@ -583,19 +583,17 @@ def maintain_bm25_index(
 
     Returns ``{store: action}`` telemetry for what actually ran.
     """
-    from connect_server_spark.fsutil import fs_list, resolve_store
-    from connect_server_spark.storage import compact_bucketed
+    from connect_server_spark.fsutil import resolve_store
+    from connect_server_spark.storage import maintain_bucketed
 
     actions: dict[str, str] = {}
 
     for store, key in (("terms", "term"), ("doclens", "_id")):
-        root = f"{index_path}/{store}"
-        live = resolve_store(spark, root)
-        n_files = sum(
-            1 for f in fs_list(spark, live) if f.endswith(".parquet")
+        n_files = maintain_bucketed(
+            spark, f"{index_path}/{store}", key, buckets,
+            max_files_per_bucket, keep=keep,
         )
-        if n_files > buckets * max_files_per_bucket:
-            compact_bucketed(spark, root, key, buckets, keep=keep)
+        if n_files:
             actions[store] = f"compacted {n_files} files"
 
     from connect_server_spark.storage import (

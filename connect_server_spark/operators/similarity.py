@@ -101,12 +101,26 @@ def cosine_topk(
         F.col(corpus_id),
         cosine_similarity(F.col(probe_vec), F.col(corpus_vec)).alias("cosine"),
     )
+    return _topk(scored, k, probe_id, corpus_id)
+
+
+def _topk(
+    scored: DataFrame,
+    k: int,
+    probe_id: str,
+    corpus_id: str,
+    score: str = "cosine",
+    rank: str = "rank",
+) -> DataFrame:
+    """The per-probe top-k window every ranked search ends in: ``rank``
+    1..k by ``score`` descending, ties broken by ``corpus_id``
+    ascending (scores are rounded first, so the tie-break is what keeps
+    the top-k set stable across engines)."""
     w = Window.partitionBy(probe_id).orderBy(
-        F.col("cosine").desc(), F.col(corpus_id).asc()
+        F.col(score).desc(), F.col(corpus_id).asc()
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return scored.withColumn(rank, F.row_number().over(w)).filter(
+        F.col(rank) <= k
     )
 
 
@@ -183,13 +197,7 @@ def ann_lsh_topk(
         )
         .distinct()
     )
-    w = Window.partitionBy(probe_id).orderBy(
-        F.col("cosine").desc(), F.col(corpus_id).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _topk(scored, k, probe_id, corpus_id)
 
 
 def ivf_assign_udf(centroids, nprobe: int = 1):
@@ -727,24 +735,11 @@ def ivf_topk_indexed(
     ``probes × nprobe`` (id, vector, cell) rows in the broadcast
     budget; serve larger probe sets in slices — per-slice results are
     independent, so slicing changes nothing but peak memory."""
-    from connect_server_spark.fsutil import resolve_store
-
-    # resolve ONCE: centroids and cells must come from the SAME
-    # generation — two independent resolves racing a rebalance flip
-    # could pair new centroids with old cell ids and probe the wrong
-    # partitions
-    live = resolve_store(spark, index_path)
-    cents = read_ivf_centroids(spark, live)
-    c_cells = read_ivf_cells(
-        spark, live, corpus_id, corpus_vec
-    ).withColumnRenamed("cell", "_cell")
-    p_cells = probes.select(
-        F.col(probe_id),
-        F.col(probe_vec),
-        F.explode(ivf_assign_udf(cents, nprobe)(F.col(probe_vec))).alias("_cell"),
-    )
     scored = (
-        c_cells.join(broadcast(p_cells), "_cell")
+        _ivf_cell_probe(
+            probes, spark, index_path, nprobe,
+            probe_id, probe_vec, corpus_id, corpus_vec,
+        )
         .select(
             F.col(probe_id),
             F.col(corpus_id),
@@ -758,13 +753,62 @@ def ivf_topk_indexed(
         # a legitimate k-th neighbor
         .distinct()
     )
-    w = Window.partitionBy(probe_id).orderBy(
-        F.col("cosine").desc(), F.col(corpus_id).asc()
+    return _topk(scored, k, probe_id, corpus_id)
+
+
+def _ivf_cell_probe(
+    probes: DataFrame,
+    spark,
+    index_path: str,
+    nprobe: int,
+    probe_id: str,
+    probe_vec: str,
+    corpus_id: str,
+    corpus_vec: str,
+) -> DataFrame:
+    """The candidates of one probe of a persisted IVF index
+    (:func:`write_ivf_index`): every stored ``(corpus_id, corpus_vec)``
+    row in one of each probe's ``nprobe`` nearest cells, beside the
+    probe's own columns and the cell id ``_cell``. The one IVF probe
+    core: :func:`ivf_topk_indexed`, the PQ tier of
+    :func:`pq_refine_topk` and
+    :func:`~connect_server_spark.operators.dedup.embedding_neardup_against_index`
+    score its rows.
+
+    The store is resolved ONCE and the centroids and cells are read
+    from that one generation: two independent resolves racing a
+    rebalance flip could pair new centroids with old cell ids and
+    probe the wrong partitions. The probe side is EXPLICITLY broadcast
+    and joins on the hive partition column, so the O(corpus) cell store
+    never shuffles and Spark prunes the other ``nlist - nprobe`` cell
+    directories (dynamic partition pruning off the broadcast side)."""
+    from connect_server_spark.fsutil import resolve_store
+
+    live = resolve_store(spark, index_path)
+    cents = read_ivf_centroids(spark, live)
+    cells = read_ivf_cells(
+        spark, live, corpus_id, corpus_vec
+    ).withColumnRenamed("cell", "_cell")
+    return _cell_join(cells, probes, cents, nprobe, probe_id, probe_vec)
+
+
+def _cell_join(
+    cells: DataFrame,
+    probes: DataFrame,
+    cents,
+    nprobe: int,
+    probe_id: str,
+    probe_vec: str,
+) -> DataFrame:
+    """Assign each probe to its ``nprobe`` nearest ``cents`` cells and
+    broadcast-join the probes onto ``cells`` (any frame with a ``_cell``
+    column) on the cell id."""
+    p_cells = probes.select(
+        F.col(probe_id),
+        F.col(probe_vec),
+        F.explode(ivf_assign_udf(cents, nprobe)(F.col(probe_vec))).alias("_cell"),
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return cells.join(broadcast(p_cells), "_cell")
 
 
 class CandidateStarvedRefineWarning(UserWarning):
@@ -911,18 +955,11 @@ def pq_refine_topk(
             "stores from the same feed (and let maintain_refine_pair "
             "carry rebalances) before serving"
         )
-    cand_cells = read_ivf_cells(
-        spark, live_pq, corpus_id, corpus_vec
-    ).withColumnRenamed("cell", "_cell")
-    p_cells = probes.select(
-        F.col(probe_id),
-        F.col(probe_vec),
-        F.explode(ivf_assign_udf(cents, nprobe)(F.col(probe_vec))).alias(
-            "_cell"
-        ),
-    )
     cands = (
-        cand_cells.join(broadcast(p_cells), "_cell")
+        _ivf_cell_probe(
+            probes, spark, live_pq, nprobe,
+            probe_id, probe_vec, corpus_id, corpus_vec,
+        )
         .select(
             F.col(probe_id),
             F.col(probe_vec),
@@ -937,14 +974,10 @@ def pq_refine_topk(
         # two candidate slots
         .distinct()
     )
-    cw = Window.partitionBy(probe_id).orderBy(
-        F.col("_approx").desc(), F.col(corpus_id).asc()
-    )
-    shortlist = (
-        cands.withColumn("_crank", F.row_number().over(cw))
-        .filter(F.col("_crank") <= int(refine_mult) * k)
-        .select(probe_id, probe_vec, "_cell", corpus_id)
-    )
+    shortlist = _topk(
+        cands, int(refine_mult) * k, probe_id, corpus_id,
+        score="_approx", rank="_crank",
+    ).select(probe_id, probe_vec, "_cell", corpus_id)
     ref_cells = read_ivf_cells(
         spark, live_ref, corpus_id, corpus_vec
     ).withColumnRenamed("cell", "_cell")
@@ -959,13 +992,7 @@ def pq_refine_topk(
         )
         .distinct()
     )
-    w = Window.partitionBy(probe_id).orderBy(
-        F.col("cosine").desc(), F.col(corpus_id).asc()
-    )
-    return (
-        refined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _topk(refined, k, probe_id, corpus_id)
 
 
 def ivf_topk(
@@ -1004,23 +1031,14 @@ def ivf_topk(
         F.col(corpus_vec),
         F.explode(ivf_assign_udf(cents, 1)(F.col(corpus_vec))).alias("_cell"),
     )
-    p_cells = probes.select(
-        F.col(probe_id),
-        F.col(probe_vec),
-        F.explode(ivf_assign_udf(cents, nprobe)(F.col(probe_vec))).alias("_cell"),
-    )
-    scored = c_cells.join(broadcast(p_cells), "_cell").select(
+    scored = _cell_join(
+        c_cells, probes, cents, nprobe, probe_id, probe_vec
+    ).select(
         F.col(probe_id),
         F.col(corpus_id),
         cosine_similarity(F.col(probe_vec), F.col(corpus_vec)).alias("cosine"),
     )
-    w = Window.partitionBy(probe_id).orderBy(
-        F.col("cosine").desc(), F.col(corpus_id).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _topk(scored, k, probe_id, corpus_id)
 
 
 def hard_negatives(
@@ -1078,13 +1096,8 @@ def hard_negatives(
         )
         .filter(F.col("cosine") <= F.lit(max_sim))
     )
-    w = Window.partitionBy(probe_id).orderBy(
-        F.col("cosine").desc(), F.col(corpus_id).asc()
-    )
-    return (
-        negs.withColumn("neg_rank", F.row_number().over(w))
-        .filter(F.col("neg_rank") <= k)
-        .select(probe_id, corpus_id, "cosine", "neg_rank")
+    return _topk(negs, k, probe_id, corpus_id, rank="neg_rank").select(
+        probe_id, corpus_id, "cosine", "neg_rank"
     )
 
 

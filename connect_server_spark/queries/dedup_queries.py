@@ -455,8 +455,6 @@ def dedup_incremental_minhash_indexed(spark: SparkSession, sf_dir: str) -> DataF
     rescan. Rows-only; output equivalence to the recompute path is pinned
     in ``tests/test_dedup.py`` along with a plan test that the batch
     never reads corpus text."""
-    import os
-
     from connect_server_spark.operators.dedup import (
         minhash_neardup_against_index,
         write_minhash_index,
@@ -602,8 +600,6 @@ def dedup_incremental_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     /tmp; bench's warm-up pays the build). Rows-only: IVF recall is
     probabilistic at nprobe < nlist; nprobe = nlist equivalence to the
     exact all-pairs check is pinned in ``tests/test_dedup.py``."""
-    import os
-
     from connect_server_spark.operators.dedup import (
         embedding_neardup_against_index,
     )
@@ -730,8 +726,6 @@ def dedup_incremental_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     /tmp) for spans duplicating the corpus or repeating internally.
     Rows-only; union-reference equivalence + store-layout plan pin in
     ``tests/test_dedup.py``."""
-    import os
-
     from connect_server_spark.operators.dedup import (
         duplicated_spans_against_index,
         write_window_index,
@@ -783,8 +777,6 @@ def dedup_incremental_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     store. Rows-only; equivalence to recomputing winnow_neardup_pairs
     over the union is pinned in ``tests/test_dedup.py`` along with the
     store-side-Exchange-free plan check."""
-    import os
-
     from connect_server_spark.operators.dedup import (
         winnow_neardup_against_index,
         write_winnow_index,

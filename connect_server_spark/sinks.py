@@ -43,7 +43,7 @@ def _is_path_not_found(exc: AnalysisException) -> bool:
     Anything else (permissions, corrupt footer, transient storage error)
     must propagate: treating an arbitrary read failure as "first write"
     would silently drop the existing data under overwrite semantics."""
-    cond = exc.getErrorClass() or ""
+    cond = exc.getCondition() or ""
     return cond.startswith("PATH_NOT_FOUND") or "PATH_NOT_FOUND" in str(exc)
 
 

@@ -28,6 +28,8 @@ __all__ = [
     "read_bucketed",
     "ensure_bucketed_table",
     "compact_bucketed",
+    "maintain_bucketed",
+    "probe_side",
     "write_partitioned",
     "write_status_layout",
     "status_point_read",
@@ -352,6 +354,26 @@ def broadcastable(spark: SparkSession, path: str) -> bool:
     )
 
 
+def probe_side(spark: SparkSession, path: str, df: DataFrame) -> DataFrame:
+    """The batch side of a join against the bucketed store at ``path``,
+    hinted for the store's size — the one store-join rule every
+    incremental probe uses.
+
+    The strategy is size-adaptive (one memoized driver-side size probe
+    per store, :func:`broadcastable`): a store still under the broadcast
+    threshold gets no hint, so Catalyst broadcasts the store itself —
+    the fastest shape while a corpus is small, zero Exchange anywhere.
+    Past the threshold the batch side is hinted ``shuffle_hash`` with
+    the batch as the build side: sort-merge would insert an O(corpus)
+    Sort above the store scan (appended stores have several files per
+    bucket, so the scan cannot claim sortedness); a shuffled-hash join
+    streams the store through a batch-sized hash table instead, and the
+    bucketed layout keeps the store-side scan Exchange-free. At 100 TB
+    the stores are always past the threshold, so the at-scale plan is
+    exactly the hinted one."""
+    return df if broadcastable(spark, path) else df.hint("shuffle_hash")
+
+
 def compact_bucketed(
     spark: SparkSession,
     path: str,
@@ -416,6 +438,30 @@ def compact_bucketed(
     # the generation under its canonical hashed name on first read
     spark.sql(f"DROP TABLE IF EXISTS {tmp_table}")
     publish_generation(spark, path, gen, keep=keep)
+
+
+def maintain_bucketed(
+    spark: SparkSession,
+    path: str,
+    key: str,
+    buckets: int = 32,
+    max_files_per_bucket: int = 8,
+    keep: int = 1,
+) -> int:
+    """The maintenance rule for an append-accreted bucketed store: past
+    ``max_files_per_bucket`` data files per bucket on average (each
+    append adds up to one file per bucket it touches, which every probe
+    then pays in scan-footer and task overhead), compact it with
+    :func:`compact_bucketed`. A healthy store costs one file listing.
+    Returns the number of data files compacted, 0 when nothing ran."""
+    from connect_server_spark.fsutil import fs_list, resolve_store
+
+    live = resolve_store(spark, path)
+    n_files = sum(1 for f in fs_list(spark, live) if f.endswith(".parquet"))
+    if n_files <= buckets * max_files_per_bucket:
+        return 0
+    compact_bucketed(spark, path, key, buckets, keep=keep)
+    return n_files
 
 
 def write_partitioned(

@@ -252,7 +252,11 @@ def composed_ingest_sink(
     only past ``maintain_skew_threshold``. It runs post-commit so a
     crashed maintenance pass replays into "nothing fresh" + a
     re-measure, and the rebalance swap itself is the generation-pointer
-    flip — the batch convergence contract is untouched either way.
+    flip — the batch convergence contract is untouched either way. The
+    same cadence compacts the BM25 stores and the four bucketed dedup
+    stores (minhash band index and shingles, winnow postings and
+    fingerprint sets) past the files-per-bucket rule of
+    :func:`~connect_server_spark.storage.maintain_bucketed`.
 
     ``sketch_telemetry=True`` records each batch's COMMITTED corpus
     contribution in the HLL sketch ledger
@@ -500,6 +504,17 @@ def composed_ingest_sink(
             maintain_bm25_index(
                 spark, paths["bm25_index"], keep=maintain_keep
             )
+            # the dedup sketch stores accrete files per append like
+            # BM25's terms/doclens, under the same files-per-bucket rule
+            from connect_server_spark.storage import maintain_bucketed
+
+            for store, key in (
+                (paths["minhash_index"], "band_hash"),
+                (paths["shingles"], id_col),
+                (f"{paths['winnow_index']}/posts", "fp"),
+                (f"{paths['winnow_index']}/fps", "id"),
+            ):
+                maintain_bucketed(spark, store, key, keep=maintain_keep)
             if serve_pair:
                 # the PAIR loop, never two solo loops: the refine
                 # store's telemetry triggers, and the PQ store is

@@ -1422,3 +1422,54 @@ def test_winnow_guarantee_property_on_mirror():
         assert fa & fb, (k, window, a, b)
 
     check()
+
+
+def test_embedding_incremental_reads_one_ivf_generation(spark, tmp_path, monkeypatch):
+    """The embedding probe resolves the IVF store ONCE: when a rebalance
+    publishes between two resolves (simulated by a ``resolve_store``
+    that serves generation A first and B afterwards), centroids and
+    cells still come from one generation and the twin is found. The two
+    generations number the same cells in opposite orders, so new
+    centroids paired with old cell ids would probe the wrong cell."""
+    import numpy as np
+
+    from connect_server_spark import fsutil
+    from connect_server_spark.operators.dedup import (
+        embedding_neardup_against_index,
+    )
+    from connect_server_spark.operators.similarity import (
+        read_ivf_centroids,
+        write_ivf_index,
+    )
+
+    rng = np.random.RandomState(13)
+    centers = rng.randn(4, 16)
+    rows = [(i, (centers[i % 4] + 0.1 * rng.randn(16)).tolist()) for i in range(80)]
+    corpus = spark.createDataFrame(rows, ["vec_id", "embedding"])
+    gen_a, gen_b = str(tmp_path / "gen_a"), str(tmp_path / "gen_b")
+    write_ivf_index(corpus, gen_a, nlist=8)
+    write_ivf_index(corpus, gen_b, centroids=read_ivf_centroids(spark, gen_a)[::-1])
+    twin = (np.array(rows[5][1]) + 0.01 * rng.randn(16)).tolist()
+    batch = spark.createDataFrame([(9001, twin)], ["vec_id", "embedding"])
+
+    root = str(tmp_path / "ivf")
+    real = fsutil.resolve_store
+    served = []
+
+    def flipping(spark_, path, generation=None):
+        if path.rstrip("/") == root:
+            live = gen_b if any(p == root for p, _ in served) else gen_a
+        else:
+            live = real(spark_, path, generation)
+        served.append((path.rstrip("/"), live))
+        return live
+
+    monkeypatch.setattr(fsutil, "resolve_store", flipping)
+    pairs = {
+        (r.new_id, r.corpus_id)
+        for r in embedding_neardup_against_index(
+            batch, spark, root, threshold=0.9, nprobe=1
+        ).collect()
+    }
+    assert {live for _, live in served} == {gen_a}
+    assert (9001, 5) in pairs

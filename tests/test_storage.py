@@ -777,3 +777,70 @@ def test_concurrent_bucketed_stores_in_one_session(spark, tmp_path):
             memo.shared.pop(k)
     for i, rows in enumerate(got):
         assert rows == [(k, i) for k in range(60)]
+
+
+def test_maintain_bucketed_compacts_appended_minhash_store(spark, tmp_path):
+    """Past its files-per-bucket threshold an appended minhash store is
+    compacted by ``maintain_bucketed``; the indexed probe returns the
+    same pairs before and after, a healthy store is left alone, and an
+    append after the compaction is visible to the probe."""
+    import random
+
+    from connect_server_spark.fsutil import fs_list, resolve_store
+    from connect_server_spark.operators.dedup import (
+        minhash_neardup_against_index,
+        write_minhash_index,
+    )
+    from connect_server_spark.storage import maintain_bucketed
+
+    rng = random.Random(5)
+    vocab = [f"w{i}" for i in range(400)]
+    texts = [" ".join(rng.choice(vocab) for _ in range(30)) for _ in range(40)]
+
+    def frame(rows):
+        return spark.createDataFrame(rows, "id long, text string")
+
+    ix, sh = str(tmp_path / "index"), str(tmp_path / "shingles")
+    write_minhash_index(
+        frame([(i, texts[i]) for i in range(10)]), "id", "text", ix, sh,
+        store_buckets=4,
+    )
+    for lo in (10, 20, 30):
+        write_minhash_index(
+            frame([(i, texts[i]) for i in range(lo, lo + 10)]), "id", "text",
+            ix, sh, mode="append", store_buckets=4,
+        )
+
+    def n_files(path):
+        live = resolve_store(spark, path)
+        return sum(1 for f in fs_list(spark, live) if f.endswith(".parquet"))
+
+    # near-copies (first word dropped) of one document per write
+    batch = frame([(1000 + i, texts[i].split(" ", 1)[1]) for i in (3, 15, 37)])
+
+    def probe():
+        return {
+            (r.new_id, r.corpus_id)
+            for r in minhash_neardup_against_index(
+                batch, spark, ix, sh, "id", "text", store_buckets=4
+            ).collect()
+        }
+
+    before = probe()
+    assert {(1003, 3), (1015, 15), (1037, 37)} <= before
+    files = {ix: n_files(ix), sh: n_files(sh)}
+    assert min(files.values()) > 4
+    for path, key in ((ix, "band_hash"), (sh, "id")):
+        assert maintain_bucketed(
+            spark, path, key, 4, max_files_per_bucket=1
+        ) == files[path]
+        assert n_files(path) <= 4
+        assert maintain_bucketed(spark, path, key, 4, max_files_per_bucket=1) == 0
+    assert probe() == before
+
+    write_minhash_index(
+        frame([(40, "fresh text " + texts[0])]), "id", "text", ix, sh,
+        mode="append", store_buckets=4,
+    )
+    batch = frame([(2000, "fresh text " + texts[0])])
+    assert (2000, 40) in probe()
