@@ -27,8 +27,8 @@ def pytest_configure(config):
         "slow: multi-minute evidence drill (composed loops, crash-replay "
         "sequences) — deselected by default so the serial suite fits an "
         "external CI/driver budget; run with --runslow (or "
-        "SPARK_GRAFT_RUN_SLOW=1) for the full suite. The full-suite "
-        "record for each round lives in PYTEST_r<N>.txt.",
+        "SPARK_GRAFT_RUN_SLOW=1) for the full suite. The record of "
+        "the ingest drills lives in PYTEST_ingest_drills.txt.",
     )
 
 
@@ -56,12 +56,8 @@ _SLOW_DRILLS = (
     "test_streaming.py::test_composed_ingest_",
     "test_streaming.py::test_crawl_leg_",
     "test_streaming.py::test_maintenance_retention",
-    "test_streaming.py::test_streaming_ingest_dedup_against_index",
-    "test_streaming.py::test_ingest_dedup_",
     "test_streaming.py::test_curation_decision_stream_stream_join",
     "test_streaming.py::test_foreachbatch_idempotent_status_sink",
-    "test_streaming.py::test_streaming_search_ingest_",
-    "test_streaming.py::test_streaming_embedding_ingest_dedup",
     "test_checkpoint_mode.py::test_composed_ingest_survives_executor_sigkill",
     "test_checkpoint_mode.py::test_reliable_mode_survives_executor_sigkill_midrun",
     "test_checkpoint_mode.py::test_boundary_recovery_contrast",
@@ -115,7 +111,7 @@ def pytest_collection_modifyitems(config, items):
         return
     skip = pytest.mark.skip(
         reason="slow evidence drill — run with --runslow "
-        "(full-suite record: PYTEST_r13.txt)"
+        "(ingest-drill record: PYTEST_ingest_drills.txt)"
     )
     for item in items:
         if "slow" in item.keywords:

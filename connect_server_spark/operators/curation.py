@@ -314,8 +314,8 @@ def make_curation_gate(
     materialize: bool = False,
 ):
     """A reusable batch→batch curation gate for ingest pipelines (the
-    ``gate=`` hook of the streaming dedup sinks, and the gate stage of
-    the batch ``curation_full`` composite): quality floor, token bounds,
+    ``gate=`` hook of the composed streaming ingest sink, and the gate
+    stage of the batch ``curation_full`` composite): quality floor, token bounds,
     language requirement, the published Gopher/C4 document gates, unigram
     LM routing, and bloom decontamination — all scan-stage except the
     LM score join (broadcast vocab + one per-doc agg + an id semi-join)

@@ -549,18 +549,16 @@ def minhash_neardup_against_index(
     )
     cands = _posting_candidates(cb, index_path, nb, "band_hash")
     a = nd.select(F.col(id_col).alias("new_id"), F.col("_sh").alias("_sa"))
-    b = (
-        read_bucketed(spark, shingle_path, id_col, store_buckets)
-        .select(F.col(id_col).alias("corpus_id"), F.col("shingles").alias("_sb"))
-        # a replayed mode="append" ingest re-writes IDENTICAL shingle
-        # rows (at-least-once); without this the verify join would emit
-        # one pair per duplicate store row. Exchange-free by layout —
-        # the store is bucketed on the id (same pattern as BM25's
-        # doclens and the IVF cell store).
-        .dropDuplicates(["corpus_id"])
+    b = read_bucketed(spark, shingle_path, id_col, store_buckets).select(
+        F.col(id_col).alias("corpus_id"), F.col("shingles").alias("_sb")
     )
-    return _set_jaccard(cands, a, b, threshold, store=shingle_path).select(
-        "new_id", "corpus_id", "jaccard"
+    # a replayed mode="append" ingest re-writes IDENTICAL shingle rows
+    # (at-least-once), so a pair can verify once per copy: the verified
+    # pairs are deduplicated, never the O(corpus) store
+    return (
+        _set_jaccard(cands, a, b, threshold, store=shingle_path)
+        .select("new_id", "corpus_id", "jaccard")
+        .distinct()
     )
 
 
@@ -1131,9 +1129,9 @@ def embedding_neardup_against_index(
     broadcast budget — ~1 GiB ≈ 250k rows of 1024-dim float32 at the
     default threshold. A larger daily batch is sliced upstream and
     gated slice-by-slice (each slice appends its survivors before the
-    next probes — exactly the streaming ``foreachBatch`` loop in
-    :mod:`~connect_server_spark.streaming.ingest_dedup`); total cost
-    stays O(batch) and the store still never moves.
+    next probes — exactly the streaming ``foreachBatch`` loop of
+    :func:`~connect_server_spark.streaming.daily_ingest.composed_ingest_sink`);
+    total cost stays O(batch) and the store still never moves.
 
     Returns ``(new_id, corpus_id, cosine)`` with ``cosine >= threshold``.
     """
@@ -1551,8 +1549,8 @@ def write_winnow_index(
 
     ``mode="append"`` is the daily-ingest leg: survivors append their
     fingerprint rows bucket-correctly; a replayed append re-writes
-    IDENTICAL rows, which the probe drops layout-free (the same
-    at-least-once discipline as the minhash and IVF stores). Compact
+    IDENTICAL rows, which the probe absorbs on batch-sized rows (the
+    same at-least-once discipline as the minhash and IVF stores). Compact
     with :func:`~connect_server_spark.storage.compact_bucketed`."""
     from connect_server_spark.storage import write_bucketed_path
 
@@ -1585,9 +1583,9 @@ def winnow_neardup_against_index(
     The hot-fingerprint cap is computed AT PROBE TIME against the live
     store: the store postings restricted to the batch's fingerprints
     (a semi-join that is Exchange-free on the store side by bucket
-    layout) are counted per fingerprint — a narrow, map-side-combined
-    (fp, df) aggregate whose output is batch-fingerprint-sized — and
-    fingerprints past ``max_df`` are excluded from CANDIDACY (the exact
+    layout) have their distinct documents counted per fingerprint — a
+    narrow (fp, df) aggregate whose output is batch-fingerprint-sized —
+    and fingerprints past ``max_df`` are excluded from CANDIDACY (the exact
     verify still scores them: the cap gates which pairs surface, never
     a surfaced pair's Jaccard, exactly :func:`winnow_neardup_pairs`'s
     contract). So a boilerplate fingerprint shared by a million corpus
@@ -1609,17 +1607,17 @@ def winnow_neardup_against_index(
         F.col("id").alias("new_id"), F.explode("fps").alias("fp")
     )
     store_posts = read_bucketed(spark, posts_path, "fp", store_buckets)
-    # at-least-once appends: identical replayed rows must not double-
-    # count df or duplicate candidates
-    store_posts = store_posts.dropDuplicates(["id", "fp"])
     probed = store_posts.join(
         probe_side(spark, posts_path, n_posts.select("fp").distinct()),
         "fp",
         "leftsemi",
     )
+    # at-least-once appends re-write IDENTICAL (id, fp) rows: the df
+    # counts distinct documents over the batch's postings only, and the
+    # candidates and verified pairs are distinct below
     ok_fps = (
         probed.groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("_df"))
+        .agg(F.countDistinct("id").alias("_df"))
         .filter(F.col("_df") <= max_df)
         .select("fp")
     )
@@ -1630,11 +1628,11 @@ def winnow_neardup_against_index(
         "fp",
     )
     a = nf.select(F.col("id").alias("new_id"), F.col("fps").alias("_sa"))
-    b = (
-        read_bucketed(spark, fps_path, "id", store_buckets)
-        .select(F.col("id").alias("corpus_id"), F.col("fps").alias("_sb"))
-        .dropDuplicates(["corpus_id"])
+    b = read_bucketed(spark, fps_path, "id", store_buckets).select(
+        F.col("id").alias("corpus_id"), F.col("fps").alias("_sb")
     )
-    return _set_jaccard(cands, a, b, threshold, store=fps_path).select(
-        "new_id", "corpus_id", "shared", "jaccard"
+    return (
+        _set_jaccard(cands, a, b, threshold, store=fps_path)
+        .select("new_id", "corpus_id", "shared", "jaccard")
+        .distinct()
     )

@@ -89,8 +89,8 @@ def asof_join(
     hash partitioning) + one sort. No per-key blowup: a key with a
     million rows costs a million-row sorted partition, not a million²
     join. A single pathologically hot key serializes its own sort — at
-    that point pre-bucket the inputs by key (storage.write_bucketed) so
-    the Exchange disappears entirely.
+    that point pre-bucket the inputs by key
+    (storage.write_bucketed_path) so the Exchange disappears entirely.
     """
     keys = [on] if isinstance(on, str) else list(on)
     if direction not in ("backward", "forward", "nearest"):

@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 from connect_server_spark import memo
 
 __all__ = [
-    "write_bucketed",
     "write_bucketed_path",
     "read_bucketed",
     "ensure_bucketed_table",
@@ -35,32 +34,12 @@ __all__ = [
     "status_point_read",
     "compact",
     "compact_partitioned",
-    "read_table",
     "read_snapshot",
     "ledger_batch_ids",
     "merge_batch_ledger",
     "salted_collect_set",
     "snapshot_diff",
 ]
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    key: str,
-    buckets: int = 32,
-    mode: str = "overwrite",
-) -> None:
-    """Persist ``df`` as a parquet table bucketed (and sorted) by
-    ``key``. Two tables written with the same (key, buckets) spec join
-    on that key with no Exchange on either side."""
-    (
-        df.write.mode(mode)
-        .format("parquet")
-        .bucketBy(buckets, key)
-        .sortBy(key)
-        .saveAsTable(table)
-    )
 
 
 def _bucket_table_name(path: str) -> str:
@@ -192,11 +171,14 @@ def write_bucketed_path(
     mode: str = "overwrite",
     sort_key: str | None = None,
 ) -> None:
-    """:func:`write_bucketed` addressed by filesystem PATH (external
-    table): the layout for persisted index/feature stores that outlive
-    any one session. A store written here joins on ``key`` with **zero
-    Exchange on the store side** — batch-sized probes shuffle to the
-    store's bucketing; the O(corpus) store never moves.
+    """Persist ``df`` at filesystem PATH as an external parquet table
+    bucketed (and sorted) by ``key``: the layout for persisted
+    index/feature stores that outlive any one session. Two stores
+    written with the same (key, buckets) spec join on that key with no
+    Exchange on either side, and a store joins a batch-sized probe on
+    ``key`` with **zero Exchange on the store side** — the probe
+    shuffles to the store's bucketing; the O(corpus) store never
+    moves.
 
     ``mode="append"`` appends bucket-suffixed files (the daily-ingest
     leg); Spark validates the spec against the registered table, so an
@@ -621,10 +603,6 @@ def compact(
         raise IOError(f"compact: could not swap {tmp} into {path}")
     fs.delete(old, True)
     return n
-
-
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
 
 
 def ledger_batch_ids(spark: SparkSession, live: str) -> list[int]:

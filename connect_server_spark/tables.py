@@ -22,8 +22,6 @@ __all__ = [
     "load_table",
     "load_events",
     "normalize_event_ts",
-    "load_all",
-    "register_views",
     "spread_scan",
 ]
 
@@ -127,16 +125,6 @@ def load_events(spark: SparkSession, sf_dir: str | None = None) -> DataFrame:
     """``events`` with ``ts`` normalized to an ``event_ts`` timestamp
     (see :func:`normalize_event_ts` for the dtype-robust conversion)."""
     return normalize_event_ts(load_table(spark, "events", sf_dir))
-
-
-def load_all(spark: SparkSession, sf_dir: str | None = None) -> dict[str, DataFrame]:
-    return {t: load_table(spark, t, sf_dir) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str | None = None) -> None:
-    """Register every table as a temp view so spark.sql() can use them."""
-    for name, df in load_all(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
 
 
 def dataset_cache_key(sf_dir: str, table: str) -> str:

@@ -1388,6 +1388,51 @@ def test_winnow_index_append_and_hot_fp_cap(spark, tmp_path):
     assert capped == uncapped  # the cap never changed a surfaced score
 
 
+def test_indexed_probes_absorb_replayed_store_rows(spark, tmp_path):
+    """A replayed ingest append re-writes IDENTICAL rows into the
+    minhash and winnow stores. After the corpus is appended twice more,
+    both probes return each pair once with its original ``jaccard`` /
+    ``shared``, and the winnow df cap counts a corpus document once:
+    with ``max_df=1`` the fingerprints that only doc 1 holds still
+    generate its candidate."""
+    from connect_server_spark.operators.dedup import (
+        minhash_neardup_against_index,
+        winnow_neardup_against_index,
+        write_minhash_index,
+        write_winnow_index,
+    )
+
+    corpus = spark.createDataFrame([(1, DOC), (2, OTHER)], ["doc_id", "text"])
+    new = spark.createDataFrame([(101, NEAR)], ["doc_id", "text"])
+    ix, sh = str(tmp_path / "ix"), str(tmp_path / "sh")
+    widx = str(tmp_path / "widx")
+
+    def append(mode):
+        write_minhash_index(corpus, "doc_id", "text", ix, sh, mode=mode)
+        write_winnow_index(corpus, "doc_id", "text", widx, mode=mode)
+
+    def probes():
+        mh = minhash_neardup_against_index(
+            new, spark, ix, sh, "doc_id", "text", threshold=0.3
+        )
+        wn = winnow_neardup_against_index(
+            new, spark, widx, "doc_id", "text", threshold=0.3, max_df=1
+        )
+        return (
+            sorted(map(tuple, mh.collect())),
+            sorted(map(tuple, wn.collect())),
+        )
+
+    append("overwrite")
+    before = probes()
+    assert [p[:2] for p in before[0]] == [(101, 1)]
+    assert [p[:2] for p in before[1]] == [(101, 1)]
+    append("append")
+    append("append")
+    assert spark.read.parquet(sh).count() == 6
+    assert probes() == before
+
+
 def test_winnow_guarantee_property_on_mirror():
     """Hypothesis sweep of the winnowing theorem on the python mirror
     (mirror ≡ Spark is pinned separately): any two token sequences

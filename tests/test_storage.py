@@ -5,9 +5,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from connect_server_spark.storage import (
-    read_table,
+    read_bucketed,
     salted_collect_set,
-    write_bucketed,
+    write_bucketed_path,
 )
 
 
@@ -21,26 +21,23 @@ def no_broadcast(spark):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-def test_bucketed_join_has_no_exchange(spark, no_broadcast):
+def test_bucketed_join_has_no_exchange(spark, no_broadcast, tmp_path):
     status = spark.range(0, 1000).select(
         (F.col("id") % 97).alias("source_id"), F.col("id").alias("payload")
     )
     subs = spark.range(0, 200).select(
         (F.col("id") % 97).alias("source_id"), F.col("id").alias("sub")
     )
-    write_bucketed(status, "t_status_b", "source_id", buckets=8)
-    write_bucketed(subs, "t_subs_b", "source_id", buckets=8)
-    try:
-        joined = read_table(spark, "t_status_b").join(
-            read_table(spark, "t_subs_b"), "source_id"
-        )
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        # co-location must not change results
-        assert joined.count() == status.join(subs, "source_id").count()
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_status_b")
-        spark.sql("DROP TABLE IF EXISTS t_subs_b")
+    status_path, subs_path = str(tmp_path / "status"), str(tmp_path / "subs")
+    write_bucketed_path(status, status_path, "source_id", buckets=8)
+    write_bucketed_path(subs, subs_path, "source_id", buckets=8)
+    joined = read_bucketed(spark, status_path, "source_id", buckets=8).join(
+        read_bucketed(spark, subs_path, "source_id", buckets=8), "source_id"
+    )
+    plan = joined._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    # co-location must not change results
+    assert joined.count() == status.join(subs, "source_id").count()
 
 
 def test_status_layout_point_read_prunes_partitions(spark, sf_dir, tmp_path):

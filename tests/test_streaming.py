@@ -239,311 +239,6 @@ def test_curation_decision_stream_stream_join(spark, tmp_path):
     assert got["s2"] == "hibernating"  # window expired with no decision
 
 
-def test_streaming_ingest_dedup_against_index(spark, tmp_path):
-    """The daily-ingest loop end-to-end as a stream (r4 verdict Next #7):
-    new-batch micro-batches → persisted band-index probe → exact verify →
-    idempotent survivor append → O(batch) index growth. Pinned both ways:
-
-    * a batch-2 document that near-dups a batch-1 SURVIVOR (absent from
-      the original corpus) is dropped — the index genuinely grew;
-    * the streaming run is row-identical to folding the same batches
-      sequentially through ``minhash_neardup_against`` in batch mode
-      (deterministic seeds make signatures agree by construction).
-    """
-    import json
-    import os
-
-    from connect_server_spark.operators.dedup import (
-        minhash_neardup_against,
-        write_minhash_index,
-    )
-    from connect_server_spark.streaming.ingest_dedup import dedup_ingest_sink
-
-    def words(tag, n=21):
-        return " ".join(f"{tag}w{j}" for j in range(n))
-
-    def near(text):  # drop the last two words: shingle Jaccard ~0.89
-        return " ".join(text.split()[:-2])
-
-    corpus_rows = [(i, words(f"c{i}")) for i in range(1, 11)]
-    corpus = spark.createDataFrame(corpus_rows, "doc_id long, text string")
-    ix = str(tmp_path / "ix")
-    sh = str(tmp_path / "sh")
-    write_minhash_index(corpus, "doc_id", "text", ix, sh)
-
-    b1_rows = [
-        (101, near(corpus_rows[0][1])),  # near-dup of corpus doc 1 → drop
-        (102, words("n102")),            # novel → survive
-    ]
-    b2_rows = [
-        (201, near(words("n102"))),      # near-dup of batch-1 SURVIVOR → drop
-        (202, words("n202")),            # novel → survive
-        (203, near(corpus_rows[1][1])),  # near-dup of corpus doc 2 → drop
-    ]
-    src = tmp_path / "in"
-    src.mkdir()
-    f1, f2 = src / "b1.json", src / "b2.json"
-    f1.write_text("\n".join(json.dumps({"doc_id": i, "text": t}) for i, t in b1_rows))
-    f2.write_text("\n".join(json.dumps({"doc_id": i, "text": t}) for i, t in b2_rows))
-    # FileStreamSource orders batches by mtime: force b1 strictly first
-    past = os.stat(f2).st_mtime - 60
-    os.utime(f1, (past, past))
-
-    surv = str(tmp_path / "survivors")
-    pairs = str(tmp_path / "pairs")
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .json(str(src))
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            dedup_ingest_sink(spark, ix, sh, surv, pairs, "doc_id", "text")
-        )
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    got_surv = {r.doc_id for r in spark.read.parquet(surv).collect()}
-    got_pairs = {
-        (r.new_id, r.corpus_id) for r in spark.read.parquet(pairs).collect()
-    }
-    assert got_surv == {102, 202}
-    assert (201, 102) in got_pairs  # caught ONLY because the index grew
-
-    # batch twin: fold the same two batches sequentially
-    b1 = spark.createDataFrame(b1_rows, "doc_id long, text string")
-    b2 = spark.createDataFrame(b2_rows, "doc_id long, text string")
-    p1 = minhash_neardup_against(b1, corpus, "doc_id", "text", threshold=0.5)
-    s1 = b1.join(
-        p1.select(F.col("new_id").alias("doc_id")).distinct(), "doc_id", "left_anti"
-    )
-    p2 = minhash_neardup_against(
-        b2, corpus.unionByName(s1), "doc_id", "text", threshold=0.5
-    )
-    s2 = b2.join(
-        p2.select(F.col("new_id").alias("doc_id")).distinct(), "doc_id", "left_anti"
-    )
-    expected_surv = {r.doc_id for r in s1.unionByName(s2).collect()}
-    expected_pairs = {
-        (r.new_id, r.corpus_id) for r in p1.unionByName(p2).collect()
-    }
-    assert got_surv == expected_surv
-    assert got_pairs == expected_pairs
-
-
-def test_ingest_dedup_sink_replay_is_idempotent_on_survivors(spark, tmp_path):
-    """Checkpoint-restart semantics as documented in ``ingest_dedup``:
-    replaying a micro-batch re-appends NO survivors (exactly-once table)
-    and duplicates only the pairs log / index rows (at-least-once, both
-    keyed so duplicates are harmless — band candidates are distinct-ed
-    before the verify)."""
-    from connect_server_spark.operators.dedup import (
-        minhash_neardup_against_index,
-        write_minhash_index,
-    )
-    from connect_server_spark.streaming.ingest_dedup import dedup_ingest_sink
-
-    def words(tag, n=21):
-        return " ".join(f"{tag}w{j}" for j in range(n))
-
-    corpus = spark.createDataFrame(
-        [(i, words(f"c{i}")) for i in range(1, 6)], "doc_id long, text string"
-    )
-    ix, sh = str(tmp_path / "ix"), str(tmp_path / "sh")
-    write_minhash_index(corpus, "doc_id", "text", ix, sh)
-
-    batch = spark.createDataFrame(
-        [
-            (101, " ".join(words("c1").split()[:-2])),  # near-dup → drop
-            (102, words("n102")),                       # novel → survive
-        ],
-        "doc_id long, text string",
-    )
-    surv, pairs = str(tmp_path / "survivors"), str(tmp_path / "pairs")
-    sink = dedup_ingest_sink(spark, ix, sh, surv, pairs, "doc_id", "text")
-    sink(batch, 0)
-    first_surv = sorted(r.doc_id for r in spark.read.parquet(surv).collect())
-    sink(batch, 0)  # the replay
-    again_surv = sorted(r.doc_id for r in spark.read.parquet(surv).collect())
-    assert first_surv == again_surv == [102]
-
-    # replayed batch probes an index already containing 102, so the
-    # replayed rows pair 101→c1 twice AND see the batch's own survivor;
-    # keyed consumers dedup — and a FRESH probe of the grown index still
-    # returns exactly the original near-dup pair set
-    reprobe = minhash_neardup_against_index(
-        spark.createDataFrame([(301, words("n102"))], "doc_id long, text string"),
-        spark, ix, sh, "doc_id", "text",
-    )
-    assert {(r.new_id, r.corpus_id) for r in reprobe.collect()} == {(301, 102)}
-
-
-def test_ingest_dedup_replay_pairs_log_has_no_self_pairs(spark, tmp_path):
-    """Review pin: a replayed batch probes an index already holding its
-    own survivors; without the self-pair filter those collisions would
-    (a) pollute the pairs log with (id, id) rows no keyed dedup can
-    remove and (b) anti-join the replayed batch's novel docs OUT of the
-    survivor set under the index-first write order. Both stay clean."""
-    from connect_server_spark.streaming.ingest_dedup import dedup_ingest_sink
-    from connect_server_spark.operators.dedup import write_minhash_index
-
-    def words(tag, n=21):
-        return " ".join(f"{tag}w{j}" for j in range(n))
-
-    corpus = spark.createDataFrame(
-        [(i, words(f"c{i}")) for i in range(1, 6)], "doc_id long, text string"
-    )
-    ix, sh = str(tmp_path / "ix"), str(tmp_path / "sh")
-    write_minhash_index(corpus, "doc_id", "text", ix, sh)
-    batch = spark.createDataFrame(
-        [(102, words("n102"))], "doc_id long, text string"
-    )
-    surv, pairs = str(tmp_path / "surv"), str(tmp_path / "pairs")
-    sink = dedup_ingest_sink(spark, ix, sh, surv, pairs, "doc_id", "text")
-    sink(batch, 0)
-    sink(batch, 0)  # replay: 102 now collides with its own index entry
-    assert {r.doc_id for r in spark.read.parquet(surv).collect()} == {102}
-    logged = spark.read.parquet(pairs)
-    assert logged.filter("new_id = corpus_id").count() == 0
-    assert logged.count() == 0  # nothing near-dups 102 here at all
-
-
-def test_streaming_embedding_ingest_dedup(spark, tmp_path):
-    """The embedding ingest loop as a stream: batch-1 near-twin of a
-    corpus vector dropped, novel survives and grows the IVF index,
-    batch-2 near-twin of that SURVIVOR is dropped (index genuinely
-    grew) — mirroring the minhash sink's pins."""
-    import json
-    import os
-
-    import numpy as np
-
-    from connect_server_spark.operators.similarity import write_ivf_index
-    from connect_server_spark.streaming.ingest_dedup import (
-        embedding_ingest_sink,
-    )
-
-    rng = np.random.RandomState(31)
-    centers = rng.randn(4, 12)
-    corpus_rows = [
-        (i, (centers[i % 4] + 0.1 * rng.randn(12)).tolist()) for i in range(60)
-    ]
-    corpus = spark.createDataFrame(corpus_rows, ["vec_id", "embedding"])
-    ix = str(tmp_path / "ivf")
-    write_ivf_index(corpus, ix, nlist=8)
-
-    novel = rng.randn(12)
-    novel = (novel / np.linalg.norm(novel) * 3).tolist()
-    b1 = [
-        (101, (np.array(corpus_rows[7][1]) + 0.01).tolist()),  # twin → drop
-        (102, novel),                                          # → survive
-    ]
-    b2 = [
-        (201, (np.array(novel) + 0.01).tolist()),  # twin of SURVIVOR → drop
-        (202, (-np.array(novel)).tolist()),        # anti-parallel → survive
-    ]
-    src = tmp_path / "in"
-    src.mkdir()
-    f1, f2 = src / "b1.json", src / "b2.json"
-    f1.write_text("\n".join(
-        json.dumps({"vec_id": i, "embedding": v}) for i, v in b1))
-    f2.write_text("\n".join(
-        json.dumps({"vec_id": i, "embedding": v}) for i, v in b2))
-    past = os.stat(f2).st_mtime - 60
-    os.utime(f1, (past, past))
-
-    surv, pairs = str(tmp_path / "surv"), str(tmp_path / "pairs")
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<double>")
-        .option("maxFilesPerTrigger", "1")
-        .json(str(src))
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            embedding_ingest_sink(spark, ix, surv, pairs, threshold=0.9)
-        )
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    got = {r.vec_id for r in spark.read.parquet(surv).collect()}
-    assert got == {102, 202}
-    logged = {(r.new_id, r.corpus_id)
-              for r in spark.read.parquet(pairs).collect()}
-    assert (101, 7) in logged
-    assert (201, 102) in logged  # caught only because the index grew
-
-
-def test_ingest_dedup_with_curation_gate(spark, tmp_path):
-    """Ingest-time curation composed into the streaming dedup loop: a
-    micro-batch row that fails the quality floor or leaks a benchmark
-    n-gram is dropped BEFORE the probe — it never reaches the pairs log,
-    the survivor table, or the index — while clean novel docs survive
-    and near-dups of the corpus are still deduped."""
-    from connect_server_spark.operators.curation import (
-        benchmark_bloom,
-        make_curation_gate,
-    )
-    from connect_server_spark.operators.dedup import write_minhash_index
-    from connect_server_spark.streaming.ingest_dedup import dedup_ingest_sink
-
-    def words(tag):
-        # stopword-rich (passes the quality floor) but every 6-gram
-        # contains a tag-specific token, so benchmark grams are unique
-        # to the benchmark document — max stopword run length is 2
-        return " ".join(
-            f"the {tag}x{j} of {tag}y{j} and {tag}z{j} is" for j in range(4)
-        )
-
-    corpus = spark.createDataFrame(
-        [(i, words(f"c{i}")) for i in range(1, 4)], "doc_id long, text string"
-    )
-    ix, sh = str(tmp_path / "ix"), str(tmp_path / "sh")
-    write_minhash_index(corpus, "doc_id", "text", ix, sh)
-
-    bench = spark.createDataFrame([(words("secret"),)], ["q"])
-    bloom = benchmark_bloom(bench, "q", 6)
-    gate = make_curation_gate(
-        "doc_id",
-        "text",
-        # stopword-free 4-char gibberish caps at 4.5M (0 stopword term,
-        # half word-length term, full punct term); the stopword-rich
-        # fixtures score ~6.8M
-        min_quality=5_000_000,
-        bloom=bloom,
-        ngram_n=6,
-    )
-
-    batch = spark.createDataFrame(
-        [
-            (101, "zxqv wvut qqpl mmnn zzyy xxww ccdd eeff gghh iijj"),  # low quality
-            (102, f"prefix {words('secret')} suffix"),                   # leaks benchmark
-            (103, words("novel")),                                       # clean novel
-            (104, " ".join(words("c1").split()[:-2])),                   # near-dup of corpus 1
-        ],
-        "doc_id long, text string",
-    )
-    surv, pairs = str(tmp_path / "surv"), str(tmp_path / "pairs")
-    sink = dedup_ingest_sink(
-        spark, ix, sh, surv, pairs, "doc_id", "text", gate=gate
-    )
-    sink(batch, 0)
-
-    got_surv = {r.doc_id for r in spark.read.parquet(surv).collect()}
-    assert got_surv == {103}
-    logged = {r.new_id for r in spark.read.parquet(pairs).collect()}
-    assert logged == {104}  # the near-dup was probed and caught
-    # gated-out ids never entered the index (shingle store holds only
-    # the original corpus + the surviving novel doc)
-    index_ids = {r.doc_id for r in spark.read.parquet(sh).collect()}
-    assert index_ids == {1, 2, 3, 103}
-
-
 def test_streaming_rollup_refresh_matches_batch_cascade(spark, tmp_path):
     """T6 extension: the persisted continuous aggregate. Two file
     micro-batches stream through rollup_refresh_sink; read_rollup must
@@ -765,98 +460,6 @@ def test_streaming_rollup_stale_old_dir_cleared_by_next_compaction(
                       read_rollup(spark, store, ["k"]).collect())) == baseline
 
 
-def test_streaming_search_ingest_equals_rebuild_and_replays_safely(
-    spark, tmp_path
-):
-    """The BM25 streaming ingest loop: base build + two sink batches
-    score exactly like a one-shot rebuild of the union; replaying a
-    batch (crash re-delivery) changes nothing; a re-delivered batch
-    after success writes nothing (its meta partial is never zeroed)."""
-    from pyspark.sql import functions as F
-
-    from connect_server_spark.operators.retrieval import (
-        bm25_topk,
-        bm25_topk_indexed,
-        write_bm25_index,
-    )
-    from connect_server_spark.streaming.search_ingest import (
-        search_ingest_sink,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    base = docs.filter(F.col("doc_id") % 3 == 0)
-    day1 = docs.filter(F.col("doc_id") % 3 == 1)
-    day2 = docs.filter(F.col("doc_id") % 3 == 2)
-    q = "spark merge window"
-
-    idx = str(tmp_path / "bm25_stream")
-    surv = str(tmp_path / "survivors")
-    write_bm25_index(base, "doc_id", "text", idx)
-    # the base corpus counts as already-ingested for the S8 guard
-    base.write.parquet(surv)
-
-    sink = search_ingest_sink(spark, idx, surv, "doc_id", "text")
-    sink(day1, 0)
-    sink(day2, 1)
-
-    want = [
-        (r.doc_id, r.bm25)
-        for r in bm25_topk(docs, "doc_id", "text", q, k=25).collect()
-    ]
-    got = [
-        (r.doc_id, r.bm25)
-        for r in bm25_topk_indexed(spark, idx, q, k=25).collect()
-    ]
-    assert got == want
-
-    # crash re-delivery: day2 replays under its original epoch id
-    sink(day2, 1)
-    got2 = [
-        (r.doc_id, r.bm25)
-        for r in bm25_topk_indexed(spark, idx, q, k=25).collect()
-    ]
-    assert got2 == want
-    # nothing fresh was appended to the survivors table either
-    n_surv = spark.read.parquet(surv).count()
-    assert n_surv == docs.count()
-
-
-def test_streaming_search_ingest_gate_keeps_rows_out_of_index(spark, tmp_path):
-    """Gated-out rows never reach the index or the survivors table."""
-    from pyspark.sql import functions as F
-
-    from connect_server_spark.operators.retrieval import (
-        bm25_topk_indexed,
-        write_bm25_index,
-    )
-    from connect_server_spark.streaming.search_ingest import (
-        search_ingest_sink,
-    )
-
-    idx = str(tmp_path / "bm25_gated")
-    surv = str(tmp_path / "surv_gated")
-    seed = spark.createDataFrame(
-        [(1, "alpha beta gamma")], ["doc_id", "text"]
-    )
-    write_bm25_index(seed, "doc_id", "text", idx)
-    seed.write.parquet(surv)
-
-    batch = spark.createDataFrame(
-        [(2, "alpha spam spam"), (3, "alpha beta delta")],
-        ["doc_id", "text"],
-    )
-    sink = search_ingest_sink(
-        spark, idx, surv, "doc_id", "text",
-        gate=lambda df: df.filter(~F.col("text").contains("spam")),
-    )
-    sink(batch, 0)
-    hits = {
-        r.doc_id for r in bm25_topk_indexed(spark, idx, "alpha", k=10).collect()
-    }
-    assert hits == {1, 3}
-    assert {r.doc_id for r in spark.read.parquet(surv).collect()} == {1, 3}
-
-
 # ---------------------------------------------------------------------------
 # The COMPOSED daily-ingest job: every store maintained in one foreachBatch.
 
@@ -1003,12 +606,10 @@ def _composed_state(spark, paths):
     }
 
 
-@pytest.fixture(scope="module")
-def composed_control(spark, tmp_path_factory):
-    """The never-crashed reference run: base build + b1 + b2."""
+def _composed_run(spark, root):
+    """Base build + b1 + b2 through one clean sink; returns the paths."""
     from connect_server_spark.streaming.daily_ingest import composed_ingest_sink
 
-    root = str(tmp_path_factory.mktemp("composed_control"))
     corpus, b1, b2 = _composed_fixture_rows()
     paths = _composed_build_base(spark, root, corpus)
     sink = composed_ingest_sink(
@@ -1016,7 +617,21 @@ def composed_control(spark, tmp_path_factory):
     )
     sink(_composed_batch(spark, b1), 0)
     sink(_composed_batch(spark, b2), 1)
-    return _composed_state(spark, paths)
+    return paths
+
+
+@pytest.fixture(scope="module")
+def composed_control_paths(spark, tmp_path_factory):
+    """The stores of the never-crashed reference run (read-only)."""
+    return _composed_run(
+        spark, str(tmp_path_factory.mktemp("composed_control"))
+    )
+
+
+@pytest.fixture(scope="module")
+def composed_control(spark, composed_control_paths):
+    """The never-crashed reference run: base build + b1 + b2."""
+    return _composed_state(spark, composed_control_paths)
 
 
 def test_composed_ingest_end_to_end_semantics(spark, composed_control):
@@ -1031,6 +646,189 @@ def test_composed_ingest_end_to_end_semantics(spark, composed_control):
     assert (101, 1) in st["pairs_w"]      # winnow catches the text dup too
     assert len(st["bm25"]) > 0
     assert len(st["rollup"]) > 0
+
+
+def test_composed_ingest_matches_batch_twins(
+    spark, composed_control, composed_control_paths
+):
+    """The streaming run folds like the batch functions: the text pairs
+    log equals folding b1 then b2 through ``minhash_neardup_against``,
+    each against base ∪ the survivors committed so far (so b2's
+    near-dup of a b1 survivor is only caught because the index grew),
+    and indexed BM25 serving equals a one-shot ``bm25_topk`` over
+    base ∪ survivors — same ids, same scores, same order."""
+    from connect_server_spark.operators.dedup import minhash_neardup_against
+    from connect_server_spark.operators.retrieval import (
+        bm25_topk,
+        bm25_topk_indexed,
+    )
+
+    corpus, b1, b2 = _composed_fixture_rows()
+    surv = {d for d, _ in composed_control["survivors"]}
+    schema = "doc_id long, text string"
+
+    def text_df(rows):
+        return spark.createDataFrame([(r[0], r[1]) for r in rows], schema)
+
+    seen = text_df(corpus)
+    want_pairs = set()
+    for rows in (b1, b2):
+        batch = text_df(rows)
+        pairs = minhash_neardup_against(
+            batch, seen, "doc_id", "text", threshold=0.5
+        ).filter(F.col("new_id") != F.col("corpus_id"))
+        want_pairs |= {(r.new_id, r.corpus_id) for r in pairs.collect()}
+        seen = seen.unionByName(text_df([r for r in rows if r[0] in surv]))
+    assert (201, 103) in want_pairs
+    assert set(composed_control["pairs_t"]) == want_pairs
+
+    for q in ("n202w1 c1w2 n103w3", "c4w0 c4w1 n202w2 c4w2 n103w5 c7w3"):
+        want = [
+            (r.doc_id, r.bm25)
+            for r in bm25_topk(seen, "doc_id", "text", q, k=10).collect()
+        ]
+        got = [
+            (r.doc_id, r.bm25)
+            for r in bm25_topk_indexed(
+                spark, composed_control_paths["bm25_index"], q, k=10
+            ).collect()
+        ]
+        assert len(want) >= 3
+        assert got == want
+
+
+def _store_files(paths, keys):
+    """Every parquet file path under the stores named by ``keys``."""
+    import os
+
+    out = set()
+    for key in keys:
+        for d, _, files in os.walk(paths[key]):
+            out |= {os.path.join(d, f) for f in files if f.endswith(".parquet")}
+    return out
+
+
+def test_composed_ingest_replay_of_committed_batch_writes_nothing(
+    spark, tmp_path, composed_control
+):
+    """A batch re-delivered AFTER it committed (a checkpoint restart
+    that replays the last epoch) finds nothing fresh: no survivor,
+    index, event-log or rollup file is written, and the observable
+    state equals the control. Only the at-least-once pairs logs may
+    take duplicate rows, which the keyed state absorbs."""
+    from connect_server_spark.fsutil import resolve_store
+    from connect_server_spark.streaming.daily_ingest import (
+        composed_ingest_sink,
+    )
+
+    paths = _composed_run(spark, str(tmp_path / "root"))
+    _corpus, _b1, b2 = _composed_fixture_rows()
+    written = [
+        "survivors", "minhash_index", "shingles", "ivf_index",
+        "bm25_index", "winnow_index", "events_z", "rollup",
+    ]
+    files = _store_files(paths, written)
+    n_surv = spark.read.parquet(
+        resolve_store(spark, paths["survivors"])
+    ).count()
+
+    sink = composed_ingest_sink(
+        spark, str(tmp_path / "root"), "doc_id", "text", "embedding", "ts", "v"
+    )
+    sink(_composed_batch(spark, b2), 1)  # the re-delivery
+
+    assert _store_files(paths, written) == files
+    assert spark.read.parquet(
+        resolve_store(spark, paths["survivors"])
+    ).count() == n_surv
+    assert _composed_state(spark, paths) == composed_control
+
+
+def test_gated_batch_touches_no_composed_store(spark, tmp_path):
+    """The benchmark's ingest path: the composed sink with a curation
+    ``gate=`` (the C4 document flags the benchmark uses, plus a quality
+    floor and bloom decontamination). Rows the gate drops never reach a
+    probe, pairs log, index, event log or the survivors table, and the
+    rollup counts only the rows that passed the gate; a clean novel row
+    survives and a near-dup of the corpus is still caught."""
+    from connect_server_spark.fsutil import resolve_store
+    from connect_server_spark.operators.curation import (
+        benchmark_bloom,
+        make_curation_gate,
+    )
+    from connect_server_spark.operators.retrieval import bm25_topk_indexed
+    from connect_server_spark.operators.similarity import read_ivf_cells
+    from connect_server_spark.streaming.daily_ingest import (
+        composed_ingest_sink,
+    )
+    from connect_server_spark.streaming.rollup_refresh import read_rollup
+
+    def prose(tag):
+        # stopword-rich, and every 6-gram holds a tag-specific token, so
+        # the benchmark's grams are unique to the benchmark document
+        return " ".join(
+            f"the {tag}x{j} of {tag}y{j} and {tag}z{j} is" for j in range(4)
+        )
+
+    corpus, _b1, _b2 = _composed_fixture_rows()
+    root = str(tmp_path / "root")
+    paths = _composed_build_base(spark, root, corpus)
+    bench = spark.createDataFrame([(prose("secret"),)], ["q"])
+    gate = make_curation_gate(
+        "doc_id",
+        "text",
+        # quality scores: the gibberish row 4.50M, the near-dup of the
+        # stopword-free corpus doc 1 4.68M, the prose rows ~6.9M
+        min_quality=4_600_000,
+        bloom=benchmark_bloom(bench, "q", 6),
+        ngram_n=6,
+        c4_doc=True,
+    )
+    vec = [0.0] * 8
+    rows = [
+        (301, "zxqv wvut qqpl mmnn zzyy xxww ccdd eeff gghh iijj"),  # low quality
+        (302, f"prefix {prose('secret')} suffix"),  # leaks a benchmark n-gram
+        (303, prose("novel")),  # clean novel
+        (304, corpus[0][1].rsplit(" ", 2)[0]),  # near-dup of corpus doc 1
+    ]
+    batch = _composed_batch(spark, [
+        (i, t, vec[:j] + [1.0] + vec[j + 1:], f"2024-01-02 09:{j:02d}:00", 1.0)
+        for j, (i, t) in enumerate(rows)
+    ])
+    sink = composed_ingest_sink(
+        spark, root, "doc_id", "text", "embedding", "ts", "v", gate=gate
+    )
+    sink(batch, 0)
+
+    def ids(key, col="doc_id", sub=""):
+        live = resolve_store(spark, paths[key]) + sub
+        return {r[0] for r in spark.read.parquet(live).select(col).collect()}
+
+    assert ids("survivors") == {303}
+    assert ids("pairs_text", "new_id") == {304}
+    assert (304, 1) in {
+        (r.new_id, r.corpus_id)
+        for r in spark.read.parquet(paths["pairs_text"]).collect()
+    }
+    gated = {301, 302}
+    seen = (
+        ids("shingles")
+        | ids("winnow_index", "id", "/fps")
+        | ids("events_z")
+        | {r.doc_id for r in read_ivf_cells(
+            spark, resolve_store(spark, paths["ivf_index"]), "doc_id"
+        ).collect()}
+    )
+    for key in ("pairs_text", "pairs_vec", "pairs_winnow"):
+        seen |= ids(key, "new_id") | ids(key, "corpus_id")
+    hits = bm25_topk_indexed(
+        spark, paths["bm25_index"], "zxqv wvut prefix secretx0 novelx0", k=10
+    ).collect()
+    seen |= {r.doc_id for r in hits}
+    assert seen & gated == set()
+    assert 303 in seen
+    rollup = read_rollup(spark, paths["rollup"], [], width_seconds=3600)
+    assert sum(r.n for r in rollup.collect()) == 2  # 303 and 304
 
 
 def test_composed_ingest_maintenance_cadence_is_pure_relayout(
