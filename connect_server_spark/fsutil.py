@@ -1,12 +1,12 @@
-"""Hadoop FileSystem helpers for small control-plane files and renames.
+"""Hadoop FileSystem helpers for small control-plane files and store swaps.
 
 The data plane always moves through Spark readers/writers, but sinks and
 streaming maintenance also need a few control-plane filesystem operations:
-atomic manifest writes, rename swaps, existence probes. Python's ``os`` /
-``open`` only work when the store is a local path — at 100 TB the store is
-HDFS/S3, where those calls silently operate on the driver's local disk
-instead. Everything here goes through the JVM Hadoop ``FileSystem`` API
-(the same route ``storage.compact`` uses), so the code is correct for any
+atomic manifest writes, generation publishes, existence probes. Python's
+``os`` / ``open`` only work when the store is a local path — at 100 TB the
+store is HDFS/S3, where those calls silently operate on the driver's local
+disk instead. Everything here goes through the JVM Hadoop ``FileSystem`` API
+(the route every generation publish takes), so the code is correct for any
 Hadoop-supported scheme while behaving identically on ``file:``.
 """
 
@@ -20,7 +20,6 @@ from connect_server_spark.memo import cached
 
 __all__ = [
     "fs_exists",
-    "fs_rename",
     "fs_delete",
     "fs_list",
     "write_text_atomic",
@@ -55,8 +54,8 @@ class GenerationHandle(str):
     ``base`` is the live generation name at begin time (``None`` for a
     flat, never-published store). :func:`publish_generation` compares it
     against the pointer at publish time and refuses the flip on mismatch
-    (:class:`ConcurrentPublishError`). A hand-built plain-``str`` path
-    skips the check (no epoch to compare)."""
+    (:class:`ConcurrentPublishError`); it refuses a plain-``str`` path,
+    which carries no epoch to compare."""
 
     base: "str | None" = None
 
@@ -118,27 +117,6 @@ def fs_exists(spark: SparkSession, path: str) -> bool:
         return fs.get_file_info(root).type != pafs.FileType.NotFound
     fs, jpath, _ = _fs_and_path(spark, path)
     return bool(fs.exists(jpath))
-
-
-def fs_rename(spark: SparkSession, src: str, dst: str) -> None:
-    """Rename ``src`` to ``dst``; raises if the filesystem refuses (e.g.
-    destination exists). On HDFS this is atomic; on object stores it is
-    a copy — so whole-DIRECTORY swaps must not rely on it: use the
-    generation-pointer discipline below (``publish_generation``), which
-    reduces a store swap to one small-file replace. Single small-file
-    write-tmp-then-rename within one directory remains the standard
-    job-commit primitive every Hadoop FS implements."""
-    af = _arrow_fs(src)
-    if af is not None:
-        fs, root = af
-        dst_af = _arrow_fs(dst)
-        if dst_af is None:
-            raise OSError(f"fs_rename: cross-scheme rename {src} -> {dst}")
-        fs.move(root, dst_af[1])
-        return
-    fs, jsrc, hadoop_path = _fs_and_path(spark, src)
-    if not fs.rename(jsrc, hadoop_path(dst)):
-        raise OSError(f"rename failed: {src} -> {dst}")
 
 
 def fs_delete(spark: SparkSession, path: str, recursive: bool = True) -> bool:
@@ -248,15 +226,13 @@ def _fs_signature_arrow(path: str):
     signature over a changing real store would silently freeze
     ``read_bucketed``'s refresh memo. s3a takes the Hadoop leg, whose
     view is authoritative for Spark's own scans."""
-    scheme = path.split("://", 1)[0] if "://" in path else ""
-    if scheme not in ("s3", "gs"):
-        return NotImplemented
     try:
+        af = _arrow_fs(path)
+        if af is None:
+            return NotImplemented
         import pyarrow.fs as pafs
-    except ImportError:
-        return NotImplemented
-    try:
-        fs, root = pafs.FileSystem.from_uri(path)
+
+        fs, root = af
         infos = fs.get_file_info(
             pafs.FileSelector(root, recursive=False, allow_not_found=True)
         )
@@ -437,13 +413,14 @@ def read_text(spark: SparkSession, path: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# Generation-pointer stores: object-store-safe directory swaps.
+# Generation-pointer stores: object-store-safe directory swaps, the ONE
+# way a store rewrite becomes visible to readers.
 #
-# A directory-rename swap (the old `.X._compact_old` two-rename dance) is
-# atomic on HDFS but a NON-atomic per-object copy on S3A — at 100 TB the
-# store IS an object store, so a reader could observe a half-copied index
-# directory mid-swap, and the swap cost scaled with index size. The fix is
-# the manifest-pointer indirection every table format (Iceberg/Delta) uses:
+# A directory rename is atomic on HDFS but a NON-atomic per-object copy on
+# S3A — at 100 TB the store IS an object store, so a reader could observe a
+# half-copied index directory mid-swap, and the swap cost would scale with
+# index size. Every rewrite therefore uses the manifest-pointer indirection
+# every table format (Iceberg/Delta) uses:
 #
 #   root/_CURRENT          -> names the live generation, e.g. "_gen-00000002"
 #   root/_gen-00000002/    -> the immutable payload of that generation
@@ -489,14 +466,14 @@ def _gen_name(generation: int | str) -> str:
     return f"{GENERATION_PREFIX}{int(generation):08d}"
 
 
-def _read_history(spark: SparkSession, root: str) -> list[str] | None:
+def _read_history(spark: SparkSession, root: str) -> list[str]:
     """Published-generation names (newest first, live included) from the
-    ``_HISTORY`` manifest, or None on a store published before the
-    manifest existed (legacy — pins fall back to the weaker
-    number-vs-pointer checks)."""
+    ``_HISTORY`` manifest. A missing manifest reads as an empty history:
+    only the live generation is then known to be published, and the next
+    publish writes a new manifest."""
     path = f"{root}/{HISTORY_FILE}"
     if not fs_exists(spark, path):
-        return None
+        return []
     return [
         line.strip()
         for line in read_text(spark, path).splitlines()
@@ -543,32 +520,16 @@ def resolve_store(
                 "compaction/rebalance publish"
             )
         live = read_text(spark, marker).strip()
-        history = _read_history(spark, root)
-        if history is not None:
-            # the manifest is the source of truth for what was ever
-            # PUBLISHED — a crash-orphaned build below the live number
-            # is on disk but half-written, and must not pin
-            if name != live and name not in history:
-                raise ValueError(
-                    f"resolve_store: generation {name} at {root} was "
-                    "never published (a crashed/in-flight build) or has "
-                    "been GC'd past the retention window; "
-                    "list_generations() shows what is readable"
-                )
-        else:
-
-            def _num(n: str) -> int:
-                try:
-                    return int(n[len(GENERATION_PREFIX):])
-                except ValueError:
-                    return -1
-
-            if _num(name) > _num(live):
-                raise ValueError(
-                    f"resolve_store: generation {name} at {root} is newer "
-                    f"than the live pointer ({live}) — an unpublished "
-                    "in-flight or crashed build, not a readable snapshot"
-                )
+        # the manifest is the source of truth for what was ever
+        # PUBLISHED — a crash-orphaned build below the live number is on
+        # disk but half-written, and must not pin
+        if name != live and name not in _read_history(spark, root):
+            raise ValueError(
+                f"resolve_store: generation {name} at {root} was "
+                "never published (a crashed/in-flight build) or has "
+                "been GC'd past the retention window; "
+                "list_generations() shows what is readable"
+            )
         if not fs_exists(spark, f"{root}/{name}"):
             raise ValueError(
                 f"resolve_store: generation {name} at {root} is not on "
@@ -668,13 +629,14 @@ def begin_generation(spark: SparkSession, root: str) -> GenerationHandle:
 
 
 def publish_generation(
-    spark: SparkSession, root: str, gen_path: str, keep: int = 1
+    spark: SparkSession, root: str, gen_path: GenerationHandle, keep: int = 1
 ) -> None:
     """Atomically repoint ``root``'s live generation to ``gen_path``
-    (a fully-materialized ``root/_gen-*`` child), then GC superseded
-    payloads. The flip is one small-file replace — a concurrent reader
-    resolved either the old pointer (its generation survives this
-    publish: grace) or the new one; never a mix of the two.
+    (the handle :func:`begin_generation` returned, fully materialized),
+    then GC superseded payloads. The flip is one small-file replace — a
+    concurrent reader resolved either the old pointer (its generation
+    survives this publish: grace) or the new one; never a mix of the
+    two.
 
     GC scope after the flip: ``_gen-*`` children numbered BELOW the
     published generation except the retained set — the
@@ -702,6 +664,12 @@ def publish_generation(
     pointer, the grace generation, and the rebalance delta-carry exist
     for (appenders write INTO the live generation and never move the
     pointer)."""
+    if not isinstance(gen_path, GenerationHandle):
+        raise TypeError(
+            f"publish_generation: {gen_path!r} is a plain path — pass the "
+            "GenerationHandle begin_generation returned, which carries "
+            "the epoch the publish checks"
+        )
     root = root.rstrip("/")
     gen_name = gen_path.rstrip("/").rsplit("/", 1)[1]
     if not gen_name.startswith(GENERATION_PREFIX):
@@ -723,9 +691,8 @@ def publish_generation(
     # generation was live when this build BEGAN; if the pointer moved
     # since, another publisher won the race — flipping anyway would
     # supersede its generation and GC the rows it published. Refuse
-    # loudly; the caller rebuilds from the new live payload. Plain-str
-    # paths (no epoch) keep the legacy unguarded behavior.
-    if isinstance(gen_path, GenerationHandle) and prev_name != gen_path.base:
+    # loudly; the caller rebuilds from the new live payload.
+    if prev_name != gen_path.base:
         raise ConcurrentPublishError(
             f"publish_generation: {root} moved from "
             f"{gen_path.base or '<flat>'} to {prev_name or '<flat>'} since "
@@ -736,30 +703,8 @@ def publish_generation(
     # published-generation manifest: the source of truth for which
     # on-disk dirs are real snapshots — a crash-orphaned build below
     # the live number is on disk but half-written, and must neither be
-    # retained in place of a real snapshot nor become pinnable. Legacy
-    # stores (published before the manifest existed) seed it from the
-    # previous live payload.
+    # retained in place of a real snapshot nor become pinnable
     old_history = _read_history(spark, root)
-    legacy_ambiguous: set[str] = set()
-    if old_history is None:
-        # pre-manifest store: on-disk generations other than the live
-        # one are AMBIGUOUS — an old published snapshot and a crashed
-        # half-written build look identical. Both wrong answers are
-        # bad (deleting destroys a possibly-published snapshot;
-        # trusting makes a torn payload pinnable), so they get the
-        # middle treatment: kept ONE grace publish for an operator to
-        # salvage, excluded from the manifest so pins refuse them
-        # (list_generations shows published=False), and GC'd by the
-        # publish after this one. From the first manifest write onward
-        # the ambiguity is gone.
-        legacy_ambiguous = {
-            name
-            for name in fs_list(spark, root)
-            if name.startswith(GENERATION_PREFIX)
-            and name != gen_name
-            and name != prev_name
-        }
-        old_history = [prev_name] if prev_name else []
     write_text_atomic(spark, f"{root}/{CURRENT_POINTER}", gen_name)
     # retention beyond the always-kept grace generation: the keep-1
     # newest other PUBLISHED generations stay readable as time-travel
@@ -787,8 +732,6 @@ def publish_generation(
     write_text_atomic(
         spark, f"{root}/{HISTORY_FILE}", "\n".join(history) + "\n"
     )
-    # grace-only: kept on disk this publish, never in the manifest
-    retained |= legacy_ambiguous
     for name in fs_list(spark, root):
         if name in (CURRENT_POINTER, HISTORY_FILE) or name in retained:
             continue
@@ -799,8 +742,7 @@ def publish_generation(
             fs_delete(spark, f"{root}/{name}")  # superseded or orphaned
         elif prev_name is not None:
             # previous live payload is a generation dir, so any flat
-            # child is pre-upgrade legacy (or a crashed rename-era
-            # leftover) whose grace period has passed
+            # child is the pre-upgrade payload whose grace has passed
             fs_delete(spark, f"{root}/{name}")
 
 
@@ -813,9 +755,7 @@ def list_generations(spark: SparkSession, root: str) -> list[dict]:
     never by data volume); feed ``number`` to
     ``resolve_store(generation=...)`` for a pinned time-travel read.
     ``published=False`` entries are in-flight or crashed builds —
-    listed so operators can see them; pins refuse them (``None`` on
-    legacy stores without a ``_HISTORY`` manifest, where publication
-    cannot be distinguished after the fact)."""
+    listed so operators can see them; pins refuse them."""
     root = root.rstrip("/")
     live = None
     marker = f"{root}/{CURRENT_POINTER}"
@@ -830,18 +770,12 @@ def list_generations(spark: SparkSession, root: str) -> list[dict]:
             n = int(name[len(GENERATION_PREFIX):])
         except ValueError:
             continue
-        if name == live:
-            published = True
-        elif history is not None:
-            published = name in history
-        else:
-            published = None
         out.append(
             {
                 "name": name,
                 "number": n,
                 "live": name == live,
-                "published": published,
+                "published": name == live or name in history,
                 "path": f"{root}/{name}",
             }
         )

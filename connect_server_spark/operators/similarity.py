@@ -1159,9 +1159,11 @@ def rebalance_ivf_index(
     quantizer from the CURRENT store contents and re-assign every stored
     vector, so an index whose appends drifted away from the frozen
     centroids (hot cells = serving tail latency, probe cost is
-    O(nprobe · cell_size)) returns to ~uniform cells. The maintenance
-    twin of ``storage.compact`` in the index lifecycle: appends grow the
-    index O(batch), stats watch it, rebalance restores it.
+    O(nprobe · cell_size)) returns to ~uniform cells. It is also the
+    IVF store's compaction: appends grow the index O(batch), stats
+    watch it, and rebalance rewrites centroids and cells together as
+    one new generation — the same publish every store rewrite uses
+    (``storage.compact`` for plain parquet stores).
 
     * ``nlist`` is re-derived by the fixed-cell-size rule
       (``max(16, N / target_cell_size)``) from the store's CURRENT

@@ -33,7 +33,6 @@ __all__ = [
     "write_status_layout",
     "status_point_read",
     "compact",
-    "compact_partitioned",
     "read_snapshot",
     "ledger_batch_ids",
     "merge_batch_ledger",
@@ -210,7 +209,11 @@ def write_bucketed_path(
     sort_key = sort_key or key
     df = _by_bucket(df, key, buckets)
     if mode == "overwrite":
-        from connect_server_spark.fsutil import GENERATION_PREFIX, fs_list
+        from connect_server_spark.fsutil import (
+            GENERATION_PREFIX,
+            fs_delete,
+            fs_list,
+        )
 
         name = _bucket_table_name(path)
         _drop_bucketed_table(spark, path)
@@ -222,10 +225,7 @@ def write_bucketed_path(
         for child in fs_list(spark, path):
             if child.startswith(GENERATION_PREFIX):
                 _drop_bucketed_table(spark, f"{path}/{child}")
-        hadoop_path = spark._jvm.org.apache.hadoop.fs.Path
-        jpath = hadoop_path(path)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        fs.delete(jpath, True)
+        fs_delete(spark, path)
         (
             df.write.mode("overwrite")
             .format("parquet")
@@ -505,8 +505,8 @@ def status_point_read(
     Catalyst constant-folds it to a single partition directory and the
     key equality pushes to the parquet scan — the plan touches one
     bucket's files, never the table. Resolves the generation pointer
-    (no-op on flat stores) so object-store compactions
-    (``compact_partitioned(publish_root=True)``) stay invisible here."""
+    (no-op on flat stores), so a :func:`compact` of the table is
+    invisible here."""
     from connect_server_spark.fsutil import resolve_store
 
     df = spark.read.parquet(resolve_store(spark, path))
@@ -520,28 +520,22 @@ def status_point_read(
     )
 
 
-def compact(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    shuffle: bool = False,
-    generational: bool = True,
-    keep: int = 1,
-) -> int:
-    """Rewrite a parquet directory into ~``target_file_bytes`` files.
+# output file size a compaction aims for
+COMPACT_FILE_BYTES = 128 * 1024 * 1024
+
+
+def compact(spark: SparkSession, path: str, keep: int = 1) -> int:
+    """Rewrite a parquet store into ~``COMPACT_FILE_BYTES`` files,
+    published as a new generation.
 
     Streaming sinks and idempotent appends accrete small files (every
     micro-batch / retry writes its own); at 100 TB the resulting
     footer-read and task-scheduling overhead dominates scan cost, so
-    periodic compaction is part of the table lifecycle. The new file
-    count is ``ceil(bytes_on_disk / target)``; ``shuffle=False`` uses
-    ``coalesce`` (no data movement — merges co-located files),
-    ``shuffle=True`` uses ``repartition`` for evenly-sized output when
-    the inputs are badly skewed.
+    periodic compaction is part of the table lifecycle. The new task
+    count is ``ceil(bytes_on_disk / COMPACT_FILE_BYTES)``.
 
-    ``generational=True`` (default, store roots): the compacted copy is
-    written to a new ``_gen-*`` child and the store's ``_CURRENT``
-    pointer flips in ONE small-file replace
+    The compacted copy is written to a new ``_gen-*`` child and the
+    store's ``_CURRENT`` pointer flips in ONE small-file replace
     (:func:`~connect_server_spark.fsutil.publish_generation`) —
     object-store-safe, where a directory rename is a non-atomic
     per-object copy on S3A. Readers go through
@@ -550,58 +544,53 @@ def compact(
     grace for in-flight readers, and a crash mid-rewrite leaves the
     pointer — and therefore the store — untouched.
 
-    ``generational=False`` (partition LEAVES — :func:`compact_partitioned`):
-    a ``_CURRENT`` pointer inside a leaf would be invisible to the
-    whole-table scan (underscore names are excluded from partition
-    discovery), so leaves keep the two-rename swap into DOT-PREFIXED
-    siblings (hidden from partition discovery mid-compaction and after
-    a crash, which leaves ``.*._compact_old`` — recoverable, never
-    deleted). Rename atomicity is an HDFS property; on object stores,
-    compact a partitioned table by publishing the whole table root
-    generationally instead.
+    The live layout decides the rewrite. A flat store coalesces (no
+    data movement — merges co-located files). A hive-partitioned store
+    (``a=1/b=2/`` directories) keeps its partition columns, read
+    outermost-first from the live directory names: the rewrite
+    repartitions on them, so each task writes about one file per
+    partition it owns, and writes with ``partitionBy``, so
+    ``PartitionFilters`` pruning survives the rewrite.
 
-    Returns the new file count.
+    Returns the new task count: a flat store's file count.
     """
     import math
 
     from connect_server_spark.fsutil import (
         begin_generation,
+        fs_list,
         publish_generation,
         resolve_store,
     )
 
+    live = resolve_store(spark, path)
+    # partition columns from the first leaf's relative path
+    # (a=1/b=2 → [a, b]); hidden/underscore names are not partitions
+    part_cols: list[str] = []
+    probe = live
+    while True:
+        subs = [
+            name
+            for name in fs_list(spark, probe)
+            if "=" in name and not name.startswith((".", "_"))
+        ]
+        if not subs:
+            break
+        part_cols.append(subs[0].split("=", 1)[0])
+        probe = f"{probe}/{subs[0]}"
+    df = spark.read.parquet(live)
     hadoop_path = spark._jvm.org.apache.hadoop.fs.Path
-    if generational:
-        live = resolve_store(spark, path)
-        df = spark.read.parquet(live)
-        fs = hadoop_path(live).getFileSystem(spark._jsc.hadoopConfiguration())
-        size = fs.getContentSummary(hadoop_path(live)).getLength()
-        n = max(1, math.ceil(size / target_file_bytes))
-        out = df.repartition(n) if shuffle else df.coalesce(n)
-        gen = begin_generation(spark, path)
-        out.write.mode("overwrite").parquet(gen)
-        publish_generation(spark, path, gen, keep=keep)
-        return n
-
-    df = spark.read.parquet(path)
-    jpath = hadoop_path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    size = fs.getContentSummary(jpath).getLength()
-    n = max(1, math.ceil(size / target_file_bytes))
-    out = df.repartition(n) if shuffle else df.coalesce(n)
-
-    parent, name = jpath.getParent(), jpath.getName()
-    tmp = hadoop_path(parent, f".{name}._compact_tmp")
-    old = hadoop_path(parent, f".{name}._compact_old")
-    fs.delete(tmp, True)
-    fs.delete(old, True)
-    out.write.mode("overwrite").parquet(str(tmp))
-    if not fs.rename(jpath, old):
-        raise IOError(f"compact: could not move {path} aside to {old}")
-    if not fs.rename(tmp, jpath):
-        fs.rename(old, jpath)  # roll back: original data wins
-        raise IOError(f"compact: could not swap {tmp} into {path}")
-    fs.delete(old, True)
+    fs = hadoop_path(live).getFileSystem(spark._jsc.hadoopConfiguration())
+    size = fs.getContentSummary(hadoop_path(live)).getLength()
+    n = max(1, math.ceil(size / COMPACT_FILE_BYTES))
+    if part_cols:
+        out = df.repartition(n, *[F.col(c) for c in part_cols]).write
+        out = out.partitionBy(*part_cols)
+    else:
+        out = df.coalesce(n).write
+    gen = begin_generation(spark, path)
+    out.mode("overwrite").parquet(gen)
+    publish_generation(spark, path, gen, keep=keep)
     return n
 
 
@@ -720,162 +709,6 @@ def salted_collect_set(
             ).alias(f"{value}_set")
         )
     )
-
-
-def compact_partitioned(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    shuffle: bool = False,
-    max_workers: int = 8,
-    timings: dict | None = None,
-    publish_root: bool = False,
-) -> dict:
-    """Compact every LEAF partition directory of a hive-partitioned table
-    (``band=*/``, ``cell=*/``, nested ``a=*/b=*/``) independently — the
-    lifecycle pass the append-mode index stores need: each daily
-    ``mode="append"`` batch adds its own small files per partition, and
-    after N days a band/cell directory holds N tiny files whose footer
-    reads dominate probe cost.
-
-    Rows never cross partition directories (the partition value lives in
-    the directory NAME, which is preserved) and each leaf swap reuses
-    :func:`compact`'s temp-dir + two-rename discipline — so a crash
-    mid-pass leaves every partition either fully old or fully new, never
-    mixed. Leaves compact CONCURRENTLY through a bounded thread pool
-    (SparkContext is thread-safe; each leaf is one independent read +
-    write + swap): a 256-partition lifecycle pass overlaps its per-leaf
-    scheduling and I/O stalls instead of serializing 256 jobs, while
-    ``max_workers`` bounds transient extra disk at that many partitions'
-    size. ``timings`` (optional, test hook) is filled with
-    ``{leaf: (start_monotonic, end_monotonic)}`` so concurrency is
-    assertable. Returns ``{leaf_path: new_file_count}``.
-
-    ``publish_root=True`` is the OBJECT-STORE form (r9): leaf renames
-    are non-atomic per-object copies on S3A, so instead the WHOLE table
-    is rewritten — partition layout preserved — into a new generation
-    and the root's ``_CURRENT`` pointer flips atomically
-    (:func:`~connect_server_spark.fsutil.publish_generation`). Costs a
-    full-table rewrite instead of per-leaf increments; readers resolve
-    the pointer (:func:`status_point_read` does; a no-op on flat
-    stores). Returns ``{generation_path: file_count}``. For the IVF
-    cell store specifically, prefer ``rebalance_ivf_index`` — it IS the
-    pointer-published full rewrite, with re-training included."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from connect_server_spark.fsutil import resolve_store
-
-    hadoop_path = spark._jvm.org.apache.hadoop.fs.Path
-    fs = hadoop_path(path).getFileSystem(spark._jsc.hadoopConfiguration())
-
-    if publish_root:
-        return _compact_partitioned_root(
-            spark, path, target_file_bytes, fs, hadoop_path
-        )
-    live = resolve_store(spark, path)
-    if live != path:
-        raise ValueError(
-            f"compact_partitioned: {path} is generation-pointered — keep "
-            "compacting it with publish_root=True (leaf renames inside a "
-            "published generation would mutate an immutable snapshot)"
-        )
-
-    def leaves(p) -> list:
-        subs = [
-            s.getPath()
-            for s in fs.listStatus(p)
-            # hidden names (".", "_" prefixes) are invisible to Spark's
-            # partition discovery — and include our own work dirs
-            if s.isDirectory()
-            and "=" in s.getPath().getName()
-            and not s.getPath().getName().startswith((".", "_"))
-        ]
-        if not subs:
-            return [p]
-        out = []
-        for s in subs:
-            out.extend(leaves(s))
-        return out
-
-    import time
-
-    def work(leaf_str: str) -> tuple[str, int]:
-        t0 = time.monotonic()
-        # generational=False: a pointer file inside a LEAF would be
-        # invisible to the whole-table scan (underscore exclusion), so
-        # leaves keep the hidden-sibling rename swap (HDFS-atomic;
-        # object stores should publish the table root instead)
-        n = compact(spark, leaf_str, target_file_bytes, shuffle,
-                    generational=False)
-        if timings is not None:
-            timings[leaf_str] = (t0, time.monotonic())
-        return leaf_str, n
-
-    leaf_paths = [
-        str(leaf.toUri().getPath()) for leaf in leaves(hadoop_path(path))
-    ]
-    results = {}
-    with ThreadPoolExecutor(
-        max_workers=max(1, min(max_workers, len(leaf_paths) or 1))
-    ) as pool:
-        for leaf_str, n in pool.map(work, leaf_paths):
-            results[leaf_str] = n
-    return results
-
-
-def _compact_partitioned_root(
-    spark: SparkSession, path: str, target_file_bytes: int, fs, hadoop_path
-) -> dict:
-    """The ``publish_root=True`` body: rewrite the whole partitioned
-    table into a new generation, partition columns detected from the
-    live layout's directory names so the hive structure (and therefore
-    PartitionFilters pruning) survives the rewrite."""
-    import math
-
-    from connect_server_spark.fsutil import (
-        begin_generation,
-        publish_generation,
-        resolve_store,
-    )
-
-    live = resolve_store(spark, path)
-    # partition columns, outermost-first, from the first leaf's
-    # relative path (a=1/b=2 → [a, b]); hidden/underscore names are
-    # not partition dirs
-    part_cols: list[str] = []
-    probe = hadoop_path(live)
-    while True:
-        subs = [
-            s.getPath()
-            for s in fs.listStatus(probe)
-            if s.isDirectory()
-            and "=" in s.getPath().getName()
-            and not s.getPath().getName().startswith((".", "_"))
-        ]
-        if not subs:
-            break
-        part_cols.append(subs[0].getName().split("=", 1)[0])
-        probe = subs[0]
-    if not part_cols:
-        raise ValueError(
-            f"compact_partitioned(publish_root=True): no partition "
-            f"directories under {live} — use compact() for flat stores"
-        )
-    df = spark.read.parquet(live)
-    size = fs.getContentSummary(hadoop_path(live)).getLength()
-    n = max(1, math.ceil(size / target_file_bytes))
-    gen = begin_generation(spark, path)
-    (
-        # repartition on the partition columns co-locates each hive
-        # partition's rows (≈1 file per partition per owning task);
-        # n caps the task count so file sizes track the byte target
-        df.repartition(n, *[F.col(c) for c in part_cols])
-        .write.mode("overwrite")
-        .partitionBy(*part_cols)
-        .parquet(gen)
-    )
-    publish_generation(spark, path, gen)
-    return {gen: n}
 
 
 def salted_join(

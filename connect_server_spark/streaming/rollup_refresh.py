@@ -21,15 +21,13 @@ changelog+compaction pair use):
   batches contributed.
 * ``compact_rollup`` bounds log growth: merge the log into one row per
   bucket and publish it as a new GENERATION of the log behind a
-  ``_CURRENT`` pointer (``fsutil.publish_generation`` — r9; the pointer
-  flip is one atomic small-file replace, object-store-safe where the
-  old two-rename swap was a non-atomic copy on S3A, and a crash
-  mid-compaction now leaves the live log simply UNTOUCHED instead of
-  stranded aside). Absorbed batch ids move to ``seen`` FIRST, then the
-  publish: a crash between the two leaves a still-raw log (reads stay
-  correct) and an already-updated ledger (replays stay gated) — the
-  safe ordering; publish-first would let a replayed absorbed batch
-  double-count. Writer contract: appends and compaction of ONE store
+  ``_CURRENT`` pointer (``fsutil.publish_generation``; the pointer flip
+  is one atomic small-file replace, object-store-safe, and a crash
+  mid-compaction leaves the live log simply UNTOUCHED). Absorbed batch
+  ids move to ``seen`` FIRST, then the publish: a crash between the
+  two leaves a still-raw log (reads stay correct) and an
+  already-updated ledger (replays stay gated) — the safe ordering;
+  publish-first would let a replayed absorbed batch double-count. Writer contract: appends and compaction of ONE store
   run in one thread (the foreachBatch body) — same single-writer rule
   as every generational swap.
 """
@@ -43,9 +41,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from connect_server_spark.fsutil import (
+    append_resolved,
     begin_generation,
-    fs_delete,
-    fs_exists,
     publish_generation,
     resolve_store,
 )
@@ -67,39 +64,12 @@ def _seen_path(store: str) -> str:
     return posixpath.join(store, "seen")
 
 
-def _swap_paths(store: str) -> tuple[str, str, str]:
-    ppath = _partials_path(store)
-    parent, leaf = posixpath.split(ppath.rstrip("/"))
-    return (
-        ppath,
-        posixpath.join(parent, f".{leaf}._rollup_tmp"),
-        posixpath.join(parent, f".{leaf}._rollup_old"),
-    )
-
-
-def _check_not_stranded(spark: SparkSession, store: str) -> None:
-    """Refuse to touch a store whose compaction crashed between the two
-    renames: the log directory is gone but ``._rollup_old`` still holds
-    ALL history. Silently proceeding would fork the store — the sink
-    would open a fresh empty log and reads would drop every compacted
-    bucket. Recovery is one rename, so fail with the exact command."""
-    ppath, _tmp, old = _swap_paths(store)
-    if not fs_exists(spark, ppath) and fs_exists(spark, old):
-        raise RuntimeError(
-            f"{store}: crashed compaction detected — the partial log is "
-            f"missing but '{old}' holds the pre-swap history. Recover "
-            f"with: fsutil.fs_rename(spark, {old!r}, {ppath!r}), then "
-            "re-run compact_rollup."
-        )
-
-
 def _batch_already_ingested(
     spark: SparkSession, store: str, batch_id: int
 ) -> bool:
     """Point lookup: has this batch id landed in the log or been
     absorbed by a compaction? Both scans are filter-pushdown point
     probes over narrow columns."""
-    _check_not_stranded(spark, store)
     for path, col in (
         (resolve_store(spark, _partials_path(store)), "batch_id"),
         (_seen_path(store), "batch_id"),
@@ -140,12 +110,8 @@ def rollup_refresh_sink(
         partials = rollup_cascade(
             batch_df, ts_col, value_col, keys, widths_seconds
         ).withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
-        # append into the LIVE generation: a post-compaction log lives
-        # behind the _CURRENT pointer, and rows appended to the
-        # superseded flat dir would be invisible to resolving readers
-        partials.write.mode("append").parquet(
-            resolve_store(spark, _partials_path(store))
-        )
+        # a post-compaction log lives behind the _CURRENT pointer
+        append_resolved(partials, _partials_path(store))
 
     return sink
 
@@ -159,7 +125,6 @@ def read_rollup(
     """The current rollup state: log partials merged per (keys, bucket,
     level). ``width_seconds`` prunes to one level scan-stage (the
     filter pushes down to the parquet scan)."""
-    _check_not_stranded(spark, store)
     log = spark.read.parquet(resolve_store(spark, _partials_path(store)))
     if width_seconds is not None:
         log = log.filter(F.col("bucket_seconds") == width_seconds)
@@ -172,26 +137,17 @@ def compact_rollup(
     """Fold the partial log to one row per (keys, bucket, level).
 
     Ledger-first ordering (see module docstring), then the
-    generation-pointer publish (r9 — replaced the two-rename swap, whose
-    mid-swap state needed manual recovery and whose renames are
-    non-atomic copies on object stores). Crash analysis, window by
-    window: before the ledger append — nothing changed. Between ledger
-    and publish — raw log intact (reads correct), absorbed batches
-    gated by ``seen``; re-running compaction re-absorbs (idempotent:
-    ``seen`` appends duplicate ids harmlessly, the probe is existence).
+    generation-pointer publish. Crash analysis, window by window:
+    before the ledger append — nothing changed. Between ledger and
+    publish — raw log intact (reads correct), absorbed batches gated by
+    ``seen``; re-running compaction re-absorbs (idempotent: ``seen``
+    appends duplicate ids harmlessly, the probe is existence).
     Mid-build — the pointer (and the live log) untouched; the orphan
     generation dir is GC'd by the next successful publish. After
-    publish — done; the pre-swap log survives one publish as reader
-    grace. Legacy rename-era crash states (``._rollup_old``) are still
-    detected by :func:`_check_not_stranded` and stale copies cleared.
-    Returns the compacted row count.
+    publish — done; the pre-publish log survives one publish as reader
+    grace. Returns the compacted row count.
     """
-    _check_not_stranded(spark, store)
-    ppath, tmp, old = _swap_paths(store)
-    # rename-era leftovers from a pre-r9 store: committed garbage
-    for stale in (old, tmp):
-        if fs_exists(spark, stale):
-            fs_delete(spark, stale)
+    ppath = _partials_path(store)
     live = resolve_store(spark, ppath)
     log = spark.read.parquet(live)
     absorbed = log.select("batch_id").distinct().filter(

@@ -1,23 +1,27 @@
-"""Object-store-safe store swaps (r8 verdict ask #3): generation
-directories + a ``_CURRENT`` pointer replace directory-rename swaps in
-``storage.compact``, ``storage.compact_bucketed`` and
-``rebalance_ivf_index``. The pointer flip is one small-file atomic
-replace, so a concurrent reader sees the old generation or the new one —
-never a half-copied mix (the S3A rename hazard documented in
-``fsutil.fs_rename``); superseded payloads survive exactly one publish
-as reader grace, then are GC'd."""
+"""Object-store-safe store swaps (r8 verdict ask #3): every store
+rewrite — ``storage.compact``, ``storage.compact_bucketed``,
+``rebalance_ivf_index``, the ledger and rollup compactions — builds a
+generation directory and flips a ``_CURRENT`` pointer. The pointer flip
+is one small-file atomic replace, so a concurrent reader sees the old
+generation or the new one — never a half-copied mix (a directory rename
+is a per-object copy on S3A); superseded payloads survive exactly one
+publish as reader grace, then are GC'd."""
 
 from __future__ import annotations
 
+import ast
 import glob
 import os
+import pathlib
 
 import pytest
 from pyspark.sql import functions as F
 
+import connect_server_spark
 from connect_server_spark.fsutil import (
     CURRENT_POINTER,
     GENERATION_PREFIX,
+    HISTORY_FILE,
     begin_generation,
     publish_generation,
     read_text,
@@ -97,7 +101,7 @@ def test_compact_swap_keeps_concurrent_reader_on_one_generation(
     reader = spark.read.parquet(pre_live)  # in-flight reader, pre-swap
     want = sorted(tuple(r) for r in reader.collect())
 
-    compact(spark, root, target_file_bytes=1 << 30)
+    compact(spark, root)
 
     # in-flight reader: identical rows, still served from its snapshot
     assert sorted(tuple(r) for r in reader.collect()) == want
@@ -224,16 +228,14 @@ def test_bucketed_respec_after_overwrite_never_serves_stale_layout(
 def test_compact_partitioned_publish_root_preserves_pruning(
     spark, tmp_path
 ):
-    """The object-store form of partitioned compaction: the whole table
-    rewrites into a generation (leaf renames are per-object copies on
-    S3A), the hive layout survives — point reads still prune to one
-    bucket directory via PartitionFilters — and values are identical.
-    A generation-pointered table then REFUSES the leaf-rename form."""
-    import pytest as _pytest
+    """Compacting a partitioned table: the whole table rewrites into a
+    generation, the hive layout survives — point reads still prune to
+    one bucket directory via PartitionFilters — and values are
+    identical."""
     from pyspark.sql import functions as F
 
     from connect_server_spark.storage import (
-        compact_partitioned,
+        compact,
         status_point_read,
         write_status_layout,
     )
@@ -254,9 +256,8 @@ def test_compact_partitioned_publish_root_preserves_pruning(
     )
     assert want
 
-    out = compact_partitioned(spark, root, publish_root=True)
-    [(gen, _n)] = out.items()
-    assert resolve_store(spark, root) == gen
+    compact(spark, root)
+    assert resolve_store(spark, root) == f"{root}/{GENERATION_PREFIX}00000001"
 
     probe = status_point_read(spark, root, "source_id", "src_7", n_buckets=16)
     assert sorted(map(tuple, probe.collect())) == want
@@ -265,12 +266,8 @@ def test_compact_partitioned_publish_root_preserves_pruning(
         "PartitionFilters"
     )[1][:160]
 
-    # leaf-rename compaction of a pointered table is refused loudly
-    with _pytest.raises(ValueError, match="publish_root=True"):
-        compact_partitioned(spark, root)
-
-    # and a second root publish keeps exactly live + grace
-    compact_partitioned(spark, root, publish_root=True)
+    # and a second publish keeps exactly live + grace
+    compact(spark, root)
     assert len(_gen_dirs(root)) == 2
     assert sorted(
         map(tuple, status_point_read(
@@ -358,8 +355,9 @@ def test_publish_keep_retains_time_travel_snapshots(spark, tmp_path):
 
 def test_snapshot_pins_refuse_gc_flat_and_unpublished(spark, tmp_path):
     """Every wrong pin refuses loudly instead of serving garbage: a
-    GC'd generation, a flat store, a not-yet-published build, and a
-    malformed name."""
+    GC'd generation, a flat store, a not-yet-published build, a
+    malformed name, and a generation a missing ``_HISTORY`` manifest
+    does not list."""
     from connect_server_spark.storage import compact, read_snapshot
 
     flat = str(tmp_path / "flat")
@@ -380,6 +378,10 @@ def test_snapshot_pins_refuse_gc_flat_and_unpublished(spark, tmp_path):
         resolve_store(spark, root, generation="evil/../path")
     # default keep=1 retention is unchanged: live + grace only
     assert len(_gen_dirs(root)) == 2
+    # without the manifest only the live generation is known published
+    os.remove(f"{root}/{HISTORY_FILE}")
+    with pytest.raises(ValueError, match="never published"):
+        read_snapshot(spark, root, generation=2)
 
 
 def test_list_generations_flat_store_and_inflight_builds(spark, tmp_path):
@@ -435,40 +437,6 @@ def test_keep_retention_never_retains_or_pins_crashed_builds(
     assert got.endswith("_gen-00000001")
     with pytest.raises(ValueError, match="bad generation"):
         resolve_store(spark, root, generation="_gen-x")
-
-
-def test_legacy_store_ambiguous_generations_get_grace_not_pins(
-    spark, tmp_path
-):
-    """Review pin (two rounds of it): a pre-manifest store's non-live
-    generations are AMBIGUOUS — an old snapshot and a crashed torn
-    build look identical. The first manifest publish must neither
-    destroy them outright (a possibly-published snapshot) nor make them
-    pinnable (a torn payload would serve garbage): they survive ONE
-    grace publish with pins refusing, then GC."""
-    from connect_server_spark.fsutil import HISTORY_FILE, list_generations
-    from connect_server_spark.storage import compact, read_snapshot
-
-    root = str(tmp_path / "legacy")
-    spark.range(7).write.parquet(root)
-    compact(spark, root, keep=3)  # gen 1
-    compact(spark, root, keep=3)  # gen 2 (gen 1 retained)
-    os.remove(f"{root}/{HISTORY_FILE}")  # simulate a pre-manifest store
-    compact(spark, root, keep=3)  # gen 3: gen 1 is now ambiguous
-    assert sorted(_gen_dirs(root)) == [
-        f"{GENERATION_PREFIX}0000000{i}" for i in (1, 2, 3)
-    ]  # kept on disk for an operator to salvage...
-    with pytest.raises(ValueError, match="never published"):
-        read_snapshot(spark, root, generation=1)  # ...but never pinnable
-    pub = {g["number"]: g["published"] for g in list_generations(spark, root)}
-    assert pub == {3: True, 2: True, 1: False}
-    # the grace expires at the NEXT publish; the real snapshot (gen 2,
-    # the pre-upgrade live payload) stays retained under keep=3
-    compact(spark, root, keep=3)  # gen 4
-    assert sorted(_gen_dirs(root)) == [
-        f"{GENERATION_PREFIX}0000000{i}" for i in (2, 3, 4)
-    ]
-    assert read_snapshot(spark, root, generation=2).count() == 7
 
 
 def test_racing_publishers_loser_refuses_and_loses_no_rows(spark, tmp_path):
@@ -547,14 +515,15 @@ def test_begin_generation_claims_unique_numbers(spark, tmp_path):
 
 
 def test_plain_str_gen_path_keeps_legacy_unguarded_publish(spark, tmp_path):
-    """A hand-built plain-str path carries no epoch — publish proceeds
-    (documented legacy/manual escape hatch)."""
+    """A hand-built plain-str path carries no epoch for the publish to
+    check, so the publish refuses it and the store stays flat."""
     root = str(tmp_path / "store")
     os.makedirs(f"{root}/{GENERATION_PREFIX}00000007")
-    publish_generation(
-        spark, root, f"{root}/{GENERATION_PREFIX}00000007"
-    )
-    assert resolve_store(spark, root).endswith("00000007")
+    with pytest.raises(TypeError, match="GenerationHandle"):
+        publish_generation(
+            spark, root, f"{root}/{GENERATION_PREFIX}00000007"
+        )
+    assert resolve_store(spark, root) == root
 
 
 def test_racing_publishers_reversed_order_lower_claim_still_refuses(
@@ -630,3 +599,25 @@ def test_append_resolved_normal_path_still_appends(spark, tmp_path):
     compact(spark, root)
     append_resolved(spark.range(8, 10), root)  # pointered store
     assert spark.read.parquet(resolve_store(spark, root)).count() == 10
+
+
+def test_every_store_rewrite_is_a_generation_publish():
+    """No package module swaps a store by directory rename: outside
+    ``fsutil.py`` (whose atomic small-file write renames one file)
+    nothing calls a ``rename``, and no module names the rename-swap
+    work directories."""
+    pkg = pathlib.Path(connect_server_spark.__file__).parent
+    swap_dirs = ("_compact_old", "_compact_tmp", "_rollup_old", "_rollup_tmp")
+    for path in pkg.rglob("*.py"):
+        rel = path.relative_to(pkg).as_posix()
+        src = path.read_text()
+        assert not [d for d in swap_dirs if d in src], rel
+        if rel == "fsutil.py":
+            continue
+        renames = [
+            node.lineno
+            for node in ast.walk(ast.parse(src))
+            if isinstance(node, ast.Call)
+            and getattr(node.func, "attr", None) == "rename"
+        ]
+        assert not renames, (rel, renames)

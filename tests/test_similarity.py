@@ -769,18 +769,20 @@ def test_ivf_store_compacts_after_appends_with_serving_unchanged(
     spark, tmp_path
 ):
     """Lifecycle: daily appends leave one small file per cell per batch;
-    storage.compact_partitioned folds each cell directory to single
-    files WITHOUT moving rows across cells, and serving output is
-    byte-identical before/after."""
+    a rebalance that carries the stored centroids rewrites the cells as
+    a new generation with fewer files WITHOUT moving rows across cells,
+    and serving output is byte-identical before/after."""
     import glob
 
     import numpy as np
 
+    from connect_server_spark.fsutil import resolve_store
     from connect_server_spark.operators.similarity import (
         ivf_topk_indexed,
+        read_ivf_centroids,
+        rebalance_ivf_index,
         write_ivf_index,
     )
-    from connect_server_spark.storage import compact_partitioned
 
     rng = np.random.RandomState(9)
     rows = [(i, rng.randn(8).tolist()) for i in range(60)]
@@ -802,9 +804,10 @@ def test_ivf_store_compacts_after_appends_with_serving_unchanged(
     )
     files_before = len(glob.glob(f"{ix}/cells/cell=*/*.parquet"))
 
-    compact_partitioned(spark, f"{ix}/cells")
+    rebalance_ivf_index(spark, ix, centroids=read_ivf_centroids(spark, ix))
 
-    files_after = len(glob.glob(f"{ix}/cells/cell=*/*.parquet"))
+    live = resolve_store(spark, ix)
+    files_after = len(glob.glob(f"{live}/cells/cell=*/*.parquet"))
     assert files_after < files_before
     after = sorted(
         map(tuple, ivf_topk_indexed(probes, spark, ix, 3, nprobe=4).collect())

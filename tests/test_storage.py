@@ -127,12 +127,12 @@ def test_compact_merges_small_files(spark, tmp_path):
     import glob
 
     assert len(glob.glob(f"{path}/part-*.parquet")) == 64
-    # huge target → everything folds into one file, published as a new
+    # KB of data, far under the file target → one file, published as a new
     # generation (the pointer flip IS the swap; the 64-file flat payload
     # survives one publish as reader grace)
     from connect_server_spark.fsutil import resolve_store
 
-    n = compact(spark, path, target_file_bytes=1 << 30)
+    n = compact(spark, path)
     live = resolve_store(spark, path)
     assert live != path
     files = glob.glob(f"{live}/part-*.parquet")
@@ -173,62 +173,6 @@ def test_write_partitioned_prunes_at_read(spark, sf_dir, tmp_path):
     assert "PartitionFilters" in plan and "lang" in plan.split("PartitionFilters")[1][:120]
     want = docs.filter(F.col("lang") == "en").count()
     assert filtered.count() == want
-
-
-def test_compact_partitioned_merges_leaf_files_and_preserves_index(spark, tmp_path):
-    """The append-mode index lifecycle for the HIVE-PARTITIONED store
-    (the IVF cells directory): daily appends accrete small files per
-    cell directory; compact_partitioned merges each leaf in place
-    (crash-safe per-leaf swap) and the index reads back row-identical,
-    partition column included."""
-    import numpy as np
-
-    from connect_server_spark.operators.similarity import (
-        ivf_topk_indexed,
-        write_ivf_index,
-    )
-    from connect_server_spark.storage import compact_partitioned
-
-    rng = np.random.RandomState(7)
-    centers = rng.randn(4, 8)
-
-    def vec(c, eps=0.01):
-        v = centers[c] + eps * rng.randn(8)
-        return [float(x) for x in v]
-
-    ix = str(tmp_path / "ivf")
-    corpus = spark.createDataFrame(
-        [(i, vec(i % 4)) for i in range(1, 9)],
-        "vec_id long, embedding array<double>",
-    )
-    write_ivf_index(corpus, ix, nlist=4)
-    for day in range(3):  # three daily appends → small files accrete
-        batch = spark.createDataFrame(
-            [(100 + day, vec(day % 4))],
-            "vec_id long, embedding array<double>",
-        )
-        write_ivf_index(batch, ix, mode="append")
-    cells = f"{ix}/cells"
-    before = spark.read.parquet(cells)
-    before_rows = sorted((r.vec_id, r.cell) for r in before.collect())
-    import glob
-
-    files_before = len(glob.glob(f"{cells}/cell=*/*.parquet"))
-    results = compact_partitioned(spark, cells)
-    files_after = len(glob.glob(f"{cells}/cell=*/*.parquet"))
-    assert files_after < files_before
-    assert set(results.values()) == {1}  # tiny leaves → one file each
-    after = spark.read.parquet(cells)
-    assert sorted((r.vec_id, r.cell) for r in after.collect()) == before_rows
-    assert "cell" in after.columns  # hive layout intact
-
-    # the compacted index still serves the probe path
-    probes = spark.createDataFrame(
-        [(900, vec(1))], "probe_id long, probe_vec array<double>"
-    )
-    top = ivf_topk_indexed(probes, spark, ix, k=1, nprobe=1).collect()
-    # center-1 members: corpus ids 1, 5 (i % 4 == 1) and day-1 append 101
-    assert len(top) == 1 and top[0].vec_id in {1, 5, 101}
 
 
 def test_compact_bucketed_merges_files_and_preserves_layout(spark, tmp_path):
@@ -290,77 +234,6 @@ def test_compact_bucketed_merges_files_and_preserves_layout(spark, tmp_path):
         assert {(r.new_id, r.corpus_id) for r in pairs.collect()} == {(900, 101)}
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-
-
-def test_compact_work_dirs_invisible_to_partition_discovery(spark, tmp_path):
-    """Review pin: compaction work dirs are dot-prefixed so a concurrent
-    reader (or a crash leftover) inside a partitioned table root is
-    ignored by partition discovery instead of parsed as a bogus
-    partition value."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from connect_server_spark.storage import compact_partitioned
-
-    root = str(tmp_path / "cells")
-    df = spark.range(20).select(
-        F.col("id"), (F.col("id") % 4).alias("cell")
-    )
-    df.write.partitionBy("cell").parquet(root)
-    # simulate a crash leftover + an in-flight temp beside a leaf
-    os.makedirs(f"{root}/.cell=1._compact_old/")
-    os.makedirs(f"{root}/.cell=2._compact_tmp/")
-    back = spark.read.parquet(root)
-    assert back.count() == 20
-    assert sorted(r.cell for r in back.select("cell").distinct().collect()) == [0, 1, 2, 3]
-
-    # and a real compaction pass leaves no visible work dirs behind
-    compact_partitioned(spark, root)
-    visible = [d for d in os.listdir(root) if not d.startswith((".", "_"))]
-    assert sorted(visible) == ["cell=0", "cell=1", "cell=2", "cell=3"], visible
-    assert spark.read.parquet(root).count() == 20
-
-
-def test_compact_partitioned_overlaps_leaf_jobs(spark, tmp_path):
-    """r5 verdict #4: the lifecycle pass must not serialize one Spark job
-    per leaf. With 8 leaves and a 4-thread pool, at least one pair of
-    per-leaf compactions overlaps in wall time (each leaf is an
-    independent read+write+swap; SparkContext is thread-safe), and the
-    result is row-identical to the sequential pass's contract."""
-    from pyspark.sql import functions as F
-
-    from connect_server_spark.storage import compact_partitioned
-
-    root = str(tmp_path / "t")
-    df = spark.range(4000).select(
-        F.col("id"), (F.col("id") % 8).alias("part")
-    )
-    df.repartition(4).write.partitionBy("part").parquet(root)
-    before = sorted(r.id for r in spark.read.parquet(root).collect())
-
-    timings: dict = {}
-    results = compact_partitioned(spark, root, max_workers=4, timings=timings)
-    assert len(results) == 8 and set(results.values()) == {1}
-    assert sorted(r.id for r in spark.read.parquet(root).collect()) == before
-
-    # overlap: some leaf started before another finished
-    ivals = sorted(timings.values())
-    assert len(ivals) == 8
-    overlaps = sum(
-        1 for (s1, e1), (s2, _) in zip(ivals, ivals[1:]) if s2 < e1
-    )
-    assert overlaps >= 1, ivals
-
-    # the pool respects its bound: never more than 4 concurrent
-    events = sorted(
-        [(s, 1) for s, _ in ivals] + [(e, -1) for _, e in ivals]
-    )
-    live = peak = 0
-    for _, d in events:
-        live += d
-        peak = max(peak, live)
-    assert peak <= 4, ivals
 
 
 def test_salted_join_matches_plain_join_on_skewed_data(spark):

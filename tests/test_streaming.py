@@ -387,79 +387,6 @@ def test_streaming_rollup_crash_between_ledger_and_swap(spark, tmp_path):
                       read_rollup(spark, store, ["k"]).collect())) == baseline
 
 
-def test_streaming_rollup_stranded_swap_detected(spark, tmp_path):
-    """The between-renames crash window: the log directory is missing
-    and ._rollup_old holds history — every entry point must refuse with
-    the recovery command instead of silently forking the store; after
-    the recovery rename, reads resume exactly."""
-    import datetime as dt
-    import os
-
-    import pytest
-
-    from connect_server_spark.streaming.rollup_refresh import (
-        compact_rollup,
-        read_rollup,
-        rollup_refresh_sink,
-    )
-
-    store = str(tmp_path / "rollup")
-    sink = rollup_refresh_sink(spark, store, "ts", "v", ["k"], [60])
-    b = spark.createDataFrame(
-        [(dt.datetime(2024, 1, 1, 10, 0), "k", 1.0)],
-        "ts timestamp, k string, v double",
-    )
-    sink(b, 0)
-    baseline = sorted(map(tuple, read_rollup(spark, store, ["k"]).collect()))
-
-    ppath = f"{store}/partials"
-    old = f"{store}/.partials._rollup_old"
-    os.rename(ppath, old)  # simulate the crash between the two renames
-    with pytest.raises(RuntimeError, match="crashed compaction"):
-        read_rollup(spark, store, ["k"])
-    with pytest.raises(RuntimeError, match="crashed compaction"):
-        sink(b, 1)
-    with pytest.raises(RuntimeError, match="crashed compaction"):
-        compact_rollup(spark, store, ["k"])
-
-    os.rename(old, ppath)  # the documented one-rename recovery
-    assert sorted(map(tuple,
-                      read_rollup(spark, store, ["k"]).collect())) == baseline
-
-
-def test_streaming_rollup_stale_old_dir_cleared_by_next_compaction(
-    spark, tmp_path
-):
-    """The after-swap-before-cleanup window: a completed swap left
-    ._rollup_old behind; the next compaction clears it and proceeds
-    instead of failing the rename."""
-    import datetime as dt
-    import os
-
-    from connect_server_spark.streaming.rollup_refresh import (
-        compact_rollup,
-        read_rollup,
-        rollup_refresh_sink,
-    )
-
-    store = str(tmp_path / "rollup")
-    sink = rollup_refresh_sink(spark, store, "ts", "v", ["k"], [60])
-    b = spark.createDataFrame(
-        [(dt.datetime(2024, 1, 1, 10, 0), "k", 1.0)],
-        "ts timestamp, k string, v double",
-    )
-    sink(b, 0)
-    baseline = sorted(map(tuple, read_rollup(spark, store, ["k"]).collect()))
-    # completed swap + stale copy left behind
-    stale = f"{store}/.partials._rollup_old"
-    os.makedirs(stale)
-    open(os.path.join(stale, "junk"), "w").write("x")
-    compact_rollup(spark, store, ["k"])
-    assert not os.path.exists(stale)
-    assert sorted(map(tuple,
-                      read_rollup(spark, store, ["k"]).collect())) == baseline
-
-
 # ---------------------------------------------------------------------------
 # The COMPOSED daily-ingest job: every store maintained in one foreachBatch.
 
