@@ -61,6 +61,17 @@ __all__ = [
     "winnow_neardup_against_index",
 ]
 
+# The signature format of the persisted minhash index: its writer, its
+# probe and the batch twin ``minhash_neardup_against`` all read these,
+# so an index can only be probed with the signatures it was built from.
+MINHASH_HASHES = 32
+MINHASH_BANDS = 8
+MINHASH_SHINGLE_N = 3
+# The fingerprint format of the persisted winnow index (token k-gram
+# size, winnowing window), read by its writer and its probe.
+WINNOW_K = 4
+WINNOW_WINDOW = 4
+
 
 def normalize_text(text: Column) -> Column:
     """Canonical form for exact dedup: lowercase, collapse whitespace, trim."""
@@ -365,9 +376,6 @@ def minhash_neardup_against(
     id_col: str,
     text_col: str,
     threshold: float = 0.5,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """Incremental near-dup: each NEW document vs an EXISTING corpus —
     the daily-ingest shape. Band buckets are computed for both sides
@@ -380,17 +388,21 @@ def minhash_neardup_against(
     :func:`minhash_neardup_against_index`, which makes each batch
     O(batch) + the index join instead of an O(corpus) rescan.
 
-    Returns ``(new_id, corpus_id, jaccard)`` with ``jaccard >=
-    threshold``. Ids may overlap between the two tables (they are never
-    compared for identity)."""
+    Signatures use the index's format (``MINHASH_HASHES``,
+    ``MINHASH_BANDS``, ``MINHASH_SHINGLE_N``), so this is the batch twin
+    of the indexed probe. Returns ``(new_id, corpus_id, jaccard)`` with
+    ``jaccard >= threshold``. Ids may overlap between the two tables
+    (they are never compared for identity)."""
     nd = new.select(
-        F.col(id_col), word_shingles(F.col(text_col), shingle_n).alias("_sh")
+        F.col(id_col),
+        word_shingles(F.col(text_col), MINHASH_SHINGLE_N).alias("_sh"),
     )
     cd = corpus.select(
-        F.col(id_col), word_shingles(F.col(text_col), shingle_n).alias("_sh")
+        F.col(id_col),
+        word_shingles(F.col(text_col), MINHASH_SHINGLE_N).alias("_sh"),
     )
     return minhash_neardup_against_shingled(
-        nd, cd, id_col, "_sh", threshold, num_hashes, bands
+        nd, cd, id_col, "_sh", threshold, MINHASH_HASHES, MINHASH_BANDS
     )
 
 
@@ -435,17 +447,15 @@ def write_minhash_index(
     text_col: str,
     index_path: str,
     shingle_path: str,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
     mode: str = "overwrite",
-    store_buckets: int = 32,
 ) -> None:
     """Persist the corpus side of incremental MinHash dedup so a daily
     batch never re-reads corpus TEXT: the O(corpus) shingling +
     signature pass is paid ONCE here, at ingest/backfill time.
 
-    Two artifacts, both written as **path-addressed bucketed tables**
+    Signatures use ``MINHASH_HASHES`` hashes in ``MINHASH_BANDS`` bands
+    over ``MINHASH_SHINGLE_N``-word shingles. Two artifacts, both
+    written as **path-addressed bucketed tables**
     (:func:`~connect_server_spark.storage.write_bucketed_path`) so the
     probe-time joins are Exchange-free on the store side BY LAYOUT, not
     by broadcast luck:
@@ -478,28 +488,24 @@ def write_minhash_index(
     spark = corpus.sparkSession
     shingled = corpus.select(
         F.col(id_col),
-        word_shingles(F.col(text_col), shingle_n).alias("shingles"),
+        word_shingles(F.col(text_col), MINHASH_SHINGLE_N).alias("shingles"),
     )
     if mode == "append":
         # appending: the new rows are batch-sized — derive buckets
         # directly (reading the whole store back would be O(corpus))
         shingled = shingled.transform(stage_boundary)
-        write_bucketed_path(
-            shingled, shingle_path, id_col, store_buckets, mode="append"
-        )
+        write_bucketed_path(shingled, shingle_path, id_col, mode="append")
         buckets = minhash_band_buckets(
-            shingled, id_col, "shingles", num_hashes, bands
+            shingled, id_col, "shingles", MINHASH_HASHES, MINHASH_BANDS
         )
-        write_bucketed_path(
-            buckets, index_path, "band_hash", store_buckets, mode="append"
-        )
+        write_bucketed_path(buckets, index_path, "band_hash", mode="append")
         return
-    write_bucketed_path(shingled, shingle_path, id_col, store_buckets, mode=mode)
-    shingles = read_bucketed(spark, shingle_path, id_col, store_buckets)
+    write_bucketed_path(shingled, shingle_path, id_col, mode=mode)
+    shingles = read_bucketed(spark, shingle_path, id_col)
     buckets = minhash_band_buckets(
-        shingles, id_col, "shingles", num_hashes, bands
+        shingles, id_col, "shingles", MINHASH_HASHES, MINHASH_BANDS
     )
-    write_bucketed_path(buckets, index_path, "band_hash", store_buckets, mode=mode)
+    write_bucketed_path(buckets, index_path, "band_hash", mode=mode)
 
 
 def minhash_neardup_against_index(
@@ -510,10 +516,6 @@ def minhash_neardup_against_index(
     id_col: str,
     text_col: str,
     threshold: float = 0.5,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-    store_buckets: int = 32,
 ) -> DataFrame:
     """Incremental near-dup against a PRE-BUILT corpus index (written by
     :func:`write_minhash_index`): the daily-ingest fast path. Per batch
@@ -539,17 +541,18 @@ def minhash_neardup_against_index(
     from connect_server_spark.storage import read_bucketed
 
     nd = new.select(
-        F.col(id_col), word_shingles(F.col(text_col), shingle_n).alias("_sh")
+        F.col(id_col),
+        word_shingles(F.col(text_col), MINHASH_SHINGLE_N).alias("_sh"),
     )
-    nb = minhash_band_buckets(nd, id_col, "_sh", num_hashes, bands).select(
-        F.col(id_col).alias("new_id"), "band_hash"
-    )
-    cb = read_bucketed(spark, index_path, "band_hash", store_buckets).select(
+    nb = minhash_band_buckets(
+        nd, id_col, "_sh", MINHASH_HASHES, MINHASH_BANDS
+    ).select(F.col(id_col).alias("new_id"), "band_hash")
+    cb = read_bucketed(spark, index_path, "band_hash").select(
         F.col(id_col).alias("corpus_id"), "band_hash"
     )
     cands = _posting_candidates(cb, index_path, nb, "band_hash")
     a = nd.select(F.col(id_col).alias("new_id"), F.col("_sh").alias("_sa"))
-    b = read_bucketed(spark, shingle_path, id_col, store_buckets).select(
+    b = read_bucketed(spark, shingle_path, id_col).select(
         F.col(id_col).alias("corpus_id"), F.col("shingles").alias("_sb")
     )
     # a replayed mode="append" ingest re-writes IDENTICAL shingle rows
@@ -1321,7 +1324,6 @@ def write_window_index(
     text_col: str,
     index_path: str,
     k: int = 20,
-    store_buckets: int = 32,
     mode: str = "overwrite",
 ) -> None:
     """Persist the corpus's distinct k-token window keys as a
@@ -1338,7 +1340,7 @@ def write_window_index(
     keys = _window_keys(corpus, id_col, text_col, k).select("key")
     if mode != "append":
         keys = keys.distinct()
-    write_bucketed_path(keys, index_path, "key", store_buckets, mode=mode)
+    write_bucketed_path(keys, index_path, "key", mode=mode)
 
 
 def duplicated_spans_against_index(
@@ -1348,7 +1350,6 @@ def duplicated_spans_against_index(
     id_col: str,
     text_col: str,
     k: int = 20,
-    store_buckets: int = 32,
 ) -> DataFrame:
     """Incremental substring-duplicate spans: the NEW batch's token
     spans that duplicate the PERSISTED corpus window store
@@ -1364,7 +1365,7 @@ def duplicated_spans_against_index(
     from connect_server_spark.storage import probe_side, read_bucketed
 
     wins = _window_keys(new, id_col, text_col, k).transform(stage_boundary)
-    store = read_bucketed(spark, index_path, "key", store_buckets)
+    store = read_bucketed(spark, index_path, "key")
     probe = probe_side(spark, index_path, wins.select("id", "pos", "key"))
     vs_corpus = store.join(probe, "key").select("id", "pos")
     intra = (
@@ -1529,16 +1530,15 @@ def write_winnow_index(
     id_col: str,
     text_col: str,
     index_path: str,
-    k: int = 4,
-    window: int = 4,
     mode: str = "overwrite",
-    store_buckets: int = 32,
 ) -> None:
     """Persist the winnowing fingerprints of a corpus so a daily batch
     dedups against it in O(batch) — the fifth incremental-index modality
     (after the exact-digest, minhash, embedding-IVF, and window stores).
 
-    Two path-addressed bucketed artifacts under ``index_path``:
+    Fingerprints use ``WINNOW_K``-token grams winnowed over
+    ``WINNOW_WINDOW`` hashes. Two path-addressed bucketed artifacts under
+    ``index_path``:
 
     * ``posts/`` — the (id, fp) posting rows, bucketed by ``fp``: the
       candidate join and the probe-time document-frequency count are
@@ -1555,13 +1555,11 @@ def write_winnow_index(
     from connect_server_spark.storage import write_bucketed_path
 
     fps = winnow_fingerprints(
-        corpus, id_col, text_col, k=k, window=window
+        corpus, id_col, text_col, k=WINNOW_K, window=WINNOW_WINDOW
     ).transform(stage_boundary)
-    write_bucketed_path(fps, f"{index_path}/fps", "id", store_buckets, mode=mode)
+    write_bucketed_path(fps, f"{index_path}/fps", "id", mode=mode)
     posts = fps.select("id", F.explode("fps").alias("fp"))
-    write_bucketed_path(
-        posts, f"{index_path}/posts", "fp", store_buckets, mode=mode
-    )
+    write_bucketed_path(posts, f"{index_path}/posts", "fp", mode=mode)
 
 
 def winnow_neardup_against_index(
@@ -1570,11 +1568,8 @@ def winnow_neardup_against_index(
     index_path: str,
     id_col: str,
     text_col: str,
-    k: int = 4,
-    window: int = 4,
     threshold: float = 0.5,
     max_df: int = 64,
-    store_buckets: int = 32,
 ) -> DataFrame:
     """Incremental winnowing near-dup: NEW documents against the
     persisted corpus fingerprint index (written by
@@ -1601,12 +1596,12 @@ def winnow_neardup_against_index(
     posts_path = f"{index_path}/posts"
     fps_path = f"{index_path}/fps"
     nf = winnow_fingerprints(
-        new, id_col, text_col, k=k, window=window
+        new, id_col, text_col, k=WINNOW_K, window=WINNOW_WINDOW
     ).transform(stage_boundary)
     n_posts = nf.select(
         F.col("id").alias("new_id"), F.explode("fps").alias("fp")
     )
-    store_posts = read_bucketed(spark, posts_path, "fp", store_buckets)
+    store_posts = read_bucketed(spark, posts_path, "fp")
     probed = store_posts.join(
         probe_side(spark, posts_path, n_posts.select("fp").distinct()),
         "fp",
@@ -1628,7 +1623,7 @@ def winnow_neardup_against_index(
         "fp",
     )
     a = nf.select(F.col("id").alias("new_id"), F.col("fps").alias("_sa"))
-    b = read_bucketed(spark, fps_path, "id", store_buckets).select(
+    b = read_bucketed(spark, fps_path, "id").select(
         F.col("id").alias("corpus_id"), F.col("fps").alias("_sb")
     )
     return (

@@ -39,7 +39,8 @@ __all__ = [
     "maintain_bm25_index",
 ]
 
-# Okapi defaults (Lucene's values).
+# The Okapi parameters of every BM25 score here, in-memory and indexed
+# (Lucene's defaults).
 K1 = 1.2
 B = 0.75
 
@@ -96,14 +97,12 @@ def bm25_topk(
     text_col: str,
     query: str,
     k: int = 10,
-    k1: float = K1,
-    b: float = B,
 ) -> DataFrame:
     """Top-``k`` documents for ``query`` under Okapi BM25.
 
     idf(t) = ln(1 + (N - df + 0.5) / (df + 0.5)) — the Lucene variant,
-    always positive. Score(d) = Σ_t idf(t) · tf·(k1+1) /
-    (tf + k1·(1 − b + b·dl/avgdl)) over the DISTINCT query terms.
+    always positive. Score(d) = Σ_t idf(t) · tf·(K1+1) /
+    (tf + K1·(1 − B + B·dl/avgdl)) over the DISTINCT query terms.
     Scores round to the 1e-6 grid (hash-stable), ties break by id
     ascending so the cut is deterministic.
     """
@@ -140,10 +139,10 @@ def bm25_topk(
             "_id",
             (
                 F.col("idf")
-                * (F.col("tf") * (k1 + 1))
+                * (F.col("tf") * (K1 + 1))
                 / (
                     F.col("tf")
-                    + k1 * (1 - b + b * F.col("dl") / F.lit(avg_dl))
+                    + K1 * (1 - B + B * F.col("dl") / F.lit(avg_dl))
                 )
             ).alias("_s"),
         )
@@ -256,7 +255,6 @@ def write_bm25_index(
     text_col: str,
     index_path: str,
     mode: str = "overwrite",
-    buckets: int = 32,
     batch_id: int | None = None,
 ) -> None:
     """Persist the BM25 corpus statistics as a path-addressed index so
@@ -266,8 +264,8 @@ def write_bm25_index(
     * ``terms/``   — per-document term counts, BUCKETED BY ``term``: a
       query's term probe is an equi-join that is Exchange-free on the
       store side, and the ``term IN (...)`` predicate both pushes to the
-      parquet scan and prunes buckets — a 3-term query reads ~3/32 of
-      the store.
+      parquet scan and prunes buckets — a 3-term query reads
+      ~3/``STORE_BUCKETS`` of the store.
     * ``doclens/`` — per-document lengths, BUCKETED BY the id: the
       scoring join shuffles only candidate rows to the store's layout.
     * ``meta/``    — a per-batch ledger of (n_docs, dl_sum, dl_cnt)
@@ -309,14 +307,8 @@ def write_bm25_index(
     term_counts, doc_lens, n_docs, _avg = corpus_term_stats(
         df, id_col, text_col
     )
-    write_bucketed_path(
-        term_counts, f"{index_path}/terms", key="term",
-        buckets=buckets, mode=mode,
-    )
-    write_bucketed_path(
-        doc_lens, f"{index_path}/doclens", key="_id",
-        buckets=buckets, mode=mode,
-    )
+    write_bucketed_path(term_counts, f"{index_path}/terms", "term", mode=mode)
+    write_bucketed_path(doc_lens, f"{index_path}/doclens", "_id", mode=mode)
     if mode == "overwrite":
         from connect_server_spark.fsutil import fs_delete
 
@@ -454,9 +446,6 @@ def bm25_topk_indexed(
     index_path: str,
     query: str,
     k: int = 10,
-    k1: float = K1,
-    b: float = B,
-    buckets: int = 32,
     idf_floor: float = 0.1,
 ) -> DataFrame:
     """Top-``k`` under Okapi BM25 against a :func:`write_bm25_index`
@@ -476,7 +465,7 @@ def bm25_topk_indexed(
     ``term IN (...)`` predicate, so its posting list is neither read
     nor shuffled. The default floor 0.1 only prunes terms in ≳90% of
     documents, whose per-hit score contribution is ≤
-    ``idf_floor·(k1+1)`` ≈ 0.22 — the standard lossy stop-word trade;
+    ``idf_floor·(K1+1)`` ≈ 0.22 — the standard lossy stop-word trade;
     pass ``idf_floor=0.0`` for exact parity on any query. The ledger
     also supplies idf for the kept terms, which removes the old
     posting-side df aggregation from the serving plan entirely."""
@@ -490,9 +479,7 @@ def bm25_topk_indexed(
         float(led["dl_sum"]) / float(led["dl_cnt"]) if led["dl_cnt"] else 1.0
     )
     kept, _pruned = query_term_stats(spark, index_path, q_terms, idf_floor)
-    term_scan = read_bucketed(
-        spark, f"{index_path}/terms", key="term", buckets=buckets
-    )
+    term_scan = read_bucketed(spark, f"{index_path}/terms", "term")
     if kept:
         term_scan = term_scan.filter(
             F.col("term").isin([t for t, _ in kept])
@@ -509,7 +496,7 @@ def bm25_topk_indexed(
         kept or [("", 0.0)], "term string, idf double"
     )
     doclens = read_bucketed(
-        spark, f"{index_path}/doclens", key="_id", buckets=buckets
+        spark, f"{index_path}/doclens", "_id"
     ).dropDuplicates(["_id"])  # Exchange-free: the scan is id-bucketed
     scored = (
         terms.join(F.broadcast(idf), "term")
@@ -518,10 +505,10 @@ def bm25_topk_indexed(
             "_id",
             (
                 F.col("idf")
-                * (F.col("tf") * (k1 + 1))
+                * (F.col("tf") * (K1 + 1))
                 / (
                     F.col("tf")
-                    + k1 * (1 - b + b * F.col("dl") / F.lit(avg_dl))
+                    + K1 * (1 - B + B * F.col("dl") / F.lit(avg_dl))
                 )
             ).alias("_s"),
         )
@@ -538,10 +525,8 @@ def bm25_topk_indexed(
 def maintain_bm25_index(
     spark,
     index_path: str,
-    buckets: int = 32,
     max_files_per_bucket: int = 8,
     max_ledger_batches: int = 64,
-    keep_recent: int = 1,
     keep: int = 1,
 ) -> dict:
     """The BM25 maintenance loop (the cadence twin of
@@ -560,15 +545,15 @@ def maintain_bm25_index(
       files per bucket → compacted by :func:`storage.maintain_bucketed`
       (layout kept, generation-pointer swap, object-store-safe).
     * ledgers past ``max_ledger_batches`` batch dirs → all but the
-      newest ``keep_recent`` partials are SUMMED into one partial that
-      keeps the highest merged batch id, published as a new ledger
-      generation. The newest partials stay unmerged because only the
-      latest batch can replay (streaming batch ids are monotone; a
-      replay overwrites its own ``batch=<id>`` dir — merging IT would
-      double-count on replay; merging committed ids is safe because
-      their ids are never reissued). Associativity of (df sums, doc
-      counts, length sums) makes the merged ledger serve identical
-      statistics — pinned in ``tests/test_retrieval.py``.
+      newest partial are SUMMED into one partial that keeps the highest
+      merged batch id, published as a new ledger generation. The newest
+      partial stays unmerged because only the latest batch can replay
+      (streaming batch ids are monotone; a replay overwrites its own
+      ``batch=<id>`` dir — merging IT would double-count on replay;
+      merging committed ids is safe because their ids are never
+      reissued). Associativity of (df sums, doc counts, length sums)
+      makes the merged ledger serve identical statistics — pinned in
+      ``tests/test_retrieval.py``.
 
     Both ledgers merge with the SAME batch grouping; termstats
     publishes first, so a crash between the two publishes leaves the
@@ -590,8 +575,8 @@ def maintain_bm25_index(
 
     for store, key in (("terms", "term"), ("doclens", "_id")):
         n_files = maintain_bucketed(
-            spark, f"{index_path}/{store}", key, buckets,
-            max_files_per_bucket, keep=keep,
+            spark, f"{index_path}/{store}", key, max_files_per_bucket,
+            keep=keep,
         )
         if n_files:
             actions[store] = f"compacted {n_files} files"
@@ -606,8 +591,7 @@ def maintain_bm25_index(
     ts_live = resolve_store(spark, f"{index_path}/termstats")
     batches = ledger_batch_ids(spark, ts_live)
     if len(batches) > max_ledger_batches:
-        merge_ids = batches[: len(batches) - keep_recent]
-        keep_ids = batches[len(batches) - keep_recent:]
+        merge_ids, keep_ids = batches[:-1], batches[-1:]
         # shared replay-safe mechanic (storage.merge_batch_ledger):
         # newest-stays-unmerged enforced there; termstats publishes
         # FIRST so a crash between the two publishes trips the serving

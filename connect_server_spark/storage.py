@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from connect_server_spark import memo
 
 __all__ = [
+    "STORE_BUCKETS",
     "write_bucketed_path",
     "read_bucketed",
     "ensure_bucketed_table",
@@ -39,6 +40,13 @@ __all__ = [
     "salted_collect_set",
     "snapshot_diff",
 ]
+
+
+# The one format of every path-addressed bucketed store (the minhash,
+# winnow, window and BM25 indexes): this many buckets, files sorted by
+# the bucket key. Its writer, reader, compactor and maintainer all read
+# it, so no two of them can disagree on a store's layout.
+STORE_BUCKETS = 32
 
 
 def _bucket_table_name(path: str) -> str:
@@ -77,8 +85,6 @@ def ensure_bucketed_table(
     spark: SparkSession,
     path: str,
     key: str,
-    buckets: int = 32,
-    sort_key: str | None = None,
     schema=None,
 ) -> str:
     """Register (if absent) the external bucketed table describing the
@@ -92,39 +98,39 @@ def ensure_bucketed_table(
     files, so the layout guarantee survives process restarts (the
     daily-ingest case: the index is built by yesterday's job).
 
-    An existing registration is VALIDATED against the requested spec
-    and recreated on mismatch: table names are content-hashed from the
+    The spec is ``key`` into :data:`STORE_BUCKETS` buckets, sorted by
+    ``key``. An existing registration is VALIDATED against it and
+    recreated on mismatch: table names are content-hashed from the
     path, so a reused path (a store overwritten under a different key,
     or generation numbering restarting after an overwrite reset) would
     otherwise be served under a stale CLUSTERED BY — wrong bucket
     assignments, silently wrong joins.
 
     The validation (a ``DESCRIBE TABLE EXTENDED`` command) runs ONCE
-    per (JVM session, table, spec): serving paths call this on every
+    per (JVM session, table, key): serving paths call this on every
     probe (``read_bucketed``), and the r9 bench decomposition measured
     the per-read DESCRIBE as the dominant added driver-side cost of the
-    generation-pointer conversion. The memo holds the spec last
+    generation-pointer conversion. The memo holds the key last
     validated per (session, table), so a same-session respec
     (``write_bucketed_path`` overwrite under a new key) re-validates;
     cross-session drops recreate the table through the ``tableExists``
     miss. The memo is invalidated when the table is dropped through
     :func:`_drop_bucketed_table` (the only in-package drop route)."""
     name = _bucket_table_name(path)
-    wanted = (key, buckets, sort_key or key)
     spec_key = _spec_key(spark, name)
     if spark.catalog.tableExists(name):
-        if memo.shared.get(spec_key) == wanted:
+        if memo.shared.get(spec_key) == key:
             return name
         spec = {
             r.col_name: r.data_type
             for r in spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect()
         }
         if (
-            spec.get("Num Buckets") == str(buckets)
+            spec.get("Num Buckets") == str(STORE_BUCKETS)
             and spec.get("Bucket Columns") == f"[`{key}`]"
-            and spec.get("Sort Columns") == f"[`{sort_key or key}`]"
+            and spec.get("Sort Columns") == f"[`{key}`]"
         ):
-            memo.shared.put(spec_key, wanted)
+            memo.shared.put(spec_key, key)
             return name
         spark.sql(f"DROP TABLE IF EXISTS {name}")  # stale spec: rebuild
     if schema is None:
@@ -134,18 +140,18 @@ def ensure_bucketed_table(
     )
     spark.sql(
         f"CREATE TABLE {name} ({cols}) USING PARQUET "
-        f"CLUSTERED BY (`{key}`) SORTED BY (`{sort_key or key}`) "
-        f"INTO {buckets} BUCKETS LOCATION '{path}'"
+        f"CLUSTERED BY (`{key}`) SORTED BY (`{key}`) "
+        f"INTO {STORE_BUCKETS} BUCKETS LOCATION '{path}'"
     )
-    memo.shared.put(spec_key, wanted)  # just created with exactly this spec
+    memo.shared.put(spec_key, key)  # just created with exactly this spec
     return name
 
 
-def _by_bucket(df: DataFrame, key: str, buckets: int) -> DataFrame:
+def _by_bucket(df: DataFrame, key: str) -> DataFrame:
     """Shuffle ``df`` so each shuffle partition holds one bucket's rows
     before a bucketed write. Both branches hash with
-    ``pmod(murmur3(key), buckets)``, the bucketed writer's own bucket
-    id, so partition *i* is bucket *i*.
+    ``pmod(murmur3(key), STORE_BUCKETS)``, the bucketed writer's own
+    bucket id, so partition *i* is bucket *i*.
 
     With AQE on (read at call time), a REBALANCE hint lets AQE coalesce
     contiguous partitions to its advisory size: a tiny append runs as
@@ -154,26 +160,24 @@ def _by_bucket(df: DataFrame, key: str, buckets: int) -> DataFrame:
     size, giving that bucket more than one file in the write, which
     bucketed reads accept as they accept appended files. Spark ignores
     the hint with AQE off, where an N-partition input would write up to
-    N files per bucket, so that session keeps a fixed ``buckets``-way
-    repartition."""
+    N files per bucket, so that session keeps a fixed
+    ``STORE_BUCKETS``-way repartition."""
     conf = df.sparkSession.conf.get("spark.sql.adaptive.enabled", "true")
     if conf.strip().lower() == "true":
-        return df.hint("rebalance", buckets, key)
-    return df.repartition(buckets, F.col(key))
+        return df.hint("rebalance", STORE_BUCKETS, key)
+    return df.repartition(STORE_BUCKETS, F.col(key))
 
 
 def write_bucketed_path(
     df: DataFrame,
     path: str,
     key: str,
-    buckets: int = 32,
     mode: str = "overwrite",
-    sort_key: str | None = None,
 ) -> None:
     """Persist ``df`` at filesystem PATH as an external parquet table
-    bucketed (and sorted) by ``key``: the layout for persisted
-    index/feature stores that outlive any one session. Two stores
-    written with the same (key, buckets) spec join on that key with no
+    bucketed (and sorted) by ``key`` into :data:`STORE_BUCKETS` buckets:
+    the layout for persisted index/feature stores that outlive any one
+    session. Two stores bucketed on the same key join on it with no
     Exchange on either side, and a store joins a batch-sized probe on
     ``key`` with **zero Exchange on the store side** — the probe
     shuffles to the store's bucketing; the O(corpus) store never
@@ -193,21 +197,20 @@ def write_bucketed_path(
     superseded directory.
 
     Writes shuffle by the bucket hash first (:func:`_by_bucket`): a
-    bucketed save otherwise emits up to ``input_partitions × buckets``
-    files — the sf0.1 minhash band index came out as ~3,000 files from
-    a 94-partition input, and at 1000 executors the same shape is tens
-    of thousands of files PER STORE, paid back on every listing and
-    scan. With the shuffle, a write adds at most one file per bucket,
-    except buckets above AQE's advisory partition size, which AQE may
-    split across tasks. With AQE on, AQE also sizes the task count to
-    the data, so a ~160-row append runs as one task, not ``buckets``;
-    with AQE off, the write falls back to a fixed ``buckets``-way
-    repartition."""
+    bucketed save otherwise emits up to ``input_partitions ×
+    STORE_BUCKETS`` files — the sf0.1 minhash band index came out as
+    ~3,000 files from a 94-partition input, and at 1000 executors the
+    same shape is tens of thousands of files PER STORE, paid back on
+    every listing and scan. With the shuffle, a write adds at most one
+    file per bucket, except buckets above AQE's advisory partition size,
+    which AQE may split across tasks. With AQE on, AQE also sizes the
+    task count to the data, so a ~160-row append runs as one task, not
+    ``STORE_BUCKETS``; with AQE off, the write falls back to a fixed
+    ``STORE_BUCKETS``-way repartition."""
     from connect_server_spark.fsutil import resolve_store
 
     spark = df.sparkSession
-    sort_key = sort_key or key
-    df = _by_bucket(df, key, buckets)
+    df = _by_bucket(df, key)
     if mode == "overwrite":
         from connect_server_spark.fsutil import (
             GENERATION_PREFIX,
@@ -230,20 +233,18 @@ def write_bucketed_path(
             df.write.mode("overwrite")
             .format("parquet")
             .option("path", path)
-            .bucketBy(buckets, key)
-            .sortBy(sort_key)
+            .bucketBy(STORE_BUCKETS, key)
+            .sortBy(key)
             .saveAsTable(name)
         )
     elif mode == "append":
         live = resolve_store(spark, path)
-        name = ensure_bucketed_table(
-            spark, live, key, buckets, sort_key, schema=df.schema
-        )
+        name = ensure_bucketed_table(spark, live, key, schema=df.schema)
         (
             df.write.mode("append")
             .format("parquet")
-            .bucketBy(buckets, key)
-            .sortBy(sort_key)
+            .bucketBy(STORE_BUCKETS, key)
+            .sortBy(key)
             .saveAsTable(name)
         )
     else:
@@ -254,13 +255,11 @@ def read_bucketed(
     spark: SparkSession,
     path: str,
     key: str,
-    buckets: int = 32,
-    sort_key: str | None = None,
 ) -> DataFrame:
     """Read a :func:`write_bucketed_path` store WITH its layout: the
-    scan reports ``HashPartitioning(key, buckets)`` so a join on ``key``
-    needs no Exchange on this side (re-registering the table first if
-    this session has never seen it).
+    scan reports ``HashPartitioning(key, STORE_BUCKETS)`` so a join on
+    ``key`` needs no Exchange on this side (re-registering the table
+    first if this session has never seen it).
 
     Refreshes WHEN THE STORE CHANGED: the session's table-relation
     cache pins the FILE LISTING from the previous read, and an append
@@ -283,7 +282,7 @@ def read_bucketed(
     from connect_server_spark.fsutil import resolve_store
 
     live = resolve_store(spark, path)
-    name = ensure_bucketed_table(spark, live, key, buckets, sort_key)
+    name = ensure_bucketed_table(spark, live, key)
     # refresh only when the store changed since this session last did
     memo.cached(
         spark, ("refreshed", memo.session_key(spark), name), [live],
@@ -360,8 +359,6 @@ def compact_bucketed(
     spark: SparkSession,
     path: str,
     key: str,
-    buckets: int = 32,
-    sort_key: str | None = None,
     keep: int = 1,
 ) -> None:
     """Compact an append-accreted bucketed store back to ~one file per
@@ -369,9 +366,10 @@ def compact_bucketed(
     (so the new files carry bucket-id names) into a NEW GENERATION
     directory, then flip the store's ``_CURRENT`` pointer
     (:func:`~connect_server_spark.fsutil.publish_generation`).
-    ``repartition(buckets, key)`` uses the same murmur3-mod-buckets hash
-    as the bucketed writer, so each task holds exactly one bucket's rows
-    → at most one file per bucket, with AQE on or off. Unlike appends
+    ``repartition(STORE_BUCKETS, key)`` uses the same
+    murmur3-mod-buckets hash as the bucketed writer, so each task holds
+    exactly one bucket's rows → at most one file per bucket, with AQE on
+    or off. Unlike appends
     (:func:`_by_bucket`), the rewrite keeps the fixed repartition: AQE
     neither coalesces nor splits it, so no bucket is split into several
     files however large it grows — a split would leave the store above
@@ -393,9 +391,8 @@ def compact_bucketed(
         resolve_store,
     )
 
-    sort_key = sort_key or key
     live = resolve_store(spark, path)
-    name = ensure_bucketed_table(spark, live, key, buckets, sort_key)
+    name = ensure_bucketed_table(spark, live, key)
     spark.catalog.refreshTable(name)
     # the table's files as plain parquet, not the bucketed table: over a
     # scan that reports the same bucketing, the planner drops the
@@ -408,12 +405,12 @@ def compact_bucketed(
     tmp_table = f"{_bucket_table_name(gen)}_ctmp"
     spark.sql(f"DROP TABLE IF EXISTS {tmp_table}")
     (
-        df.repartition(buckets, F.col(key))
+        df.repartition(STORE_BUCKETS, F.col(key))
         .write.mode("overwrite")
         .format("parquet")
         .option("path", gen)
-        .bucketBy(buckets, key)
-        .sortBy(sort_key)
+        .bucketBy(STORE_BUCKETS, key)
+        .sortBy(key)
         .saveAsTable(tmp_table)
     )
     # metadata-only drop: the files stay; read_bucketed re-registers
@@ -426,7 +423,6 @@ def maintain_bucketed(
     spark: SparkSession,
     path: str,
     key: str,
-    buckets: int = 32,
     max_files_per_bucket: int = 8,
     keep: int = 1,
 ) -> int:
@@ -440,9 +436,9 @@ def maintain_bucketed(
 
     live = resolve_store(spark, path)
     n_files = sum(1 for f in fs_list(spark, live) if f.endswith(".parquet"))
-    if n_files <= buckets * max_files_per_bucket:
+    if n_files <= STORE_BUCKETS * max_files_per_bucket:
         return 0
-    compact_bucketed(spark, path, key, buckets, keep=keep)
+    compact_bucketed(spark, path, key, keep=keep)
     return n_files
 
 

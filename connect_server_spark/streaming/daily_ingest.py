@@ -94,6 +94,11 @@ __all__ = [
 ]
 
 
+# Offset of the composed ingest's BM25 ledger batch ids, so a stream's
+# batch ids never collide with the base build's batch 0.
+_META_NAMESPACE = 1_000_000
+
+
 def ingest_store_paths(root: str) -> dict[str, str]:
     """The composed job's store layout under one root."""
     return {
@@ -155,34 +160,34 @@ def build_serve_pair(
     corpus: DataFrame,
     paths: dict[str, str],
     nlist: int = 8,
-    id_col: str = "doc_id",
-    vec_col: str = "embedding",
 ) -> None:
-    """Bootstrap the IVFPQ+refine SERVING pair from a base corpus under
-    the shared-quantizer contract ``pq_refine_topk`` enforces: train
-    the refine (SQ8) store's coarse quantizer once, then build the PQ
-    candidate store UNDER those exact centroids (the same carry
-    ``maintain_refine_pair`` uses). The composed ingest appends into
-    both and pair-maintains them on the cadence (``serve_pair=True``)."""
+    """Bootstrap the IVFPQ+refine SERVING pair from a base corpus with
+    (``doc_id``, ``embedding``) columns under the shared-quantizer
+    contract ``pq_refine_topk`` enforces: train the refine (SQ8) store's
+    coarse quantizer once, then build the PQ candidate store UNDER those
+    exact centroids (the same carry ``maintain_refine_pair`` uses). The
+    composed ingest appends into both and pair-maintains them on the
+    cadence (``serve_pair=True``)."""
     spark = corpus.sparkSession
+    vecs = corpus.select("doc_id", "embedding")
     write_ivf_index(
-        corpus.select(id_col, vec_col),
+        vecs,
         paths["refine_index"],
         nlist=nlist,
-        corpus_id=id_col,
-        corpus_vec=vec_col,
+        corpus_id="doc_id",
+        corpus_vec="embedding",
         quantize=True,
     )
     from connect_server_spark.operators.similarity import read_ivf_centroids
 
     cents = read_ivf_centroids(spark, paths["refine_index"])
     write_ivf_index(
-        corpus.select(id_col, vec_col),
+        vecs,
         paths["pq_index"],
         nlist=nlist,
         centroids=cents,
-        corpus_id=id_col,
-        corpus_vec=vec_col,
+        corpus_id="doc_id",
+        corpus_vec="embedding",
         quantize="pq",
     )
 
@@ -196,20 +201,10 @@ def composed_ingest_sink(
     ts_col: str,
     value_col: str,
     gate: Callable[[DataFrame], DataFrame] | None = None,
-    threshold: float = 0.5,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-    vec_threshold: float = 0.9,
-    winnow_threshold: float | None = None,
-    nprobe: int = 4,
-    rollup_widths: list[int] | None = None,
-    meta_namespace: int = 1_000_000,
     maintain_every: int | None = None,
     maintain_skew_threshold: float = 4.0,
     maintain_cell_size: int = 256,
     maintain_keep: int = 2,
-    zorder_decay_threshold: float = 0.5,
     sketch_telemetry: bool = False,
     log_compact_files: int = 64,
     serve_pair: bool = False,
@@ -238,12 +233,6 @@ def composed_ingest_sink(
     next cadence's always-on pair-drift check; in the meantime
     ``pq_refine_topk`` fails loudly on its store contracts rather than
     serving wrong cells.
-
-    ``winnow_threshold`` is the winnow fingerprint-set Jaccard cutoff —
-    a DIFFERENT score distribution from the minhash shingle Jaccard
-    (fingerprint sets are ~2/(window+1)-density selections), so it gets
-    its own knob like ``vec_threshold``; it defaults to ``threshold``
-    for the common same-corpus calibration.
 
     ``maintain_every=N`` opts the IVF store into the automated
     stats→threshold→rebalance loop
@@ -279,15 +268,13 @@ def composed_ingest_sink(
     it when external readers run longer than the maintenance
     interval."""
     paths = ingest_store_paths(root)
-    if winnow_threshold is None:
-        winnow_threshold = threshold
     rollup = rollup_refresh_sink(
         spark,
         paths["rollup"],
         ts_col,
         value_col,
         keys=[],
-        widths_seconds=rollup_widths or [3600, 86400],
+        widths_seconds=[3600, 86400],
     )
 
     def _maybe_fail(step: str) -> None:
@@ -323,10 +310,6 @@ def composed_ingest_sink(
                     paths["shingles"],
                     id_col,
                     text_col,
-                    threshold=threshold,
-                    num_hashes=num_hashes,
-                    bands=bands,
-                    shingle_n=shingle_n,
                 )
             ),
             lambda: _probe(
@@ -336,8 +319,6 @@ def composed_ingest_sink(
                     paths["ivf_index"],
                     id_col=id_col,
                     vec_col=vec_col,
-                    threshold=vec_threshold,
-                    nprobe=nprobe,
                 )
             ),
             lambda: _probe(
@@ -347,7 +328,6 @@ def composed_ingest_sink(
                     paths["winnow_index"],
                     id_col,
                     text_col,
-                    threshold=winnow_threshold,
                 )
             ),
         )
@@ -391,9 +371,6 @@ def composed_ingest_sink(
                     text_col,
                     paths["minhash_index"],
                     paths["shingles"],
-                    num_hashes=num_hashes,
-                    bands=bands,
-                    shingle_n=shingle_n,
                     mode="append",
                 )),
                 _step("ivf_index", lambda: write_ivf_index(
@@ -409,7 +386,7 @@ def composed_ingest_sink(
                     text_col,
                     paths["bm25_index"],
                     mode="append",
-                    batch_id=meta_namespace + int(batch_id),
+                    batch_id=_META_NAMESPACE + int(batch_id),
                 )),
                 # winnow store: a replayed append re-writes IDENTICAL
                 # (id, fp)/(id, fps) rows, dropped layout-free at probe
@@ -553,7 +530,6 @@ def composed_ingest_sink(
                     spark,
                     paths["events_z"],
                     [id_col, ts_col],
-                    decay_threshold=zorder_decay_threshold,
                     keep=maintain_keep,
                 )
             if sketch_telemetry:
@@ -611,28 +587,24 @@ def hash_embedder(dim: int = 8, vec_col: str = "embedding"):
 
 def warc_batch_head(
     spark: SparkSession,
-    id_col: str = "doc_id",
     text_col: str = "text",
-    vec_col: str = "embedding",
-    ts_col: str = "ts",
-    value_col: str = "v",
     block_domains: list[str] | None = None,
     domain_cap: int | None = None,
-    cap_seed: str = "dih:",
-    cap_salt: int | None = None,
     embedder=None,
 ) -> Callable[[DataFrame], DataFrame]:
     """The crawl HEAD as a batch adapter (r7 verdict ask #7): turn a
     micro-batch of WARC shard payloads ``(shard, payload)`` into the
     curated document rows :func:`composed_ingest_sink` ingests —
-    ``corpus_from_crawl``'s funnel, run incrementally per batch.
+    ``corpus_from_crawl``'s funnel, run incrementally per batch. Rows
+    come out as (``doc_id``, ``text_col``, ``embedding``, ``ts``,
+    ``v``).
 
     Stages (all deterministic, so a replayed batch funnels identically):
     record parse (real WARC walk, error rows dropped here — they carry
     no document) → HTML text extraction → URL curation (blocklist,
     canonical dedup WITHIN the batch, per-domain cap) → C4 document
     gate → id from the record URI, event time from the WARC date,
-    unit ingest-volume value. ``embedder`` attaches ``vec_col``
+    unit ingest-volume value. ``embedder`` attaches ``embedding``
     (default :func:`hash_embedder` — swap in the model-serving UDF in
     production). Everything is batch-sized; the persisted-store dedup
     (cross-batch) stays where it was, in the composed sink's probes."""
@@ -644,7 +616,7 @@ def warc_batch_head(
     )
     from connect_server_spark.sources.warc import html_to_text, parse_warc_records
 
-    embed = embedder or hash_embedder(vec_col=vec_col)
+    embed = embedder or hash_embedder()
     block = (
         spark.createDataFrame([(d,) for d in block_domains], ["domain"])
         if block_domains
@@ -689,31 +661,23 @@ def warc_batch_head(
             out_col=text_col,
         ).select(
             F.col("target_uri").alias("url"),
-            doc_id.alias(id_col),
+            doc_id.alias("doc_id"),
             F.col(text_col),
-            F.to_timestamp(F.col("warc_date")).alias(ts_col),
+            F.to_timestamp(F.col("warc_date")).alias("ts"),
         )
         if block is not None:
             docs = filter_blocked_domains(docs, "url", block)
-        docs = url_dedup(docs, "url", id_col)
+        docs = url_dedup(docs, "url", "doc_id")
         if domain_cap is not None:
-            # cap_salt: the two-phase exact skew path — a production
-            # crawl batch can be one mega-domain; set ≈ executor count
-            # there (operators/weburl.py), leave None for local drills
             docs = cap_per_domain(
-                docs, "url", id_col, domain_cap,
-                seed=cap_seed, salt=cap_salt,
+                docs, "url", "doc_id", domain_cap, seed="dih:"
             )
         flags = c4_doc_flags(F.col(text_col))
         gated = docs.filter(
             ~flags["has_lorem_ipsum"] & ~flags["has_brace"]
         )
         return embed(gated, text_col).select(
-            id_col,
-            text_col,
-            vec_col,
-            ts_col,
-            F.lit(1.0).alias(value_col),
+            "doc_id", text_col, "embedding", "ts", F.lit(1.0).alias("v")
         )
 
     return head

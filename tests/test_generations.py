@@ -154,14 +154,14 @@ def test_bucketed_append_after_compact_lands_in_live_generation(
     df = spark.createDataFrame(
         [(i, f"v{i}") for i in range(50)], "k long, v string"
     )
-    write_bucketed_path(df, root, "k", buckets=4)
-    compact_bucketed(spark, root, "k", buckets=4)
+    write_bucketed_path(df, root, "k")
+    compact_bucketed(spark, root, "k")
     live = resolve_store(spark, root)
     assert live != root
 
     batch = spark.createDataFrame([(1000, "late")], "k long, v string")
-    write_bucketed_path(batch, root, "k", buckets=4, mode="append")
-    got = read_bucketed(spark, root, "k", buckets=4)
+    write_bucketed_path(batch, root, "k", mode="append")
+    got = read_bucketed(spark, root, "k")
     assert got.count() == 51
     assert got.filter(F.col("k") == 1000).count() == 1
     # the append physically landed inside the live generation
@@ -172,8 +172,8 @@ def test_bucketed_append_after_compact_lands_in_live_generation(
     assert after.filter(F.col("k") == 1000).count() == 1
 
     # and a second compaction folds the append in and GCs the legacy
-    compact_bucketed(spark, root, "k", buckets=4)
-    assert read_bucketed(spark, root, "k", buckets=4).count() == 51
+    compact_bucketed(spark, root, "k")
+    assert read_bucketed(spark, root, "k").count() == 51
     assert not glob.glob(f"{root}/*.parquet")  # flat legacy gone
 
 
@@ -196,32 +196,33 @@ def test_bucketed_respec_after_overwrite_never_serves_stale_layout(
     df = spark.createDataFrame(
         [(i, f"v{i}") for i in range(40)], "k long, v string"
     )
-    write_bucketed_path(df, root, "k", buckets=4)
-    compact_bucketed(spark, root, "k", buckets=4)
+    write_bucketed_path(df, root, "k")
+    compact_bucketed(spark, root, "k")
     # reads registered a table for _gen-00000001 under the OLD spec
-    assert read_bucketed(spark, root, "k", buckets=4).count() == 40
+    assert read_bucketed(spark, root, "k").count() == 40
 
     df2 = spark.createDataFrame(
         [(i, i * 2) for i in range(40)], "j long, payload long"
     )
-    write_bucketed_path(df2, root, "j", buckets=8, mode="overwrite")
-    compact_bucketed(spark, root, "j", buckets=8)  # recreates _gen-00000001
-    got = read_bucketed(spark, root, "j", buckets=8)
+    write_bucketed_path(df2, root, "j", mode="overwrite")
+    compact_bucketed(spark, root, "j")  # recreates _gen-00000001
+    got = read_bucketed(spark, root, "j")
     assert got.count() == 40
     assert got.columns == ["j", "payload"]
     # the catalog spec serving this read is the NEW one, not the stale
-    # 4-bucket-by-k registration the reused generation path once had
+    # by-k registration the reused generation path once had
     from connect_server_spark.fsutil import resolve_store
-    from connect_server_spark.storage import ensure_bucketed_table
-
-    name = ensure_bucketed_table(
-        spark, resolve_store(spark, root), "j", buckets=8
+    from connect_server_spark.storage import (
+        STORE_BUCKETS,
+        ensure_bucketed_table,
     )
+
+    name = ensure_bucketed_table(spark, resolve_store(spark, root), "j")
     spec = {
         r.col_name: r.data_type
         for r in spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect()
     }
-    assert spec.get("Num Buckets") == "8"
+    assert spec.get("Num Buckets") == str(STORE_BUCKETS)
     assert spec.get("Bucket Columns") == "[`j`]"
 
 
@@ -290,10 +291,10 @@ def test_bucketed_layout_survives_generation_swap(spark, tmp_path):
     df = spark.createDataFrame(
         [(i, i * 10) for i in range(100)], "k long, payload long"
     )
-    write_bucketed_path(df, root, "k", buckets=8)
-    compact_bucketed(spark, root, "k", buckets=8)
+    write_bucketed_path(df, root, "k")
+    compact_bucketed(spark, root, "k")
 
-    store = read_bucketed(spark, root, "k", buckets=8)
+    store = read_bucketed(spark, root, "k")
     probe = spark.createDataFrame([(5,), (7,)], "k long")
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

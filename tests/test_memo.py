@@ -44,7 +44,7 @@ def test_foreachbatch_batches_share_one_session_key(spark, tmp_path, monkeypatch
 
     store = str(tmp_path / "store")
     storage.write_bucketed_path(
-        spark.range(0, 8).select(F.col("id").alias("k")), store, "k", buckets=4
+        spark.range(0, 8).select(F.col("id").alias("k")), store, "k"
     )
     src = tmp_path / "src"
     src.mkdir()
@@ -57,10 +57,8 @@ def test_foreachbatch_batches_share_one_session_key(spark, tmp_path, monkeypatch
 
     def sink(batch_df, batch_id):
         session = batch_df.sparkSession
-        storage.write_bucketed_path(
-            batch_df, store, "k", buckets=4, mode="append"
-        )
-        rows = storage.read_bucketed(session, store, "k", buckets=4).count()
+        storage.write_bucketed_path(batch_df, store, "k", mode="append")
+        rows = storage.read_bucketed(session, store, "k").count()
         seen.append((session._jsparkSession.sessionUUID(), rows))
 
     q = (
@@ -106,9 +104,9 @@ def test_new_session_misses_session_memos_not_file_memos(
 
     store = str(tmp_path / "store")
     storage.write_bucketed_path(
-        spark.range(0, 8).select(F.col("id").alias("k")), store, "k", buckets=4
+        spark.range(0, 8).select(F.col("id").alias("k")), store, "k"
     )
-    assert storage.read_bucketed(spark, store, "k", buckets=4).count() == 8
+    assert storage.read_bucketed(spark, store, "k").count() == 8
     rng = np.random.RandomState(5)
     ix = str(tmp_path / "ivf")
     write_ivf_index(
@@ -131,9 +129,9 @@ def test_new_session_misses_session_memos_not_file_memos(
     assert memo.session_key(other) != memo.session_key(spark)
     name = storage._bucket_table_name(store)
 
-    assert storage.read_bucketed(other, store, "k", buckets=4).count() == 8
+    assert storage.read_bucketed(other, store, "k").count() == 8
     assert len(describes) == 1 and refreshes == [name]
-    storage.read_bucketed(spark, store, "k", buckets=4)  # its memo still hits
+    storage.read_bucketed(spark, store, "k")  # its memo still hits
     assert len(describes) == 1 and refreshes == [name]
 
     assert read_ivf_centroids(other, ix) is first

@@ -29,10 +29,10 @@ def test_bucketed_join_has_no_exchange(spark, no_broadcast, tmp_path):
         (F.col("id") % 97).alias("source_id"), F.col("id").alias("sub")
     )
     status_path, subs_path = str(tmp_path / "status"), str(tmp_path / "subs")
-    write_bucketed_path(status, status_path, "source_id", buckets=8)
-    write_bucketed_path(subs, subs_path, "source_id", buckets=8)
-    joined = read_bucketed(spark, status_path, "source_id", buckets=8).join(
-        read_bucketed(spark, subs_path, "source_id", buckets=8), "source_id"
+    write_bucketed_path(status, status_path, "source_id")
+    write_bucketed_path(subs, subs_path, "source_id")
+    joined = read_bucketed(spark, status_path, "source_id").join(
+        read_bucketed(spark, subs_path, "source_id"), "source_id"
     )
     plan = joined._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
@@ -428,13 +428,43 @@ def test_fs_signature_change_detection_both_legs(spark, tmp_path):
     assert _local_fs_path(spark, "file:///tmp/x") == "/tmp/x"
 
 
+def test_fs_list_local_leg_matches_hadoop_leg(spark, tmp_path, monkeypatch):
+    """A driver-local ``fs_list`` (one ``os.scandir``) returns the same
+    child names as the Hadoop ``listStatus`` leg — files, directories
+    and ``_``-prefixed names alike, and none of the ``.crc`` checksum
+    files Hadoop's local filesystem hides — and ``[]`` for a missing
+    directory."""
+    import os
+
+    from connect_server_spark import fsutil
+
+    d = str(tmp_path / "store")
+    spark.range(0, 3).write.parquet(d)  # part files, _SUCCESS, .crc files
+    os.makedirs(f"{d}/_gen-00000001")
+    os.makedirs(f"{d}/batch=1")
+    fsutil.write_text_atomic(spark, f"{d}/_CURRENT", "_gen-00000001\n")
+    missing = str(tmp_path / "nope")
+
+    local = sorted(fsutil.fs_list(spark, d))
+    assert fsutil.fs_list(spark, missing) == []
+    monkeypatch.setattr(fsutil, "_local_fs_path", lambda spark, path: None)
+    hadoop = sorted(fsutil.fs_list(spark, d))
+    assert fsutil.fs_list(spark, missing) == []
+
+    assert local == hadoop
+    assert {"_gen-00000001", "batch=1", "_CURRENT", "_SUCCESS"} <= set(local)
+    assert any(n.endswith(".parquet") for n in local)
+    assert any(n.endswith(".crc") for n in os.listdir(d))
+    assert not any(n.endswith(".crc") for n in local)
+
+
 def test_bucketed_writes_emit_one_file_per_bucket(spark, tmp_path):
     """write_bucketed_path shuffles by the bucket hash before the save
     (r11): a bucketed save from an N-partition input otherwise emits up
     to N x buckets files — the sf0.1 minhash band index came out as
     ~3,000 files from a 94-partition input, and every listing, footer
     read, and scan open paid for it. Overwrite AND append must each add
-    at most `buckets` data files, with AQE on and with AQE off.
+    at most ``STORE_BUCKETS`` data files, with AQE on and with AQE off.
 
     With AQE on, the shuffle is a REBALANCE that AQE sizes to the data:
     a few-row append runs as ONE task (every new file shares one
@@ -446,6 +476,7 @@ def test_bucketed_writes_emit_one_file_per_bucket(spark, tmp_path):
 
     from connect_server_spark.fsutil import resolve_store
     from connect_server_spark.storage import (
+        STORE_BUCKETS,
         compact_bucketed,
         read_bucketed,
         write_bucketed_path,
@@ -468,17 +499,15 @@ def test_bucketed_writes_emit_one_file_per_bucket(spark, tmp_path):
     def write_pair(path):
         """Overwrite 2,000 rows, then append 20; return both writes'
         new files."""
-        write_bucketed_path(rows(0, 2000), path, "k", buckets=8)
+        write_bucketed_path(rows(0, 2000), path, "k")
         first = data_files(path)
-        write_bucketed_path(
-            rows(2000, 2020), path, "k", buckets=8, mode="append"
-        )
+        write_bucketed_path(rows(2000, 2020), path, "k", mode="append")
         return first, data_files(path) - first
 
     path = str(tmp_path / "store")
     first, added = write_pair(path)
-    assert 0 < len(first) <= 8, sorted(first)
-    assert 0 < len(added) <= 8, sorted(added)
+    assert 0 < len(first) <= STORE_BUCKETS, sorted(first)
+    assert 0 < len(added) <= STORE_BUCKETS, sorted(added)
     # (a) the small append is one task: one part prefix, one file per
     # bucket it touches
     prefixes = {n.rsplit("_", 1)[0] for n in added}
@@ -492,20 +521,20 @@ def test_bucketed_writes_emit_one_file_per_bucket(spark, tmp_path):
 
     # layout intact: the read reports the bucketing (no Exchange on a
     # self-join by key) and every row survived
-    out = read_bucketed(spark, path, "k", buckets=8)
+    out = read_bucketed(spark, path, "k")
     assert out.count() == 2020
 
     # (b) AQE off: Spark ignores the REBALANCE hint, so the fixed
-    # repartition must keep each write at <= `buckets` files
+    # repartition must keep each write at <= STORE_BUCKETS files
     key = "spark.sql.adaptive.enabled"
     old = spark.conf.get(key)
     spark.conf.set(key, "false")
     try:
         off = str(tmp_path / "store_aqe_off")
         first, added = write_pair(off)
-        assert 0 < len(first) <= 8, sorted(first)
-        assert 0 < len(added) <= 8, sorted(added)
-        assert read_bucketed(spark, off, "k", buckets=8).count() == 2020
+        assert 0 < len(first) <= STORE_BUCKETS, sorted(first)
+        assert 0 < len(added) <= STORE_BUCKETS, sorted(added)
+        assert read_bucketed(spark, off, "k").count() == 2020
     finally:
         spark.conf.set(key, old)
 
@@ -516,25 +545,27 @@ def test_bucketed_writes_emit_one_file_per_bucket(spark, tmp_path):
     spark.conf.set(key, "1k")
     try:
         split = str(tmp_path / "store_split")
-        write_bucketed_path(rows(0, 20000), split, "k", buckets=8)
+        write_bucketed_path(rows(0, 20000), split, "k")
         files = data_files(split)
         # compaction keeps its fixed repartition, which AQE never
         # splits: the store is back to at most one file per bucket
         compacted = str(tmp_path / "store_compacted")
-        write_bucketed_path(rows(0, 20000), compacted, "k", buckets=8)
-        compact_bucketed(spark, compacted, "k", buckets=8)
+        write_bucketed_path(rows(0, 20000), compacted, "k")
+        compact_bucketed(spark, compacted, "k")
         live = resolve_store(spark, compacted)
-        assert 0 < len(data_files(live)) <= 8, sorted(data_files(live))
+        assert 0 < len(data_files(live)) <= STORE_BUCKETS, sorted(
+            data_files(live)
+        )
     finally:
         spark.conf.set(key, old)
-    assert read_bucketed(spark, compacted, "k", buckets=8).count() == 20000
-    assert len(files) > 8, sorted(files)  # AQE did split
+    assert read_bucketed(spark, compacted, "k").count() == 20000
+    assert len(files) > STORE_BUCKETS, sorted(files)  # AQE did split
     placed = (
         spark.read.parquet(split)
         .select(
             F.regexp_extract(F.input_file_name(), r"_(\d+)\.c\d+", 1)
             .cast("int").alias("file_bucket"),
-            F.expr("pmod(hash(k), 8)").alias("row_bucket"),
+            F.expr(f"pmod(hash(k), {STORE_BUCKETS})").alias("row_bucket"),
         )
         .groupBy("file_bucket", "row_bucket")
         .count()
@@ -542,7 +573,7 @@ def test_bucketed_writes_emit_one_file_per_bucket(spark, tmp_path):
     )
     assert {r.file_bucket for r in placed} == {bucket_of(n) for n in files}
     assert all(r.file_bucket == r.row_bucket for r in placed), placed
-    assert read_bucketed(spark, split, "k", buckets=8).count() == 20000
+    assert read_bucketed(spark, split, "k").count() == 20000
 
 
 def test_bucketed_append_inside_foreachbatch_is_one_task(spark, tmp_path):
@@ -550,17 +581,16 @@ def test_bucketed_append_inside_foreachbatch_is_one_task(spark, tmp_path):
     DataFrames belong to the stream's own cloned session, not the
     caller's. That session must still run the append as AQE's one
     coalesced task (one ``part-00000-<uuid>`` prefix), or every
-    micro-batch would pay the fixed ``buckets``-way write."""
+    micro-batch would pay the fixed ``STORE_BUCKETS``-way write."""
     import json
     import os
 
     from connect_server_spark.execution import stage_boundary
-    from connect_server_spark.storage import write_bucketed_path
+    from connect_server_spark.storage import STORE_BUCKETS, write_bucketed_path
 
     path = str(tmp_path / "store")
     write_bucketed_path(
-        spark.range(0, 2000).selectExpr("id AS k", "id * 2 AS v"),
-        path, "k", buckets=8,
+        spark.range(0, 2000).selectExpr("id AS k", "id * 2 AS v"), path, "k"
     )
     before = set(os.listdir(path))
     src = tmp_path / "in"
@@ -575,7 +605,7 @@ def test_bucketed_append_inside_foreachbatch_is_one_task(spark, tmp_path):
             stage_boundary, eager=True, pin=True
         )
         seen["aqe"] = fresh.sparkSession.conf.get("spark.sql.adaptive.enabled")
-        write_bucketed_path(fresh, path, "k", buckets=8, mode="append")
+        write_bucketed_path(fresh, path, "k", mode="append")
 
     q = (
         spark.readStream.schema("k long, v long").json(str(src))
@@ -591,7 +621,7 @@ def test_bucketed_append_inside_foreachbatch_is_one_task(spark, tmp_path):
         if n.endswith(".parquet") and not n.startswith(".")
     }
     assert seen["aqe"] == "true"
-    assert 1 < len(added) <= 8, sorted(added)
+    assert 1 < len(added) <= STORE_BUCKETS, sorted(added)
     prefixes = {n.rsplit("_", 1)[0] for n in added}
     assert len(prefixes) == 1 and prefixes.pop().startswith("part-00000-"), (
         sorted(added)
@@ -626,12 +656,11 @@ def test_concurrent_bucketed_stores_in_one_session(spark, tmp_path):
                 F.col("id").alias("k"), F.lit(i).alias("owner")
             )
             for _ in range(3):
-                storage.write_bucketed_path(base, path, "k", buckets=4)
-                storage.write_bucketed_path(more, path, "k", buckets=4,
-                                            mode="append")
+                storage.write_bucketed_path(base, path, "k")
+                storage.write_bucketed_path(more, path, "k", mode="append")
             return sorted(
                 tuple(r)
-                for r in storage.read_bucketed(spark, path, "k", buckets=4)
+                for r in storage.read_bucketed(spark, path, "k")
                 .select("k", "owner").collect()
             )
 
@@ -661,56 +690,59 @@ def test_maintain_bucketed_compacts_appended_minhash_store(spark, tmp_path):
         minhash_neardup_against_index,
         write_minhash_index,
     )
-    from connect_server_spark.storage import maintain_bucketed
+    from connect_server_spark.storage import STORE_BUCKETS, maintain_bucketed
 
     rng = random.Random(5)
     vocab = [f"w{i}" for i in range(400)]
-    texts = [" ".join(rng.choice(vocab) for _ in range(30)) for _ in range(40)]
+    texts = [" ".join(rng.choice(vocab) for _ in range(30)) for _ in range(160)]
 
     def frame(rows):
         return spark.createDataFrame(rows, "id long, text string")
 
+    # one base write and seven appends of 20 documents: each write adds
+    # about 15 shingle files and 32 band-index files
     ix, sh = str(tmp_path / "index"), str(tmp_path / "shingles")
     write_minhash_index(
-        frame([(i, texts[i]) for i in range(10)]), "id", "text", ix, sh,
-        store_buckets=4,
+        frame([(i, texts[i]) for i in range(20)]), "id", "text", ix, sh
     )
-    for lo in (10, 20, 30):
+    for lo in range(20, 160, 20):
         write_minhash_index(
-            frame([(i, texts[i]) for i in range(lo, lo + 10)]), "id", "text",
-            ix, sh, mode="append", store_buckets=4,
+            frame([(i, texts[i]) for i in range(lo, lo + 20)]), "id", "text",
+            ix, sh, mode="append",
         )
 
     def n_files(path):
         live = resolve_store(spark, path)
         return sum(1 for f in fs_list(spark, live) if f.endswith(".parquet"))
 
-    # near-copies (first word dropped) of one document per write
-    batch = frame([(1000 + i, texts[i].split(" ", 1)[1]) for i in (3, 15, 37)])
+    # near-copies (first word dropped) of documents from three writes
+    batch = frame(
+        [(1000 + i, texts[i].split(" ", 1)[1]) for i in (3, 45, 157)]
+    )
 
     def probe():
         return {
             (r.new_id, r.corpus_id)
             for r in minhash_neardup_against_index(
-                batch, spark, ix, sh, "id", "text", store_buckets=4
+                batch, spark, ix, sh, "id", "text"
             ).collect()
         }
 
     before = probe()
-    assert {(1003, 3), (1015, 15), (1037, 37)} <= before
+    assert {(1003, 3), (1045, 45), (1157, 157)} <= before
     files = {ix: n_files(ix), sh: n_files(sh)}
-    assert min(files.values()) > 4
+    assert min(files.values()) > 2 * STORE_BUCKETS, files
     for path, key in ((ix, "band_hash"), (sh, "id")):
         assert maintain_bucketed(
-            spark, path, key, 4, max_files_per_bucket=1
+            spark, path, key, max_files_per_bucket=1
         ) == files[path]
-        assert n_files(path) <= 4
-        assert maintain_bucketed(spark, path, key, 4, max_files_per_bucket=1) == 0
+        assert n_files(path) <= STORE_BUCKETS
+        assert maintain_bucketed(spark, path, key, max_files_per_bucket=1) == 0
     assert probe() == before
 
     write_minhash_index(
-        frame([(40, "fresh text " + texts[0])]), "id", "text", ix, sh,
-        mode="append", store_buckets=4,
+        frame([(160, "fresh text " + texts[0])]), "id", "text", ix, sh,
+        mode="append",
     )
     batch = frame([(2000, "fresh text " + texts[0])])
-    assert (2000, 40) in probe()
+    assert (2000, 160) in probe()
