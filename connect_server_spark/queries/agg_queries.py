@@ -193,9 +193,9 @@ def corpus_datacard_oracle_sql() -> str:
     verbatim in ``tests/test_aggs.py`` since r11."""
     from connect_server_spark.operators.text import STOPWORDS
     from connect_server_spark.queries.text_queries import (
-        _LANG_CASE,
-        _SCORES,
-        _sql_list,
+        LANG_CASE,
+        SCORES,
+        sql_list,
     )
 
     return rf"""
@@ -220,10 +220,10 @@ def corpus_datacard_oracle_sql() -> str:
     m AS (
       SELECT t.source, t.text,
         len(w) AS n_words,
-        {_SCORES['en']} AS s_en,
-        {_SCORES['es']} AS s_es,
-        {_SCORES['de']} AS s_de,
-        round(CAST(len(list_filter(w, x -> list_contains({_sql_list(STOPWORDS['en'])}, x))) AS DOUBLE)
+        {SCORES['en']} AS s_en,
+        {SCORES['es']} AS s_es,
+        {SCORES['de']} AS s_de,
+        round(CAST(len(list_filter(w, x -> list_contains({sql_list(STOPWORDS['en'])}, x))) AS DOUBLE)
               / greatest(len(w), 1), 6) AS swr,
         round(list_sum(list_transform(w, x -> CAST(len(x) AS DOUBLE)))
               / greatest(len(w), 1), 6) AS mwl,
@@ -251,7 +251,7 @@ def corpus_datacard_oracle_sql() -> str:
     per_doc AS (
       SELECT source,
         n_words,
-        CASE WHEN ({_LANG_CASE}) = 'en' THEN 1.0 ELSE 0.0 END AS is_en,
+        CASE WHEN ({LANG_CASE}) = 'en' THEN 1.0 ELSE 0.0 END AS is_en,
         CAST(round(swr * 1e6, 0) AS BIGINT) * 4
           + CAST(round(least(mwl / 8.0, 1.0) * 1e6, 0) AS BIGINT) * 3
           + CAST(round((1.0 - least(pr * 4.0, 1.0)) * 1e6, 0) AS BIGINT) * 3

@@ -1,13 +1,8 @@
 """Driver queries for the organization-join family (SURVEY §2: S4, J1,
 J3, J4, J5/S8) with DuckDB oracle twins. S4 (org registry scan with
 name-or-alias filter and 0/>1-match errors) is the load+filter stage of
-``org_resolve``.
-
-The org registry is synthesized from ``nation`` (child orgs) and ``region``
-(parent orgs): nation org ``lower(n_name)`` has aliases ``n{key}`` and
-``{name}-org`` and is parented by ``region-{n_regionkey}``. Nation 0 and
-region 0 both carry alias ``ambiguous`` so duplicate-match detection is
-exercised (``aws/organization.py:43-58`` errors on >1 match).
+``org_resolve``. The org registry and the submissions' org references
+come from :mod:`connect_server_spark.queries._mdf_tables`.
 """
 
 from __future__ import annotations
@@ -21,82 +16,19 @@ from connect_server_spark.operators.org import (
     inherit_parent_rules,
     resolve_org,
 )
+from connect_server_spark.queries._mdf_tables import (
+    ORG_LOOKUP_SQL,
+    ORG_REF_SQL,
+    ORG_REGISTRY_SQL,
+    STATUS_SQL,
+    SUBMISSION_KEYS_SQL,
+    org_ref,
+    org_registry,
+    status_table,
+    submission_keys,
+)
 from connect_server_spark.registry import register
 from connect_server_spark.tables import load_table
-
-_KEY_MOD = 997
-
-
-def _org_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
-    nation = load_table(spark, "nation", sf_dir)
-    region = load_table(spark, "region", sf_dir)
-    nation_orgs = nation.select(
-        F.lower(F.col("n_name")).alias("canonical_name"),
-        F.when(
-            F.col("n_nationkey") == 0,
-            F.array(
-                F.concat(F.lit("n"), F.col("n_nationkey").cast("string")),
-                F.concat(F.lower(F.col("n_name")), F.lit("-org")),
-                F.lit("ambiguous"),
-            ),
-        )
-        .otherwise(
-            F.array(
-                F.concat(F.lit("n"), F.col("n_nationkey").cast("string")),
-                F.concat(F.lower(F.col("n_name")), F.lit("-org")),
-            )
-        )
-        .alias("aliases"),
-        F.array(F.concat(F.lit("grp-"), F.col("n_nationkey").cast("string"))).alias("acl"),
-        (F.col("n_nationkey") % 3 == 0).alias("curation"),
-        F.array(
-            F.concat(F.lit("region-"), F.col("n_regionkey").cast("string"))
-        ).alias("parent_organizations"),
-    )
-    region_orgs = region.select(
-        F.concat(F.lit("region-"), F.col("r_regionkey").cast("string")).alias(
-            "canonical_name"
-        ),
-        F.when(
-            F.col("r_regionkey") == 0, F.array(F.lower(F.col("r_name")), F.lit("ambiguous"))
-        )
-        .otherwise(F.array(F.lower(F.col("r_name"))))
-        .alias("aliases"),
-        F.array(F.concat(F.lit("racl-"), F.col("r_regionkey").cast("string"))).alias("acl"),
-        (F.col("r_regionkey") % 2 == 0).alias("curation"),
-        F.array().cast("array<string>").alias("parent_organizations"),
-    )
-    return nation_orgs.unionByName(region_orgs)
-
-
-_ORG_REGISTRY_SQL = """
-      SELECT
-        lower(n_name) AS canonical_name,
-        CASE WHEN n_nationkey = 0
-          THEN [concat('n', CAST(n_nationkey AS VARCHAR)),
-                concat(lower(n_name), '-org'), 'ambiguous']
-          ELSE [concat('n', CAST(n_nationkey AS VARCHAR)),
-                concat(lower(n_name), '-org')] END AS aliases,
-        [concat('grp-', CAST(n_nationkey AS VARCHAR))] AS acl,
-        n_nationkey % 3 = 0 AS curation,
-        [concat('region-', CAST(n_regionkey AS VARCHAR))] AS parent_organizations
-      FROM nation
-      UNION ALL
-      SELECT
-        concat('region-', CAST(r_regionkey AS VARCHAR)) AS canonical_name,
-        CASE WHEN r_regionkey = 0 THEN [lower(r_name), 'ambiguous']
-             ELSE [lower(r_name)] END AS aliases,
-        [concat('racl-', CAST(r_regionkey AS VARCHAR))] AS acl,
-        r_regionkey % 2 = 0 AS curation,
-        CAST([] AS VARCHAR[]) AS parent_organizations
-      FROM region
-"""
-
-_ORG_LOOKUP_SQL = f"""
-      SELECT unnest(list_prepend(canonical_name, aliases)) AS match_name,
-             canonical_name, curation
-      FROM ({_ORG_REGISTRY_SQL})
-"""
 
 
 def org_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -104,21 +36,8 @@ def org_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     alias via an exploded-match-key broadcast equi-join, with unknown-org
     and duplicate-match error columns."""
     customer = load_table(spark, "customer", sf_dir)
-    submissions = customer.select(
-        F.col("c_custkey"),
-        F.when(
-            F.col("c_custkey") % 4 == 0,
-            F.concat(F.lit("n"), (F.col("c_nationkey")).cast("string")),
-        )
-        .when(
-            F.col("c_custkey") % 4 == 1,
-            F.concat(F.lit("region-"), (F.col("c_nationkey") % 5).cast("string")),
-        )
-        .when(F.col("c_custkey") % 4 == 2, F.lit("ambiguous"))
-        .otherwise(F.concat(F.lit("unknown-org-"), F.col("c_custkey").cast("string")))
-        .alias("org_ref"),
-    )
-    orgs = _org_registry(spark, sf_dir)
+    submissions = customer.select(F.col("c_custkey"), org_ref().alias("org_ref"))
+    orgs = org_registry(spark, sf_dir)
     return resolve_org(submissions, orgs, "org_ref", ["curation"])
 
 
@@ -127,16 +46,10 @@ register(
     org_resolve,
     sql=f"""
     WITH submissions AS (
-      SELECT c_custkey,
-        CASE
-          WHEN c_custkey % 4 = 0 THEN concat('n', CAST(c_nationkey AS VARCHAR))
-          WHEN c_custkey % 4 = 1 THEN concat('region-', CAST(c_nationkey % 5 AS VARCHAR))
-          WHEN c_custkey % 4 = 2 THEN 'ambiguous'
-          ELSE concat('unknown-org-', CAST(c_custkey AS VARCHAR))
-        END AS org_ref
+      SELECT c_custkey, {ORG_REF_SQL} AS org_ref
       FROM customer
     ),
-    lookup AS ({_ORG_LOOKUP_SQL}),
+    lookup AS ({ORG_LOOKUP_SQL}),
     counts AS (
       SELECT match_name, count(*) AS n FROM lookup GROUP BY match_name
     )
@@ -157,7 +70,7 @@ register(
 def org_parent_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3: registry with ancestor rules merged in — acl appended (own
     first), curation OR-ed upward."""
-    merged = inherit_parent_rules(_org_registry(spark, sf_dir))
+    merged = inherit_parent_rules(org_registry(spark, sf_dir))
     return merged.select(
         "canonical_name",
         F.array_join("acl", ",").alias("acl_csv"),
@@ -168,7 +81,7 @@ def org_parent_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 # r11 fifth rotation: demoted (frozen green since r1); oracle preserved
 # verbatim in tests/test_entry_oracle.py.
 ORG_PARENT_RULES_ORACLE_SQL = f"""
-    WITH orgs AS ({_ORG_REGISTRY_SQL})
+    WITH orgs AS ({ORG_REGISTRY_SQL})
     SELECT
       o.canonical_name,
       CASE WHEN p.canonical_name IS NULL
@@ -186,25 +99,10 @@ register("org_parent_rules", org_parent_rules, defer=True)
 def status_insert_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J5/S8: incoming (source_id, '1.0') rows left-anti-joined against the
     existing status table — only absent key pairs survive to be appended."""
-    customer = load_table(spark, "customer", sf_dir)
-    orders = load_table(spark, "orders", sf_dir)
-    incoming = customer.select(
-        F.col("c_custkey"),
-        F.concat(F.lit("src_"), (F.col("c_custkey") % _KEY_MOD).cast("string")).alias(
-            "source_id"
-        ),
-        F.lit("1.0").alias("version"),
+    incoming = submission_keys(spark, sf_dir).select(
+        "c_custkey", "source_id", F.lit("1.0").alias("version")
     )
-    existing = orders.select(
-        F.concat(F.lit("src_"), (F.col("o_custkey") % _KEY_MOD).cast("string")).alias(
-            "source_id"
-        ),
-        F.concat(
-            (F.col("o_orderkey") % 3 + 1).cast("string"),
-            F.lit("."),
-            (F.col("o_orderkey") % 17).cast("string"),
-        ).alias("version"),
-    )
+    existing = status_table(spark, sf_dir)
     return anti_join_insert(incoming, existing, ["source_id", "version"])
 
 
@@ -213,17 +111,10 @@ register(
     status_insert_guard,
     sql=f"""
     WITH incoming AS (
-      SELECT c_custkey,
-             concat('src_', CAST(c_custkey % {_KEY_MOD} AS VARCHAR)) AS source_id,
-             '1.0' AS version
-      FROM customer
+      SELECT c_custkey, source_id, '1.0' AS version
+      FROM ({SUBMISSION_KEYS_SQL})
     ),
-    existing AS (
-      SELECT concat('src_', CAST(o_custkey % {_KEY_MOD} AS VARCHAR)) AS source_id,
-             concat(CAST(o_orderkey % 3 + 1 AS VARCHAR), '.',
-                    CAST(o_orderkey % 17 AS VARCHAR)) AS version
-      FROM orders
-    )
+    existing AS ({STATUS_SQL})
     SELECT source_id, version, c_custkey FROM incoming i
     WHERE NOT EXISTS (
       SELECT 1 FROM existing e

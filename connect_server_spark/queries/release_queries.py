@@ -52,7 +52,7 @@ def training_release(
     from connect_server_spark.operators.packing import chunk_and_pack
     from connect_server_spark.operators.tokenizer import tokenize_bpe as tok
     from connect_server_spark.queries.curation_queries import curation_full
-    from connect_server_spark.queries.text_queries import _bpe_model_for
+    from connect_server_spark.queries.text_queries import bpe_model_for
     from connect_server_spark.sinks import (
         read_training_shards,
         write_training_shards,
@@ -64,7 +64,7 @@ def training_release(
         "doc_id", "text"
     )
 
-    model = _bpe_model_for(spark, sf_dir)
+    model = bpe_model_for(spark, sf_dir)
     counts = tok(
         kept, "doc_id", "text", model["merges"], model["alphabet"]
     ).select("doc_id", "n_tokens")

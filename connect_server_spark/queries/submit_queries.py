@@ -1,9 +1,11 @@
 """Driver query for the submit pipeline (SURVEY §3.1: S2, S3-slice, P12,
 P13, J1, J2, A1, A2 composed) with a full DuckDB oracle twin.
 
-Fixture mapping: each ``customer`` row is a submission (identity, groups,
-org reference, update flag, a numeric leaf that is sometimes NaN); the
-``orders``-derived status table provides existing versions and owners.
+Fixture mapping: :mod:`connect_server_spark.queries._mdf_tables` derives
+each ``customer`` row's source_id, submitter and org reference, the
+``orders``-derived status table of existing versions and owners, and the
+org registry; the submission's other fields (title, update flags, groups,
+a numeric leaf that is sometimes NaN) are built here.
 """
 
 from __future__ import annotations
@@ -13,26 +15,34 @@ from pyspark.sql import functions as F
 
 from connect_server_spark.pipeline.schema_check import check_submission
 from connect_server_spark.pipeline.submit import submit_pipeline
-from connect_server_spark.queries.org_queries import _org_registry, _ORG_REGISTRY_SQL
+from connect_server_spark.queries._mdf_tables import (
+    LATEST_SQL,
+    ORG_LOOKUP_SQL,
+    ORG_REF_SQL,
+    STATUS_SQL,
+    org_ref,
+    org_registry,
+    owner,
+    owner_sql,
+    source_id,
+    source_id_sql,
+    source_key,
+    source_key_sql,
+    status_table,
+)
 from connect_server_spark.registry import register
 from connect_server_spark.tables import load_table
-
-_KEY_MOD = 997
 
 
 def _submissions(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, "customer", sf_dir)
     k = F.col("c_custkey")
-    submitter = F.concat(F.lit("u"), (k % 31).cast("string"))
+    submitter = owner(k)
     return c.select(
         k.alias("c_custkey"),
-        F.concat(F.lit("src_"), (k % _KEY_MOD).cast("string")).alias("source_id"),
+        source_id(k).alias("source_id"),
         F.when(k % 17 == 0, F.lit("")).otherwise(F.col("c_name")).alias("title"),
-        F.when(k % 4 == 0, F.concat(F.lit("n"), F.col("c_nationkey").cast("string")))
-        .when(k % 4 == 1, F.concat(F.lit("region-"), (F.col("c_nationkey") % 5).cast("string")))
-        .when(k % 4 == 2, F.lit("ambiguous"))
-        .otherwise(F.concat(F.lit("unknown-org-"), k.cast("string")))
-        .alias("org_ref"),
+        org_ref().alias("org_ref"),
         (k % 2 == 0).alias("update"),
         (k % 23 == 0).alias("test"),
         (k % 11 == 0).alias("update_metadata_only"),
@@ -50,27 +60,11 @@ def _submissions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load_table(spark, "orders", sf_dir)
-    return o.select(
-        F.concat(F.lit("src_"), (F.col("o_custkey") % _KEY_MOD).cast("string")).alias(
-            "source_id"
-        ),
-        F.concat(
-            (F.col("o_orderkey") % 3 + 1).cast("string"),
-            F.lit("."),
-            (F.col("o_orderkey") % 17).cast("string"),
-        ).alias("version"),
-        F.concat(F.lit("u"), (F.col("o_custkey") % 31).cast("string")).alias("owner"),
-        F.col("o_orderkey"),
-    )
-
-
 def submit_pipeline_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = submit_pipeline(
         _submissions(spark, sf_dir),
-        _org_registry(spark, sf_dir),
-        _status(spark, sf_dir),
+        org_registry(spark, sf_dir),
+        status_table(spark, sf_dir),
         status_tiebreaker="o_orderkey",
     )
     return out.select(
@@ -94,22 +88,15 @@ register(
     WITH submissions AS (
       SELECT
         c_custkey,
-        concat('src_', CAST(c_custkey % {_KEY_MOD} AS VARCHAR)) AS source_id,
+        {source_id_sql("c_custkey")} AS source_id,
         CASE WHEN c_custkey % 17 = 0 THEN '' ELSE c_name END AS title,
-        CASE
-          WHEN c_custkey % 4 = 0 THEN concat('n', CAST(c_nationkey AS VARCHAR))
-          WHEN c_custkey % 4 = 1 THEN concat('region-', CAST(c_nationkey % 5 AS VARCHAR))
-          WHEN c_custkey % 4 = 2 THEN 'ambiguous'
-          ELSE concat('unknown-org-', CAST(c_custkey AS VARCHAR))
-        END AS org_ref,
+        {ORG_REF_SQL} AS org_ref,
         c_custkey % 2 = 0 AS update_flag,
         c_custkey % 23 = 0 AS test_flag,
         c_custkey % 11 = 0 AS update_metadata_only,
-        CASE WHEN c_custkey % 23 = 0
-             THEN concat('src_', CAST(c_custkey % {_KEY_MOD} AS VARCHAR), '-test')
-             ELSE concat('src_', CAST(c_custkey % {_KEY_MOD} AS VARCHAR))
-        END AS esid,
-        concat('u', CAST(c_custkey % 31 AS VARCHAR)) AS submitter,
+        concat({source_id_sql("c_custkey")},
+               CASE WHEN c_custkey % 23 = 0 THEN '-test' ELSE '' END) AS esid,
+        {owner_sql("c_custkey")} AS submitter,
         ['g' || CAST(c_custkey % 7 AS VARCHAR),
          'g' || CAST(c_custkey % 5 AS VARCHAR)] AS user_groups,
         'g' || CAST(c_nationkey % 7 AS VARCHAR) AS required_group,
@@ -117,24 +104,8 @@ register(
              ELSE c_acctbal END AS metadata_value
       FROM customer
     ),
-    status AS (
-      SELECT concat('src_', CAST(o_custkey % {_KEY_MOD} AS VARCHAR)) AS source_id,
-             concat(CAST(o_orderkey % 3 + 1 AS VARCHAR), '.',
-                    CAST(o_orderkey % 17 AS VARCHAR)) AS version,
-             concat('u', CAST(o_custkey % 31 AS VARCHAR)) AS owner,
-             o_orderkey
-      FROM orders
-    ),
-    latest AS (
-      SELECT source_id, version, owner FROM (
-        SELECT *, row_number() OVER (
-          PARTITION BY source_id
-          ORDER BY CAST(string_split(version, '.')[1] AS BIGINT) DESC,
-                   CAST(string_split(version, '.')[2] AS BIGINT) DESC,
-                   o_orderkey DESC
-        ) AS rn FROM status
-      ) WHERE rn = 1
-    ),
+    status AS ({STATUS_SQL}),
+    latest AS ({LATEST_SQL}),
     history AS (
       SELECT source_id,
              array_to_string(
@@ -142,11 +113,7 @@ register(
                ',') AS prev_csv
       FROM status GROUP BY source_id
     ),
-    lookup AS (
-      SELECT unnest(list_prepend(canonical_name, aliases)) AS match_name,
-             canonical_name, curation
-      FROM ({_ORG_REGISTRY_SQL})
-    ),
+    lookup AS ({ORG_LOOKUP_SQL}),
     counts AS (
       SELECT match_name, count(*) AS n FROM lookup GROUP BY match_name
     ),
@@ -226,7 +193,7 @@ def submit_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
     def when_d(val: int, then: str, otherwise: str) -> F.Column:
         return F.when(d == val, F.lit(then)).otherwise(F.lit(otherwise))
 
-    key_s = (k % _KEY_MOD).cast("string")
+    key_s = source_key(k)
     doc = F.concat(
         F.lit('{"dc": {"creators": '),
         when_d(3, "[]", '[{"creatorName": "Creator"}]'),
@@ -270,9 +237,9 @@ _CONSTRAINT_DOC_SQL = f"""
         || ', "resourceType": {{"resourceTypeGeneral": "Dataset"}}, "titles": '
         || CASE WHEN c_custkey % 8 = 2 THEN '[]'
                 ELSE '[{{"title": "Dataset '
-                     || CAST(c_custkey % {_KEY_MOD} AS VARCHAR) || '"}}]' END
+                     || {source_key_sql("c_custkey")} || '"}}]' END
         || '}}, "mdf": {{"source_name": "src_'
-        || CAST(c_custkey % {_KEY_MOD} AS VARCHAR)
+        || {source_key_sql("c_custkey")}
         || '", "acl": '
         || CASE WHEN c_custkey % 8 = 6 THEN '[]' ELSE '["public"]' END
         || ', "version": '

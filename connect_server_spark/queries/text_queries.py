@@ -59,19 +59,19 @@ def text_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_list(words) -> str:
+def sql_list(words) -> str:
     return "[" + ", ".join(f"'{w}'" for w in words) + "]"
 
 
-_SCORES = {
+SCORES = {
     lang: f"""round(
-      (CAST(len(list_intersect(list_distinct(w), {_sql_list(ws)})) AS DOUBLE) / {len(ws)})
-      * (CAST(len(list_filter(w, t -> list_contains({_sql_list(ws)}, t))) AS DOUBLE)
+      (CAST(len(list_intersect(list_distinct(w), {sql_list(ws)})) AS DOUBLE) / {len(ws)})
+      * (CAST(len(list_filter(w, t -> list_contains({sql_list(ws)}, t))) AS DOUBLE)
          / greatest(len(w), 1)), 6)"""
     for lang, ws in STOPWORDS.items()
 }
 
-_LANG_CASE = f"""
+LANG_CASE = f"""
       CASE WHEN greatest(s_en, s_es, s_de) > 0 THEN (
         CASE WHEN s_en = greatest(s_en, s_es, s_de) THEN 'en'
              WHEN s_es = greatest(s_en, s_es, s_de) THEN 'es'
@@ -111,10 +111,10 @@ register(
     ),
     scored AS (
       SELECT *,
-        {_SCORES['en']} AS s_en,
-        {_SCORES['es']} AS s_es,
-        {_SCORES['de']} AS s_de,
-        round(CAST(len(list_filter(w, t -> list_contains({_sql_list(STOPWORDS['en'])}, t))) AS DOUBLE)
+        {SCORES['en']} AS s_en,
+        {SCORES['es']} AS s_es,
+        {SCORES['de']} AS s_de,
+        round(CAST(len(list_filter(w, t -> list_contains({sql_list(STOPWORDS['en'])}, t))) AS DOUBLE)
               / greatest(len(w), 1), 6) AS swr,
         round(list_sum(list_transform(w, t -> CAST(len(t) AS DOUBLE)))
               / greatest(len(w), 1), 6) AS mwl,
@@ -129,7 +129,7 @@ register(
       len(w) AS n_tokens,
       len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS n_alnum_tokens,
       len(regexp_extract_all(text, '{_BPE_RE_SQL}', 0)) AS n_bpe_tokens,
-      {_LANG_CASE} AS lang_guess,
+      {LANG_CASE} AS lang_guess,
       swr AS stopword_ratio_en,
       mwl AS mean_word_len,
       pr AS punct_ratio,
@@ -267,10 +267,10 @@ register(
     ),
     scored AS (
       SELECT *,
-        {_SCORES['en']} AS s_en,
-        {_SCORES['es']} AS s_es,
-        {_SCORES['de']} AS s_de,
-        round(CAST(len(list_filter(w, t -> list_contains({_sql_list(STOPWORDS['en'])}, t))) AS DOUBLE)
+        {SCORES['en']} AS s_en,
+        {SCORES['es']} AS s_es,
+        {SCORES['de']} AS s_de,
+        round(CAST(len(list_filter(w, t -> list_contains({sql_list(STOPWORDS['en'])}, t))) AS DOUBLE)
               / greatest(len(w), 1), 6) AS swr,
         round(list_sum(list_transform(w, t -> CAST(len(t) AS DOUBLE)))
               / greatest(len(w), 1), 6) AS mwl,
@@ -280,7 +280,7 @@ register(
     ),
     graded AS (
       SELECT doc_id, source, text, w,
-        {_LANG_CASE} AS lang_pred,
+        {LANG_CASE} AS lang_pred,
         CAST(round(swr * 1e6, 0) AS BIGINT) * 4
           + CAST(round(least(mwl / 8.0, 1.0) * 1e6, 0) AS BIGINT) * 3
           + CAST(round((1.0 - least(pr * 4.0, 1.0)) * 1e6, 0) AS BIGINT) * 3
@@ -386,7 +386,7 @@ def training_pack_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from connect_server_spark.operators.tokenizer import tokenize_bpe as tok
 
     docs = load_table(spark, "documents", sf_dir)
-    model = _bpe_model_for(spark, sf_dir)
+    model = bpe_model_for(spark, sf_dir)
     counts = tok(
         docs, "doc_id", "text", model["merges"], model["alphabet"]
     ).select("doc_id", "n_tokens")
@@ -396,7 +396,7 @@ def training_pack_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
 register("training_pack_bpe", training_pack_bpe, defer=True)
 
 
-def _bpe_model_for(spark: SparkSession, sf_dir: str) -> dict:
+def bpe_model_for(spark: SparkSession, sf_dir: str) -> dict:
     """Train-once-per-dataset BPE model (merges + training alphabet),
     cached as JSON under /tmp (content-keyed like the minhash/IVF index
     caches): bench repetitions and the plan audit reuse the trained
@@ -450,7 +450,7 @@ def tokenize_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from connect_server_spark.operators.tokenizer import tokenize_bpe as tok
 
     docs = load_table(spark, "documents", sf_dir)
-    model = _bpe_model_for(spark, sf_dir)
+    model = bpe_model_for(spark, sf_dir)
     out = tok(docs, "doc_id", "text", model["merges"], model["alphabet"])
     return out.select(
         "doc_id",

@@ -17,6 +17,10 @@ from connect_server_spark.operators.transfer import (
     transfer_items,
     unify_origin,
 )
+from connect_server_spark.queries._mdf_tables import (
+    STATUS_SQL,
+    SUBMISSION_KEYS_SQL,
+)
 from connect_server_spark.registry import register
 from connect_server_spark.tables import load_table
 
@@ -338,17 +342,16 @@ def submission_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Demoted from the gated-50 window in r10 (third rotation — displaced
 # by events_interval_join): semantics frozen since r3 and pinned by the
 # preserved-oracle mirror in tests/test_entry_oracle.py.
-SUBMISSION_ROLLUP_ORACLE_SQL = """
+SUBMISSION_ROLLUP_ORACLE_SQL = f"""
     WITH counts AS (
-      SELECT concat('src_', CAST(o_custkey % 997 AS VARCHAR)) AS source_id,
+      SELECT source_id,
              CASE WHEN count(*) = 1 THEN 'bump' ELSE 'error' END AS classification
-      FROM orders GROUP BY 1
+      FROM ({STATUS_SQL}) GROUP BY 1
     ),
     probes AS (
       SELECT coalesce(n.classification, 'new') AS classification
-      FROM customer c
-      LEFT JOIN counts n
-        ON concat('src_', CAST(c.c_custkey % 997 AS VARCHAR)) = n.source_id
+      FROM ({SUBMISSION_KEYS_SQL}) c
+      LEFT JOIN counts n ON c.source_id = n.source_id
     )
     SELECT classification, count(*) AS n FROM probes GROUP BY classification
 """

@@ -14,6 +14,7 @@ from connect_server_spark.operators.validator import (
     distinct_submitters,
     feedstock,
 )
+from connect_server_spark.queries._mdf_tables import STATUS_SQL, status_table
 from connect_server_spark.registry import register
 from connect_server_spark.tables import load_table
 
@@ -111,18 +112,17 @@ register(
 )
 
 
+def _submitter_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return status_table(spark, sf_dir).select(
+        "source_id", F.col("owner").alias("submitter")
+    )
+
+
 def validator_submitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4: sorted distinct submitters per source_id."""
-    orders = load_table(spark, "orders", sf_dir)
-    status = orders.select(
-        F.concat(F.lit("src_"), (F.col("o_custkey") % 997).cast("string")).alias(
-            "source_id"
-        ),
-        F.concat(F.lit("u"), (F.col("o_custkey") % 31).cast("string")).alias(
-            "submitter"
-        ),
+    return distinct_submitters(
+        _submitter_rows(spark, sf_dir), "source_id", "submitter"
     )
-    return distinct_submitters(status, "source_id", "submitter")
 
 
 def validator_submitters_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -133,16 +133,9 @@ def validator_submitters_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     16 reducers in stage 1; stage 2 merges 16 small sets per key."""
     from connect_server_spark.storage import salted_collect_set
 
-    orders = load_table(spark, "orders", sf_dir)
-    status = orders.select(
-        F.concat(F.lit("src_"), (F.col("o_custkey") % 997).cast("string")).alias(
-            "source_id"
-        ),
-        F.concat(F.lit("u"), (F.col("o_custkey") % 31).cast("string")).alias(
-            "submitter"
-        ),
+    salted = salted_collect_set(
+        _submitter_rows(spark, sf_dir), "source_id", "submitter", salt=16
     )
-    salted = salted_collect_set(status, "source_id", "submitter", salt=16)
     return salted.select(
         "source_id",
         F.array_join("submitter_set", ",").alias("submitters_csv"),
@@ -166,13 +159,12 @@ def validator_submitters_both(spark: SparkSession, sf_dir: str) -> DataFrame:
     return direct.unionAll(salted)
 
 
-_SUBMITTERS_SQL = """
-    SELECT concat('src_', CAST(o_custkey % 997 AS VARCHAR)) AS source_id,
-           array_to_string(
-             list_sort(list_distinct(list(concat('u', CAST(o_custkey % 31 AS VARCHAR))))),
-             ',') AS submitters_csv,
-           CAST(count(DISTINCT o_custkey % 31) AS INT) AS n_submitters
-    FROM orders
+_SUBMITTERS_SQL = f"""
+    SELECT source_id,
+           array_to_string(list_sort(list_distinct(list(owner))), ',')
+             AS submitters_csv,
+           CAST(count(DISTINCT owner) AS INT) AS n_submitters
+    FROM ({STATUS_SQL})
     GROUP BY 1
 """
 

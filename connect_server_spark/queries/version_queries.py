@@ -1,12 +1,6 @@
 """Driver queries for the versioned-read relational core (SURVEY §2: A1,
-A2, J2, O1, O2) with DuckDB oracle twins.
-
-A synthetic status table is derived deterministically from ``orders``:
-``source_id = 'src_' || o_custkey % 997``, ``version = (1 + o_orderkey %
-3) . (o_orderkey % 17)`` — minor versions reach 16, so the numeric-aware
-ordering trap (``1.13 > 1.2``, ``aws/tests/test_dynamo_manager.py:7-44``)
-is exercised on every key. ``o_orderkey`` breaks exact-version ties so
-results are hash-stable.
+A2, J2, O1, O2) with DuckDB oracle twins, over the synthetic status
+table of :mod:`connect_server_spark.queries._mdf_tables`.
 """
 
 from __future__ import annotations
@@ -20,57 +14,24 @@ from connect_server_spark.operators.versioning import (
     latest_per_key,
     latest_version_join,
 )
+from connect_server_spark.queries._mdf_tables import (
+    LATEST_SQL,
+    STATUS_SQL,
+    SUBMISSION_KEYS_SQL,
+    latest_sql,
+    source_key,
+    source_key_sql,
+    status_table,
+    submission_keys,
+)
 from connect_server_spark.registry import register
-from connect_server_spark.tables import load_table
-
-_KEY_MOD = 997
-
-
-def _status_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, "orders", sf_dir)
-    return orders.select(
-        F.concat(F.lit("src_"), (F.col("o_custkey") % _KEY_MOD).cast("string")).alias(
-            "source_id"
-        ),
-        F.concat(
-            (F.col("o_orderkey") % 3 + 1).cast("string"),
-            F.lit("."),
-            (F.col("o_orderkey") % 17).cast("string"),
-        ).alias("version"),
-        F.col("o_orderkey"),
-        F.col("o_totalprice"),
-    )
-
-
-_STATUS_SQL = f"""
-      SELECT
-        concat('src_', CAST(o_custkey % {_KEY_MOD} AS VARCHAR)) AS source_id,
-        concat(CAST(o_orderkey % 3 + 1 AS VARCHAR), '.',
-               CAST(o_orderkey % 17 AS VARCHAR)) AS version,
-        o_orderkey,
-        o_totalprice
-      FROM orders
-"""
-
-_LATEST_SQL = f"""
-      SELECT source_id, version, o_orderkey, o_totalprice
-      FROM (
-        SELECT *, row_number() OVER (
-          PARTITION BY source_id
-          ORDER BY CAST(string_split(version, '.')[1] AS BIGINT) DESC,
-                   CAST(string_split(version, '.')[2] AS BIGINT) DESC,
-                   o_orderkey DESC
-        ) AS rn
-        FROM ({_STATUS_SQL})
-      ) WHERE rn = 1
-"""
 
 
 def latest_version_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1/O1: numerically-latest status row per source_id via map-side
     combinable ``max_by`` (no window, no per-key sort)."""
     return latest_per_key(
-        _status_table(spark, sf_dir),
+        status_table(spark, sf_dir),
         key="source_id",
         version="version",
         payload=["o_orderkey", "o_totalprice"],
@@ -103,35 +64,23 @@ def latest_version_probes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return current.unionAll(asof)
 
 
+_AS_OF_SQL = latest_sql(f"""
+      SELECT source_id, version, o_orderkey,
+             CAST(o_orderdate AS VARCHAR) AS as_of_date
+      FROM ({STATUS_SQL})
+      WHERE o_orderdate <= DATE '1995-06-30'
+""")
+
 register(
     "latest_version_probes",
     latest_version_probes,
     sql=f"""
     SELECT 'current' AS probe, source_id, version, o_orderkey,
            CAST(NULL AS VARCHAR) AS as_of_date
-    FROM ({_LATEST_SQL})
+    FROM ({LATEST_SQL})
     UNION ALL
     SELECT 'asof' AS probe, source_id, version, o_orderkey, as_of_date
-    FROM (
-      WITH history AS (
-        SELECT
-          concat('src_', CAST(o_custkey % {_KEY_MOD} AS VARCHAR)) AS source_id,
-          concat(CAST(o_orderkey % 3 + 1 AS VARCHAR), '.',
-                 CAST(o_orderkey % 17 AS VARCHAR)) AS version,
-          o_orderkey,
-          CAST(o_orderdate AS VARCHAR) AS as_of_date
-        FROM orders
-        WHERE o_orderdate <= DATE '1995-06-30'
-      )
-      SELECT source_id, version, o_orderkey, as_of_date FROM (
-        SELECT *, row_number() OVER (
-          PARTITION BY source_id
-          ORDER BY CAST(string_split(version, '.')[1] AS BIGINT) DESC,
-                   CAST(string_split(version, '.')[2] AS BIGINT) DESC,
-                   o_orderkey DESC
-        ) AS rn FROM history
-      ) WHERE rn = 1
-    )
+    FROM ({_AS_OF_SQL})
     """,
 )
 
@@ -140,16 +89,9 @@ def latest_status_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2 + A2: submissions left-joined to their latest status; the next
     version each submission would be assigned (``1.0`` for brand-new keys,
     minor+1 otherwise — ``aws/submit.py:212-216``)."""
-    customer = load_table(spark, "customer", sf_dir)
-    submissions = customer.select(
-        F.col("c_custkey"),
-        F.concat(F.lit("src_"), (F.col("c_custkey") % _KEY_MOD).cast("string")).alias(
-            "source_id"
-        ),
-    )
     joined = latest_version_join(
-        submissions,
-        _status_table(spark, sf_dir),
+        submission_keys(spark, sf_dir),
+        status_table(spark, sf_dir),
         key="source_id",
         version="version",
         payload=["o_totalprice"],
@@ -169,7 +111,7 @@ def latest_status_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 LATEST_STATUS_JOIN_ORACLE_SQL = f"""
     SELECT
       c.c_custkey,
-      concat('src_', CAST(c.c_custkey % {_KEY_MOD} AS VARCHAR)) AS source_id,
+      c.source_id,
       l.version AS current_version,
       l.o_totalprice AS current_totalprice,
       CASE
@@ -177,9 +119,8 @@ LATEST_STATUS_JOIN_ORACLE_SQL = f"""
         ELSE concat(string_split(l.version, '.')[1], '.',
                     CAST(CAST(string_split(l.version, '.')[2] AS BIGINT) + 1 AS VARCHAR))
       END AS next_version
-    FROM customer c
-    LEFT JOIN ({_LATEST_SQL}) l
-      ON concat('src_', CAST(c.c_custkey % {_KEY_MOD} AS VARCHAR)) = l.source_id
+    FROM ({SUBMISSION_KEYS_SQL}) c
+    LEFT JOIN ({LATEST_SQL}) l ON c.source_id = l.source_id
     """
 
 register("latest_status_join", latest_status_join, defer=True)
@@ -189,15 +130,8 @@ def version_existence_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O2: per-submission existence classification — 0 prior versions →
     ``new``, exactly 1 → ``bump``, ≥2 → ``error`` (the reference's
     ``limit 2`` search probe, ``aws/source_id_manager.py:212-229``)."""
-    customer = load_table(spark, "customer", sf_dir)
-    probes = customer.select(
-        F.col("c_custkey"),
-        F.concat(F.lit("src_"), (F.col("c_custkey") % _KEY_MOD).cast("string")).alias(
-            "source_id"
-        ),
-    )
-    existing = existence_probe(_status_table(spark, sf_dir), key="source_id")
-    return probes.join(existing, on="source_id", how="left").select(
+    existing = existence_probe(status_table(spark, sf_dir), key="source_id")
+    return submission_keys(spark, sf_dir).join(existing, on="source_id", how="left").select(
         "c_custkey",
         "source_id",
         F.coalesce(F.col("n_existing"), F.lit(0)).alias("n_existing"),
@@ -211,17 +145,16 @@ VERSION_EXISTENCE_PROBE_ORACLE_SQL = f"""
     WITH counts AS (
       SELECT source_id, least(count(*), 2) AS n_existing,
              CASE WHEN count(*) = 1 THEN 'bump' ELSE 'error' END AS classification
-      FROM ({_STATUS_SQL})
+      FROM ({STATUS_SQL})
       GROUP BY source_id
     )
     SELECT
       c.c_custkey,
-      concat('src_', CAST(c.c_custkey % {_KEY_MOD} AS VARCHAR)) AS source_id,
+      c.source_id,
       coalesce(n.n_existing, 0) AS n_existing,
       coalesce(n.classification, 'new') AS classification
-    FROM customer c
-    LEFT JOIN counts n
-      ON concat('src_', CAST(c.c_custkey % {_KEY_MOD} AS VARCHAR)) = n.source_id
+    FROM ({SUBMISSION_KEYS_SQL}) c
+    LEFT JOIN counts n ON c.source_id = n.source_id
     """
 
 register("version_existence_probe", version_existence_probe, defer=True)
@@ -241,7 +174,7 @@ def scan_key_probes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from connect_server_spark.plans import scan_table
 
-    status = _status_table(spark, sf_dir)
+    status = status_table(spark, sf_dir)
     point = scan_table(
         status,
         fields=["source_id", "version", "o_orderkey"],
@@ -259,11 +192,11 @@ register(
     scan_key_probes,
     sql=f"""
     SELECT 'point' AS probe, source_id, version, o_orderkey
-    FROM ({_STATUS_SQL})
+    FROM ({STATUS_SQL})
     WHERE source_id = 'src_42' AND version = '3.12'
     UNION ALL
     SELECT 'range' AS probe, source_id, version, o_orderkey
-    FROM ({_STATUS_SQL})
+    FROM ({STATUS_SQL})
     WHERE source_id IN ('src_7', 'src_97', 'src_404', 'src_911')
     """,
 )
@@ -279,25 +212,13 @@ def submissions_read_path(spark: SparkSession, sf_dir: str) -> DataFrame:
         status_code_letter,
         status_message,
     )
-    from connect_server_spark.operators.versioning import latest_per_key
 
-    orders = load_table(spark, "orders", sf_dir)
-    status = orders.select(
-        F.concat(F.lit("src_"), (F.col("o_custkey") % _KEY_MOD).cast("string")).alias(
-            "source_id"
-        ),
-        F.concat(
-            (F.col("o_orderkey") % 3 + 1).cast("string"),
-            F.lit("."),
-            (F.col("o_orderkey") % 17).cast("string"),
-        ).alias("version"),
-        F.col("o_orderkey"),
-        F.concat(F.lit("u"), (F.col("o_custkey") % 31).cast("string")).alias(
-            "submitter"
-        ),
-        F.concat(F.lit("Dataset "), (F.col("o_custkey") % _KEY_MOD).cast("string")).alias(
-            "title"
-        ),
+    status = status_table(spark, sf_dir).select(
+        "source_id",
+        "version",
+        "o_orderkey",
+        F.col("owner").alias("submitter"),
+        F.concat(F.lit("Dataset "), source_key(F.col("o_custkey"))).alias("title"),
         F.col("o_orderdate").cast("string").alias("submission_time"),
         (F.col("o_orderkey") % 23 == 0).alias("test"),
         F.when(F.col("o_orderstatus") == "O", F.lit("ACTIVE"))
@@ -357,29 +278,16 @@ register(
     sql=f"""
     WITH status AS (
       SELECT
-        concat('src_', CAST(o_custkey % {_KEY_MOD} AS VARCHAR)) AS source_id,
-        concat(CAST(o_orderkey % 3 + 1 AS VARCHAR), '.',
-               CAST(o_orderkey % 17 AS VARCHAR)) AS version,
-        o_orderkey,
-        concat('u', CAST(o_custkey % 31 AS VARCHAR)) AS submitter,
-        concat('Dataset ', CAST(o_custkey % {_KEY_MOD} AS VARCHAR)) AS title,
+        source_id, version, o_orderkey, owner AS submitter,
+        concat('Dataset ', {source_key_sql("o_custkey")}) AS title,
         CAST(o_orderdate AS VARCHAR) AS submission_time,
         o_orderkey % 23 = 0 AS test,
         CASE o_orderstatus WHEN 'O' THEN 'ACTIVE'
                            WHEN 'F' THEN 'SUCCEEDED'
                            ELSE 'FAILED' END AS flow_status
-      FROM orders
+      FROM ({STATUS_SQL})
     ),
-    latest AS (
-      SELECT * FROM (
-        SELECT *, row_number() OVER (
-          PARTITION BY source_id
-          ORDER BY CAST(string_split(version, '.')[1] AS BIGINT) DESC,
-                   CAST(string_split(version, '.')[2] AS BIGINT) DESC,
-                   o_orderkey DESC
-        ) AS rn FROM status
-      ) WHERE rn = 1
-    )
+    latest AS ({latest_sql("SELECT * FROM status")})
     SELECT source_id, version,
       CASE flow_status WHEN 'SUCCEEDED' THEN 'S' WHEN 'ACTIVE' THEN 'P'
                        WHEN 'FAILED' THEN 'F' ELSE 'U' END AS status_code,
@@ -406,20 +314,12 @@ def status_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
     current on date X' with the same max_by aggregate over a
     pushed-down date filter — the predicate reaches the parquet scan, so
     partition/row-group pruning bounds the read to history ≤ cutoff)."""
-    from connect_server_spark.operators.versioning import latest_per_key
-
-    orders = load_table(spark, "orders", sf_dir)
     cutoff = "1995-06-30"
-    history = orders.filter(F.col("o_orderdate") <= cutoff).select(
-        F.concat(F.lit("src_"), (F.col("o_custkey") % _KEY_MOD).cast("string")).alias(
-            "source_id"
-        ),
-        F.concat(
-            (F.col("o_orderkey") % 3 + 1).cast("string"),
-            F.lit("."),
-            (F.col("o_orderkey") % 17).cast("string"),
-        ).alias("version"),
-        F.col("o_orderkey"),
+    status = status_table(spark, sf_dir)
+    history = status.filter(F.col("o_orderdate") <= cutoff).select(
+        "source_id",
+        "version",
+        "o_orderkey",
         F.col("o_orderdate").cast("string").alias("as_of_date"),
     )
     return latest_per_key(

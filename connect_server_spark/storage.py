@@ -544,9 +544,13 @@ def compact(spark: SparkSession, path: str, keep: int = 1) -> int:
     data movement — merges co-located files). A hive-partitioned store
     (``a=1/b=2/`` directories) keeps its partition columns, read
     outermost-first from the live directory names: the rewrite
-    repartitions on them, so each task writes about one file per
-    partition it owns, and writes with ``partitionBy``, so
-    ``PartitionFilters`` pruning survives the rewrite.
+    repartitions on them, so each partition value lands in one task,
+    and writes with ``partitionBy``, so ``PartitionFilters`` pruning
+    survives the rewrite. Its files are capped at the store's mean rows
+    per ``COMPACT_FILE_BYTES`` (``maxRecordsPerFile``), so a partition
+    above the target splits into about ``bytes / COMPACT_FILE_BYTES``
+    files while a small one still writes one; the cap depends only on
+    the store, so a retried task places its rows identically.
 
     Returns the new task count: a flat store's file count.
     """
@@ -581,7 +585,8 @@ def compact(spark: SparkSession, path: str, keep: int = 1) -> int:
     n = max(1, math.ceil(size / COMPACT_FILE_BYTES))
     if part_cols:
         out = df.repartition(n, *[F.col(c) for c in part_cols]).write
-        out = out.partitionBy(*part_cols)
+        rows_per_file = max(1, math.ceil(df.count() / n))
+        out = out.partitionBy(*part_cols).option("maxRecordsPerFile", rows_per_file)
     else:
         out = df.coalesce(n).write
     gen = begin_generation(spark, path)

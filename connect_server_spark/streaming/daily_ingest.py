@@ -98,6 +98,11 @@ __all__ = [
 # batch ids never collide with the base build's batch 0.
 _META_NAMESPACE = 1_000_000
 
+# The stand-in embedder's vector width and the column every embedder
+# attaches for warc_batch_head.
+_EMBED_DIM = 8
+_EMBED_COL = "embedding"
+
 
 def ingest_store_paths(root: str) -> dict[str, str]:
     """The composed job's store layout under one root."""
@@ -563,7 +568,7 @@ def composed_ingest_sink(
     return sink
 
 
-def hash_embedder(dim: int = 8, vec_col: str = "embedding"):
+def hash_embedder():
     """Deterministic STAND-IN for the model-serving embedding stage of a
     crawl ingest (the multimodal-stub convention: the Spark-side
     plumbing — schema, scan-stage expressions, replay determinism — is
@@ -578,9 +583,9 @@ def hash_embedder(dim: int = 8, vec_col: str = "embedding"):
                 F.xxhash64(F.col(text_col), F.lit(i)).cast("double")
                 / F.lit(float(2**63))
             )
-            for i in range(dim)
+            for i in range(_EMBED_DIM)
         ]
-        return df.withColumn(vec_col, F.array(*comps))
+        return df.withColumn(_EMBED_COL, F.array(*comps))
 
     return embed
 
@@ -677,7 +682,7 @@ def warc_batch_head(
             ~flags["has_lorem_ipsum"] & ~flags["has_brace"]
         )
         return embed(gated, text_col).select(
-            "doc_id", text_col, "embedding", "ts", F.lit(1.0).alias("v")
+            "doc_id", text_col, _EMBED_COL, "ts", F.lit(1.0).alias("v")
         )
 
     return head

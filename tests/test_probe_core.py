@@ -70,11 +70,12 @@ FORMAT_PARAMS = {
         "id_col", "vec_col", "ts_col", "value_col", "cap_seed", "cap_salt",
     },
     daily_ingest.build_serve_pair: {"id_col", "vec_col"},
+    daily_ingest.hash_embedder: {"dim", "vec_col"},
 }
 
 
 def test_index_store_formats_are_constants():
-    assert sum(map(len, FORMAT_PARAMS.values())) == 54
+    assert sum(map(len, FORMAT_PARAMS.values())) == 56
     back = {
         fn.__name__: sorted(names & set(inspect.signature(fn).parameters))
         for fn, names in FORMAT_PARAMS.items()

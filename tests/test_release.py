@@ -38,7 +38,7 @@ def test_release_token_coverage_is_lossless(spark, sf_dir, release):
     must never decide HOW MUCH of it ships."""
     from connect_server_spark.operators.tokenizer import tokenize_bpe as tok
     from connect_server_spark.queries.curation_queries import curation_full
-    from connect_server_spark.queries.text_queries import _bpe_model_for
+    from connect_server_spark.queries.text_queries import bpe_model_for
     from connect_server_spark.tables import load_table
 
     _, summary = release
@@ -48,7 +48,7 @@ def test_release_token_coverage_is_lossless(spark, sf_dir, release):
     docs = load_table(spark, "documents", sf_dir).join(
         survivors, "doc_id"
     )
-    model = _bpe_model_for(spark, sf_dir)
+    model = bpe_model_for(spark, sf_dir)
     expected = (
         tok(docs, "doc_id", "text", model["merges"], model["alphabet"])
         .agg(F.sum("n_tokens"))

@@ -142,6 +142,45 @@ def test_compact_merges_small_files(spark, tmp_path):
     assert back.agg(F.sum("id")).first()[0] == sum(range(10000))
 
 
+def test_compact_partitioned_splits_large_partitions(
+    spark, tmp_path, monkeypatch
+):
+    """A hive partition above the file target compacts into several
+    files, a tiny one into one; rows and partition pruning survive."""
+    import glob
+    import os
+
+    from connect_server_spark import storage
+    from connect_server_spark.fsutil import resolve_store
+
+    monkeypatch.setattr(storage, "COMPACT_FILE_BYTES", 32 * 1024)
+    path = str(tmp_path / "parts")
+    big = spark.range(0, 8000).select(
+        F.lit("big").alias("p"), "id", F.sha2(F.col("id").cast("string"), 256).alias("h")
+    )
+    tiny = spark.range(0, 3).select(
+        F.lit("tiny").alias("p"), "id", F.sha2(F.col("id").cast("string"), 256).alias("h")
+    )
+    big.unionByName(tiny).repartition(8).write.partitionBy("p").parquet(path)
+    want = sorted(map(tuple, spark.read.parquet(path).collect()))
+
+    n = storage.compact(spark, path)
+    live = resolve_store(spark, path)
+
+    def n_files(value):
+        return len(glob.glob(os.path.join(live, f"p={value}", "part-*.parquet")))
+
+    assert n > 1
+    assert 1 < n_files("big") <= n
+    assert n_files("tiny") == 1
+    back = spark.read.parquet(live)
+    assert sorted(map(tuple, back.collect())) == want
+    pruned = back.filter(F.col("p") == "tiny")
+    plan = pruned._jdf.queryExecution().executedPlan().toString()
+    assert "tiny" in plan.split("PartitionFilters")[1][:160]
+    assert pruned.count() == 3
+
+
 def test_salted_collect_set_matches_unsalted(spark):
     df = spark.createDataFrame(
         [("hot", f"u{i % 7}") for i in range(200)] + [("cold", "u1")],
